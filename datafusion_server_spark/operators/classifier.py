@@ -33,7 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_server_spark.operators.scale import ensure_fanout_parallelism
+from datafusion_server_spark.operators.scale import (
+    ensure_fanout_parallelism,
+    sql_str_literal,
+)
 from datafusion_server_spark.operators.similarity import SCALE
 
 _HEX_DIGITS = 15
@@ -246,8 +249,8 @@ def weak_label_vote(
         votes_arr = F.expr(
             "ARRAY("
             + ", ".join(
-                "STRUCT('{}' AS rule, CAST(({}) AS INT) AS v)".format(
-                    name.replace("'", "''"), v
+                "STRUCT({} AS rule, CAST(({}) AS INT) AS v)".format(
+                    sql_str_literal(name), v
                 )
                 for name, v in rules
             )

@@ -500,3 +500,11 @@ def quote_ident(name: str) -> str:
     escaping, so any column name round-trips; the Column-API path and
     this string path then fail/succeed identically."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str_literal(s: str) -> str:
+    """Quote a caller string as a Spark SQL string literal. Spark's
+    default parser treats backslash as an escape character, so both
+    backslash and the quote are backslash-escaped; any string then
+    round-trips through ``spark.sql`` unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -461,10 +461,12 @@ def mmr_select(
     cands_row = short.agg(
         F.expr("ARRAY_SORT(COLLECT_LIST(STRUCT(id, rel))) AS cands")
     )
+    # keyed by the (a, b) id struct itself: a string join of the ids
+    # collides once an id contains the separator
     sims_row = pairs.agg(
         F.expr(
             "MAP_FROM_ENTRIES(COLLECT_LIST(STRUCT("
-            "CONCAT(CAST(a AS STRING), ':', CAST(b AS STRING)), sim))) AS sims"
+            "NAMED_STRUCT('a', a, 'b', b), sim))) AS sims"
         )
     )
     byrel = (
@@ -480,7 +482,7 @@ def mmr_select(
     if int(k) >= 2:
         pen = (
             "ARRAY_MAX(TRANSFORM(acc, p -> ELEMENT_AT(sims, "
-            "CONCAT(CAST(c.id AS STRING), ':', CAST(p.id AS STRING)))))"
+            "NAMED_STRUCT('a', c.id, 'b', p.id))))"
         )
         scored = (
             "TRANSFORM(FILTER(cands, c -> NOT EXISTS(acc, p -> p.id = c.id)), "

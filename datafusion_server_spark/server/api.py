@@ -15,6 +15,7 @@ from __future__ import annotations
 import re
 import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -271,12 +272,7 @@ class Engine:
         from datafusion_server_spark.sources import jdbc
 
         try:
-            # registered JDBC views are tracked as UNTRACKED catalog
-            # state: the session manager never pools such a session
-            # (r14 warm pool — cleanliness is known without listTables)
-            sess.untracked_views.update(
-                jdbc.register_tables_from_sql(sess.spark, sql)
-            )
+            jdbc.register_tables_from_sql(sess.spark, sql)
         except ValueError:
             pass  # no namespaces configured; plain query
 
@@ -318,46 +314,39 @@ class Engine:
 
     # -- entry points ------------------------------------------------------
 
-    def dataframe_query(self, payload: dict, accept: str | None = None) -> tuple[bytes, str]:
-        """Stateless one-shot (reference dataframe.rs:18-92)."""
+    @contextmanager
+    def _oneshot(self, payload: dict):
+        """Stateless session around one request: create (keepAlive
+        60 s), ingest dataSources, run merge processors and the query;
+        yields (session, DataFrame) and destroys the session on exit."""
         sess = self.sessions.create(keep_alive_s=STATELESS_KEEP_ALIVE_S)
         self.metrics.track_session_context()
         try:
             self._ingest(sess, payload.get("dataSources", []))
             self._merges(sess, payload.get("processor"))
-            df = self._query(sess, payload["query"])
-            post = payload.get("postProcessors") or []
-            if post:
-                df = postprocess.apply_local(sess.spark, df, post)
-            out = self._respond(df, payload.get("response"), accept)
-            return out
+            yield sess, self._query(sess, payload["query"])
         finally:
             try:
                 self.sessions.delete(sess.session_id)
             except KeyError:
                 pass
 
+    def dataframe_query(self, payload: dict, accept: str | None = None) -> tuple[bytes, str]:
+        """Stateless one-shot (reference dataframe.rs:18-92)."""
+        with self._oneshot(payload) as (sess, df):
+            post = payload.get("postProcessors") or []
+            if post:
+                df = postprocess.apply_local(sess.spark, df, post)
+            return self._respond(df, payload.get("response"), accept)
+
     def dataframe_query_stream(self, payload: dict):
         """Incremental variant of the stateless path (reference A21:
-        record_batch_stream.rs): yields Arrow IPC frames per batch. The
-        session is destroyed after the generator is drained — matching the
-        reference's leave-to-reaper semantics for streamed responses."""
-        sess = self.sessions.create(keep_alive_s=STATELESS_KEEP_ALIVE_S)
-        self.metrics.track_session_context()
-
-        def gen():
-            try:
-                self._ingest(sess, payload.get("dataSources", []))
-                self._merges(sess, payload.get("processor"))
-                df = self._query(sess, payload["query"])
-                yield from encoders.arrow_ipc_chunks(df)
-            finally:
-                try:
-                    self.sessions.delete(sess.session_id)
-                except KeyError:
-                    pass
-
-        return gen()
+        record_batch_stream.rs): yields Arrow IPC frames per batch; the
+        session is destroyed once the generator is drained. Like the
+        reference, it takes no postProcessors — those requests go
+        through :meth:`dataframe_query`."""
+        with self._oneshot(payload) as (_, df):
+            yield from encoders.arrow_ipc_chunks(df)
 
     def session_create(self, session_id: str | None, keep_alive_s: int | None) -> dict:
         sess = self.sessions.create(

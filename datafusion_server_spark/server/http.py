@@ -256,10 +256,16 @@ class Handler(BaseHTTPRequestHandler):
 
             if method == "POST" and path == "/dataframe/query":
                 payload = self._json()
-                fmt = (payload.get("response") or {}).get("format")
-                if fmt == "arrow" and (payload.get("response") or {}).get("stream"):
-                    # incremental Arrow response (reference A21): one IPC
-                    # frame per record batch over chunked transfer
+                response = payload.get("response") or {}
+                if (
+                    response.get("format") == "arrow"
+                    and response.get("stream")
+                    and not payload.get("postProcessors")
+                ):
+                    # incremental Arrow response (reference A21,
+                    # dataframe.rs:83-91): one IPC frame per record batch
+                    # over chunked transfer; post-processed results are
+                    # buffered
                     return self._send_chunked(
                         self.engine.dataframe_query_stream(payload),
                         "application/vnd.apache.arrow.stream",

@@ -254,3 +254,20 @@ def test_quote_ident_backtick_column_roundtrip(spark):
     sets = dedup.shingle_sets(df, weird, "doc_id")
     assert sets.count() == 4  # 2 docs x 2 distinct 3-gram shingles
     assert quote_ident(weird) == "`te``xt col`"
+
+
+def test_sql_str_literal_roundtrips_quotes_and_backslashes(spark):
+    """Spark's parser treats backslash as an escape: a literal built by
+    quote-doubling alone silently rewrites or breaks on a backslash."""
+    from datafusion_server_spark.operators.bpe import bpe_apply_merges
+    from datafusion_server_spark.operators.scale import sql_str_literal
+
+    cases = ["it's", "a\\b", "\\'", "trailing\\", "\\n", "''"]
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{sql_str_literal(c)} AS c{i}" for i, c in enumerate(cases))
+    ).collect()[0]
+    assert list(row) == cases
+    # a generated-SQL site: a BPE merge over backslash symbols
+    docs = spark.createDataFrame([(1, "a\\nb")], "doc_id bigint, text string")
+    out = bpe_apply_merges(docs, "text", "doc_id", [("\\", "n")]).collect()
+    assert [tuple(r.syms) for r in out] == [("a", "\\n", "b")]

@@ -418,6 +418,29 @@ def test_stateless_query_arrow_stream_chunked(base_url, tmp_path):
     assert table.num_rows == 3 and table.column_names == ["id", "name"]
 
 
+def test_stateless_arrow_stream_applies_post_processors(base_url, tmp_path):
+    """A streamed Arrow request with postProcessors is answered through
+    the buffered path, so the processors still run (reference
+    dataframe.rs:83-91 streams only unprocessed results)."""
+    p = tmp_path / "pps.csv"
+    p.write_bytes(b"cat,kind,val\na,x,1\na,y,3\nb,x,5\nb,y,7\n")
+    payload = {
+        "dataSources": [{"format": "csv", "name": "pps", "location": str(p)}],
+        "query": "SELECT * FROM pps",
+        "postProcessors": [
+            {"module": "pivot-table", "pluginOptions": {"index": "cat", "columns": "kind", "values": "val"}}
+        ],
+        "response": {"format": "arrow", "stream": True},
+    }
+    r = requests.post(f"{base_url}/dataframe/query", json=payload)
+    assert r.status_code == 200, r.text
+    rows = sorted(pa.ipc.open_stream(io.BytesIO(r.content)).read_all().to_pylist(),
+                  key=lambda x: x["cat"])
+    assert [(row["cat"], row["x"], row["y"]) for row in rows] == [
+        ("a", 1.0, 3.0), ("b", 5.0, 7.0)
+    ]
+
+
 def test_udf_registration_surface(spark):
     """SURVEY §2.D: runtime scalar UDFs are a Spark superset over the
     reference (which has none user-definable)."""

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -25,6 +26,55 @@ def test_session_isolation(spark):
         s2.spark.table("t").collect()
     mgr.delete("iso1")
     mgr.delete("iso2")
+
+
+def _shuffle_partitions(query) -> str:
+    out, _ = query("SET spark.sql.shuffle.partitions")
+    return json.loads(out)[0]["value"]
+
+
+def test_sequential_stateless_requests_are_isolated(spark):
+    """A one-shot request's temp views and SET conf die with its session:
+    the next request on the same engine must not inherit either."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+
+    def query(sql):
+        return engine.dataframe_query({"query": sql, "response": {"format": "json"}})
+
+    default = _shuffle_partitions(query)
+    assert default != "3"
+    query("CREATE OR REPLACE TEMPORARY VIEW secret AS SELECT 42 AS v")
+    with pytest.raises(Exception, match="secret"):
+        query("SELECT v FROM secret")
+    query("SET spark.sql.shuffle.partitions=3")
+    assert _shuffle_partitions(query) == default
+
+
+def test_recreated_named_session_starts_clean(spark):
+    """Deleting a named session and creating one with the same id gives a
+    fresh catalog and conf, not the deleted session's state."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+
+    def query(sql):
+        return engine.session_query("reborn", {"sql": sql, "response": {"format": "json"}})
+
+    engine.session_create("reborn", 600)
+    default = _shuffle_partitions(query)
+    assert default != "3"
+    query("CREATE OR REPLACE TEMPORARY VIEW secret AS SELECT 42 AS v")
+    query("SET spark.sql.shuffle.partitions=3")
+    engine.sessions.delete("reborn")
+    engine.session_create("reborn", 600)
+    try:
+        with pytest.raises(Exception, match="secret"):
+            query("SELECT v FROM secret")
+        assert _shuffle_partitions(query) == default
+    finally:
+        engine.sessions.delete("reborn")
 
 
 def test_session_ttl_reap(spark):

@@ -202,3 +202,27 @@ def test_ann_recall_measured_against_brute_force(spark, sf_dir):
     random_baseline = 64 / n  # default candidate cap / corpus size
     assert ivf_recall >= 0.8, ivf_recall
     assert lsh_recall >= 1.5 * random_baseline, (lsh_recall, random_baseline)
+
+
+def test_mmr_string_ids_containing_separator(spark):
+    """Ids that contain ':' must not collide in the pairwise-sim map:
+    ("a:b", "c") and ("a", "b:c") are different pairs. The picks equal
+    those for the same vectors under colon-free ids."""
+    vecs = [
+        ("a:b", [1.0, 0.1, 0.0]),
+        ("c", [0.9, 0.3, 0.1]),
+        ("a", [0.2, 1.0, 0.0]),
+        ("b:c", [0.7, 0.0, 0.6]),
+        ("q", [1.0, 0.5, 0.2]),
+    ]
+
+    def picks(rename):
+        emb = spark.createDataFrame(
+            [(rename(i), v) for i, v in vecs], "vec_id string, embedding array<double>"
+        )
+        out = similarity.mmr_select(emb, emb.filter(F.col("vec_id") == "q"), k=4)
+        return [(r.pick_order, r.vec_id, r.relevance) for r in out.orderBy("pick_order").collect()]
+
+    got = picks(lambda i: i)
+    assert len(got) == 4
+    assert got == [(o, i.replace("_", ":"), rel) for o, i, rel in picks(lambda i: i.replace(":", "_"))]
