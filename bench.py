@@ -6,8 +6,8 @@ Prints ONE compact JSON line on stdout (LAST line, ~700 bytes, so a
 bounded tail-capture always gets the whole thing):
   {"metric": "...", "value": N, "unit": "sec", "sf": ..., "queries": {...},
    "value_cold": N, "value_aqe_on": N}
-The extended breakdown (cold/AQE per-query maps, variants, secondary
-rows) goes to stderr as a second JSON object.
+The extended breakdown (cold/AQE per-query maps, secondary rows) goes
+to stderr as a second JSON object.
 
 Each query is timed end-to-end (plan + execute + collect to driver via a
 count/collect that forces full materialization).
@@ -43,17 +43,6 @@ HEADLINE = [
     "ann_lsh_scaled",
     "text_quality_score",
 ]
-
-# Headline ANN queries run the OPERATOR DEFAULT (materialize=True)
-# since r8 — once the ingest dropped the in-memory cache, the staged
-# codes table wins the interleaved A/B at fixture scale too (it always
-# won at real scale). The recompute twins are timed and reported each
-# run so a future flip cannot hide.
-VARIANTS = {
-    "ann_lsh_cosine": ("materialize=True (operator default; r8 pin flip)", "ann_lsh_cosine_recompute"),
-    "ann_lsh_scaled": ("materialize=True (operator default)", "ann_lsh_scaled_recompute"),
-}
-
 
 def cooldown() -> float:
     """Bounded wait for ambient 1-min load to decay below 2.0 (r13 added
@@ -379,21 +368,6 @@ def main() -> None:
         aqe_on[name] = round(min(runs_on), 3)
     spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
-    # time the operator-default twins of the pinned-variant queries
-    # (reported separately; not part of the headline total)
-    default_variant: dict[str, float] = {}
-    for name, (_, twin) in VARIANTS.items():
-        qd = reg[twin]
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            df = qd.build(spark, sf_dir)
-            df.toArrow()
-            runs.append(time.time() - t0)
-            del df
-            gc.collect()
-        default_variant[name] = round(min(runs), 3)
-
     # Secondary (non-headline, non-pinned) section: one structured-
     # streaming row so regressions in the streaming family surface in the
     # per-round record. Streaming jobs pay checkpoint + micro-batch
@@ -476,7 +450,6 @@ def main() -> None:
                     "the same session — both reported so the benched and "
                     "shipped configs cannot drift silently"
                 ),
-                "variants": {n: v[0] for n, v in VARIANTS.items()},
                 "ingest": (
                     "untimed: re-laid multi-split + bucketed parquet, "
                     "footer/page-cache warmed (r8: beats .persist() on every "
@@ -484,7 +457,6 @@ def main() -> None:
                     "decode at 1-30 MB; reference MemTable registration parity "
                     "is the eager re-lay itself, session.rs:248-253)"
                 ),
-                "queries_default_variant": default_variant,
                 "queries_secondary": secondary,
                 "secondary_note": (
                     "non-headline rows, timed once, excluded from the headline "

@@ -219,7 +219,7 @@ def weak_label_vote(
 ) -> DataFrame:
     """Programmatic weak supervision (Snorkel-style label model, one
     agreement-weighting refinement): ``rules`` is a list of
-    ``(name, vote)`` — vote a Column or a SQL expression string —
+    ``(name, vote)`` — vote a SQL expression string over the row —
     where each vote is +1 (positive), -1 (negative), or 0 (abstain),
     a deterministic predicate over the row.
 
@@ -239,35 +239,16 @@ def weak_label_vote(
     fanout of ONE corpus scan; both aggregations are id-keyed with
     map-side combine; the weights table is #rules rows, broadcast. No
     windows, no iteration beyond the single refinement pass."""
-    # r14 (optimization, guide §1.2): internals delivered as SQL-string
-    # stages (selectExpr / F.expr aggregates) — 1:1 translation of the
-    # Column-API chain; plan-construction chatter 1484 → ~40 py4j
-    # round-trips. A vote may be a SQL expression STRING (preferred —
-    # the whole vote array then parses in ONE round-trip) or a Column
-    # (the original API, still supported for programmatic callers).
-    if all(isinstance(v, str) for _, v in rules):
-        votes_arr = F.expr(
-            "ARRAY("
-            + ", ".join(
-                "STRUCT({} AS rule, CAST(({}) AS INT) AS v)".format(
-                    sql_str_literal(name), v
-                )
-                for name, v in rules
-            )
-            + ")"
+    # every stage is SQL text (selectExpr / F.expr aggregates): the whole
+    # vote array parses in ONE py4j round-trip
+    votes_arr = F.expr(
+        "ARRAY("
+        + ", ".join(
+            "STRUCT({} AS rule, CAST(({}) AS INT) AS v)".format(sql_str_literal(name), v)
+            for name, v in rules
         )
-    else:
-        votes_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(name).alias("rule"),
-                    (F.expr(v) if isinstance(v, str) else v)
-                    .cast("int")
-                    .alias("v"),
-                )
-                for name, v in rules
-            ]
-        )
+        + ")"
+    )
     base = df.select(F.col(id_col).cast("bigint").alias("id"), votes_arr.alias("va"))
     votes = base.selectExpr(
         "id", "EXPLODE(FILTER(va, x -> x.v != 0)) AS x"

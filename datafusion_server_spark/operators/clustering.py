@@ -84,27 +84,11 @@ def _centroid_row(centroids: DataFrame) -> DataFrame:
     return centroids.agg(F.expr("SORT_ARRAY(COLLECT_LIST(STRUCT(cluster, c))) AS cents"))
 
 
-def _d2_scaled(v: Column, c: Column) -> Column:
-    """Exact scaled-long squared L2 distance between two arrays
-    (Column form — kept for programmatic callers; the hot kmeans path
-    uses the SQL-text twin below)."""
-    return F.aggregate(
-        F.zip_with(
-            v,
-            c,
-            lambda x, y: F.round(
-                (x.cast("double") - y) * (x.cast("double") - y) * SCALE
-            ).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + t,
-    )
-
-
 def _d2_scaled_sql(v: str, c: str) -> str:
     """Exact scaled-long squared L2 distance between two array
-    expressions, as SQL text (r14: the Column lambda form cost ~90 py4j
-    round-trips per embedded copy; kmeans embeds it 2x per argmin step)."""
+    expressions, as SQL text: per-element ``round((x-y)^2 * 1e12)`` as
+    BIGINT, summed in-row. One ``F.expr`` parse per embedded copy; kmeans
+    embeds it twice per argmin step."""
     return (
         f"AGGREGATE(ZIP_WITH({v}, {c}, (x, y) -> "
         f"CAST(ROUND((CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)"

@@ -35,28 +35,17 @@ DEFAULT_NUM_HASHES = 16
 DEFAULT_SHINGLE_WORDS = 3
 
 
-def _word_shingles(text: Column, k: int) -> Column:
-    """Word k-gram shingles of a single-space-tokenized text column.
+def _word_shingles_sql(col_sql: str, k: int) -> str:
+    """Word k-gram shingles of a single-space-tokenized text column, as
+    SQL text over a column REFERENCE (or any SQL fragment), parsed
+    JVM-side in one ``F.expr`` call.
 
-    Built as arrays_zip of k shifted slices, NOT element_at(words, i+j)
+    Built as ARRAYS_ZIP of k shifted slices, NOT element_at(words, i+j)
     inside a transform lambda: Catalyst's CollapseProject inlines the
     split() into every element_at, making the lambda O(words^2) per doc
     (measured 7.6x slower at sf0.1). The slice form evaluates split() a
-    constant number of times per row.
-    """
-    words = F.split(text, " ")
-    m = F.greatest(F.size(words) - (k - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(words, j + 1, m) for j in range(k)])
-    return F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]))
-
-
-def _word_shingles_sql(col_sql: str, k: int) -> str:
-    """SQL-text twin of ``_word_shingles`` over a column REFERENCE (or any
-    SQL fragment) — the identical slice/arrays_zip/transform tree, parsed
-    JVM-side in one ``F.expr`` call instead of ~25 py4j round-trips
-    (plan construction is py4j-chatter-bound; see
-    similarity._dot_scaled_sql). arrays_zip names unnamed inputs by
-    positional index, matching the Column form's ``s[str(j)]`` access."""
+    constant number of times per row. ARRAYS_ZIP names unnamed inputs by
+    positional index, hence the ``s['j']`` field access."""
     words = f"SPLIT({col_sql}, ' ')"
     m = f"GREATEST(SIZE({words}) - {k - 1}, 0)"
     slices = ", ".join(f"SLICE({words}, {j + 1}, {m})" for j in range(k))
@@ -134,11 +123,11 @@ def minhash_signatures(
     k: int = DEFAULT_SHINGLE_WORDS,
 ) -> DataFrame:
     """MinHash signature per document: ``mh_i = min(slice_i(md5(shingle)))``
-    computed IN-ROW over the shingle array (``_inrow_slice_layers`` —
-    r13: no explode, no shuffle; the A/B in scripts/minhash_inrow_ab.py
-    has the in-row signature build at 0.231/0.351 min/med vs 0.342/0.448
-    exploded at sf0.1, values identical). md5-slice minima are
-    uniform-random over shingles, which is all MinHash needs.
+    computed IN-ROW over the shingle array (``_inrow_slice_layers``):
+    no explode and no shuffle, with values identical to the exploded
+    form (A/B in PLANS.md, "Round-13 (optimization round 1) closing
+    stamp"). md5-slice minima are uniform-random over shingles, which
+    is all MinHash needs.
     """
     df = ensure_fanout_parallelism(df)
     return _inrow_slice_layers(df, text_col, id_col, k).selectExpr(
@@ -205,10 +194,9 @@ def lsh_signature_index(
     # old shape exploded the shingle stream and shuffled it into a
     # 16-min + collect_set aggregation. Same md5 slices, same minima,
     # SORT_ARRAY(ARRAY_DISTINCT(...)) instead of a sorted COLLECT_SET
-    # for the 60-bit hash set: identical values (interleaved A/B in
-    # scripts/minhash_inrow_ab.py, rows asserted equal; 0.231 vs 0.342 s
-    # min at sf0.1), and at 100 TB the index build is scan-bound with
-    # no shuffle at all.
+    # for the 60-bit hash set: identical values (A/B in PLANS.md,
+    # "Round-13 (optimization round 1) closing stamp"), and at 100 TB
+    # the index build is scan-bound with no shuffle at all.
     sigs = _inrow_slice_layers(df, text_col, id_col, k).selectExpr(
         "id",
         *_inrow_min_exprs(num_hashes),
@@ -910,9 +898,10 @@ def idf_weighted_jaccard_pairs(
 
 def _positional_word_grams(df: DataFrame, text_col: str, id_col: str, l: int) -> DataFrame:
     """(id, pos, gh): md5 of each word l-gram with its 1-based start
-    position — the positional twin of ``_word_shingles`` (same shifted-
-    slice construction, so the split() is evaluated a constant number of
-    times per row; ``posexplode`` supplies the position)."""
+    position — the shingles of ``_word_shingles_sql`` with positions
+    (same shifted-slice construction, so the split() is evaluated a
+    constant number of times per row; ``posexplode`` supplies the
+    position)."""
     words = F.split(F.col(text_col), " ")
     m = F.greatest(F.size(words) - (l - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice(words, j + 1, m) for j in range(l)])

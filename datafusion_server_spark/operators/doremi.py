@@ -38,7 +38,7 @@ rows. At cluster scale the per-iteration ``localCheckpoint`` of the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_server_spark.operators.classifier import _logits, train_logreg
@@ -49,19 +49,10 @@ P_LO = 1.0e-8
 P_HI = 0.99999999
 
 
-def _log_loss(p_col: Column, y_col: Column) -> Column:
-    """Shortest-repr-rounded binary cross-entropy of a clamped 8-decimal
-    probability — identical expression order in the DuckDB oracle."""
-    pc = F.greatest(F.lit(P_LO), F.least(F.lit(P_HI), p_col))
-    return F.round(
-        -(y_col * F.log(pc) + (F.lit(1.0) - y_col) * F.log(F.lit(1.0) - pc)), 8
-    )
-
-
 def _log_loss_sql(p: str, y: str) -> str:
-    """SQL-text twin of ``_log_loss`` (r14 chatter cut) — identical
-    expression tree, including the duplicated clamp subtree the Column
-    form embedded by reusing the ``pc`` Column object."""
+    """Shortest-repr-rounded binary cross-entropy of a clamped 8-decimal
+    probability, as SQL text — identical expression order in the DuckDB
+    oracle."""
     pc = f"GREATEST({P_LO!r}D, LEAST({P_HI!r}D, {p}))"
     return f"ROUND(-({y} * LN({pc}) + (1.0D - {y}) * LN(1.0D - {pc})), 8)"
 

@@ -69,7 +69,7 @@ def _fused_gram_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     counts are the rows with w3 non-null — the text column is scanned,
     split, and exploded exactly once instead of once per gram size.
 
-    Slice-based like ``_word_shingles`` (the element_at-in-lambda form
+    Slice-based like ``_word_shingles_sql`` (the element_at-in-lambda form
     is O(words^2) per doc under Catalyst's CollapseProject)."""
     df = ensure_fanout_parallelism(df)
     words = F.split(F.col(text_col), " ")

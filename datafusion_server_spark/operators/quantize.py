@@ -272,25 +272,9 @@ def _pq_codebook_row(codebook: DataFrame) -> DataFrame:
     )
 
 
-def _pq_argmin(sub_col, cents_col):
-    """Strict-min fold over one subspace's centroid array — ties to the
-    lower cluster index (sorted array + strict less-than)."""
-    from datafusion_server_spark.operators.clustering import _d2_scaled
-
-    return F.aggregate(
-        cents_col,
-        F.struct(F.lit(None).cast("bigint").alias("d2"), F.lit(-1).alias("cluster")),
-        lambda acc, ct: F.when(
-            acc["d2"].isNull() | (_d2_scaled(sub_col, ct["c"]) < acc["d2"]),
-            F.struct(_d2_scaled(sub_col, ct["c"]).alias("d2"), ct["cluster"].alias("cluster")),
-        ).otherwise(acc),
-    )["cluster"]
-
-
 def _pq_argmin_sql(sub: str, cents: str) -> str:
-    """SQL-text twin of ``_pq_argmin`` (r14 chatter cut, guide §1.2) —
-    identical fold, parsed in one round-trip instead of ~180 per
-    embedded copy."""
+    """Strict-min fold over one subspace's centroid array, as SQL text —
+    ties to the lower cluster index (sorted array + strict less-than)."""
     from datafusion_server_spark.operators.clustering import _d2_scaled_sql
 
     return (

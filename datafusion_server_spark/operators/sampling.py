@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datafusion_server_spark.operators.scale import quote_ident, sql_str_literal
+
 _HEX_DIGITS = 15
 _HEX_SPAN = float(16**_HEX_DIGITS)
 
@@ -429,7 +431,7 @@ def dsir_importance(
     docs: DataFrame,
     text_col: str,
     id_col: str,
-    target_pred: "Column | str",
+    target_pred: str,
     *,
     n_buckets: int = 256,
     seed: str = "dsir",
@@ -438,8 +440,9 @@ def dsir_importance(
     importance weights — the DSIR recipe (Xie et al., "Data Selection
     for Language Models via Importance Resampling", arXiv:2302.03169):
     estimate a bag-of-hashed-unigrams model of the TARGET domain
-    (rows where ``target_pred`` holds) and of the RAW corpus, then
-    weight every document by its log likelihood ratio
+    (rows where the SQL boolean expression ``target_pred`` holds) and of
+    the RAW corpus, then weight every document by its log likelihood
+    ratio
 
         logw(doc) = sum over token occurrences of
                     ln p_target(bucket) - ln p_raw(bucket)
@@ -460,29 +463,16 @@ def dsir_importance(
     (broadcast back), one per-document re-aggregation — no self-joins,
     no driver materialization; the model table is O(n_buckets).
     """
-    # r14 (optimization, guide §1.2): SQL-string stages — 1:1 translation
-    # of the Column-API chain (953 → ~60 py4j round-trips/build).
-    # ``target_pred`` may be a SQL expression string (one-parse path) or
-    # a Column (original API, still supported).
-    tq = text_col if text_col.isidentifier() else f"`{text_col}`"
-    iq = id_col if id_col.isidentifier() else f"`{id_col}`"
-    if isinstance(target_pred, str):
-        tok = docs.selectExpr(
-            f"{iq} AS id",
-            f"CAST(({target_pred}) AS BOOLEAN) AS is_target",
-            f"EXPLODE(SPLIT({tq}, ' ')) AS term",
-        )
-    else:
-        tok = docs.select(
-            F.col(id_col).alias("id"),
-            target_pred.cast("boolean").alias("is_target"),
-            F.explode(F.split(F.col(text_col), " ")).alias("term"),
-        )
+    tok = docs.selectExpr(
+        f"{quote_ident(id_col)} AS id",
+        f"CAST(({target_pred}) AS BOOLEAN) AS is_target",
+        f"EXPLODE(SPLIT({quote_ident(text_col)}, ' ')) AS term",
+    )
     tokb = tok.selectExpr(
         "id",
         "is_target",
-        f"CAST(CONV(SUBSTRING(MD5(CONCAT('{seed}:', term)), 1, {_HEX_DIGITS}),"
-        f" 16, 10) AS BIGINT) % {int(n_buckets)} AS bucket",
+        f"CAST(CONV(SUBSTRING(MD5(CONCAT({sql_str_literal(f'{seed}:')}, term)), 1,"
+        f" {_HEX_DIGITS}), 16, 10) AS BIGINT) % {int(n_buckets)} AS bucket",
     )
     counts = tokb.groupBy("bucket").agg(
         F.expr("CAST(COUNT(1) AS BIGINT) AS cr"),

@@ -16,11 +16,11 @@ higher-order lambdas are interpreted — per-element they lose to
 codegen — but the exploded forms carried n x dim (codes) or
 pairs x dim (scoring) rows into grouped aggregations, a 64x row
 blow-up plus shuffle at dim 64 that dwarfs the interpreter penalty;
-the in-row codes build is scan-bound, the shape that survives 100 TB
-(interleaved A/B at sf0.1 in scripts/codes_inrow_ab.py: in-row
-0.350/0.510 min/med vs exploded 0.363/0.735 at planes=16, values
-bit-identical). The norms ride along through the bucket/candidate
-joins instead of being re-joined per side afterwards.
+the in-row codes build is scan-bound, the shape that survives 100 TB,
+and its values are bit-identical to the exploded form (A/B in
+PLANS.md, "Round-13 (optimization round 1) closing stamp"). The norms
+ride along through the bucket/candidate joins instead of being
+re-joined per side afterwards.
 
 Determinism contract: each per-element product is an IEEE double scaled
 and rounded to a 1e-12-granular BIGINT (``ROUND(x*y*1e12) AS BIGINT``);
@@ -59,43 +59,22 @@ def _unscale(col: Column) -> Column:
     return col.cast("double") / SCALE
 
 
-def _dot_scaled(va: Column | str, vb: Column | str) -> Column:
-    """Exact scaled-long dot product of two array columns, computed
-    IN-ROW (zip_with + aggregate): per-element ``round(x*y*1e12)`` as
-    BIGINT, summed sequentially. Identical element math to ``_ssum``
-    over an exploded element join, and integer addition is
-    order-independent, so the result is bit-identical — but with no
-    dim-fold row blow-up, no shuffle, and no aggregation: the dot is a
-    narrow column expression.
-
-    Pass column NAMES (strings) on hot paths: the expression then
-    parses JVM-side in one py4j call (``_dot_scaled_sql``) instead of
-    ~15 composing the lambda — same parsed operator tree, bit-identical
-    values (pinned by tests/test_expr_sql_equivalence.py)."""
-    if isinstance(va, str) and isinstance(vb, str):
-        return F.expr(_dot_scaled_sql(va, vb))
-    return F.aggregate(
-        F.zip_with(
-            va,
-            vb,
-            lambda x, y: F.round(x.cast("double") * y.cast("double") * SCALE).cast(
-                "bigint"
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + t,
-    )
+def _dot_scaled(a: str, b: str) -> Column:
+    """Exact scaled-long dot product of two array columns named ``a``
+    and ``b``, computed IN-ROW (zip_with + aggregate): per-element
+    ``round(x*y*1e12)`` as BIGINT, summed sequentially. Identical
+    element math to ``_ssum`` over an exploded element join, and integer
+    addition is order-independent, so the result is bit-identical — but
+    with no dim-fold row blow-up, no shuffle, and no aggregation: the
+    dot is a narrow column expression."""
+    return F.expr(_dot_scaled_sql(a, b))
 
 
 def _dot_scaled_sql(a: str, b: str) -> str:
-    """SQL text of ``_dot_scaled`` over two column NAMES — same parsed
-    expression tree, but delivered to the JVM in ONE ``F.expr`` call.
-    Composing the lambda form via the Column API costs ~15 py4j
-    round-trips per dot (~1.5 ms each on this host); the hot builders
-    (r10 plan-construction profile: ann/knn/dedup rows spent 0.9-1.4 s
-    per query in py4j chatter vs 0.2-0.35 s executing) assemble their
-    expressions as strings instead. Values are bit-identical: the parser
-    produces the same ZipWith/Aggregate/Round/Cast operators."""
+    """SQL text of ``_dot_scaled``, delivered to the JVM in ONE
+    ``F.expr`` call: plan construction on the hot ann/knn/dedup paths
+    is bound by py4j round-trips (~1.5 ms each), so their expressions
+    are assembled as strings."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> "
         f"CAST(ROUND(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * {SCALE}) AS BIGINT)), "
@@ -105,8 +84,8 @@ def _dot_scaled_sql(a: str, b: str) -> str:
 
 def _norm_sql(v: str) -> str:
     """SQL text of the exact scaled-long L2 norm of array column ``v``
-    (sqrt of the unscaled self-dot) — the string twin of
-    ``F.sqrt(_unscale(_dot_scaled(v, v)))``."""
+    (sqrt of the unscaled self-dot): ``F.sqrt(_unscale(_dot_scaled(v, v)))``
+    as one SQL string."""
     return f"SQRT(CAST(({_dot_scaled_sql(v, v)}) AS DOUBLE) / {SCALE})"
 
 
@@ -153,12 +132,12 @@ def _codes_norms(vecs: DataFrame, planes: int, dim: int) -> DataFrame:
     TRANSFORM/ZIP_WITH + AGGREGATE expressions over the embedding array
     — a pure map over one row per vector, where the old shape exploded
     n*dim element rows and shuffled them into a grouped aggregation. At
-    100 TB the codes build becomes scan-bound instead of shuffle-bound;
-    at sf0.1 the interleaved A/B (scripts/codes_inrow_ab.py) has in-row
-    at 0.350/0.510 min/med vs 0.363/0.735 exploded (planes=16). Values
-    are bit-identical: per-element CAST-to-DOUBLE and scaled ROUND are
-    unchanged and integer addition is order-independent. Each plane's
-    signs stay ONE '1'/'0' string literal indexed by ``substring``.
+    100 TB the codes build becomes scan-bound instead of shuffle-bound
+    (A/B in PLANS.md, "Round-13 (optimization round 1) closing stamp").
+    Values are bit-identical: per-element CAST-to-DOUBLE and scaled ROUND
+    are unchanged and integer addition is order-independent. Each
+    plane's signs stay ONE '1'/'0' string literal indexed by
+    ``substring``.
     Contract: vectors are dense, NULL-free, exactly ``dim`` long (the
     zip against SEQUENCE(1, dim) assumes it, as did the old element
     explode's sign indexing). r14 (verdict task 7): the contract is now

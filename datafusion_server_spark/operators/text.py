@@ -358,7 +358,7 @@ def char_ngram_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     two grouped aggregations; the per-doc bigram set is bounded by
     charset^2, not corpus size."""
     df = ensure_fanout_parallelism(df)
-    # Bigrams via zipped shifted char-array slices (the _word_shingles
+    # Bigrams via zipped shifted char-array slices (the _word_shingles_sql
     # shape): the per-doc row carries ONE bigram array, and the exploded
     # rows carry 2-char strings only. The naive position-explode +
     # substring(text, p, 2) carried the FULL text on every exploded row
@@ -411,16 +411,18 @@ def contamination_check(
     with no shuffle of the exploded n-grams; the only shuffle is the
     per-doc count aggregation, keyed by doc id (uniform). The n-gram
     stream reuses the zipped-slice shingle builder (no O(words^2)
-    lambda trap, see _word_shingles)."""
-    from datafusion_server_spark.operators.dedup import _word_shingles
+    lambda trap, see _word_shingles_sql)."""
+    from datafusion_server_spark.operators.dedup import _word_shingles_sql
 
     docs = ensure_fanout_parallelism(docs)
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(_word_shingles(F.col(text_col), n)).alias("gram"),
+        F.explode(F.expr(_word_shingles_sql(quote_ident(text_col), n))).alias("gram"),
     ).distinct()
     probe_grams = (
-        probes.select(F.explode(_word_shingles(F.col(probe_text_col), n)).alias("gram"))
+        probes.select(
+            F.explode(F.expr(_word_shingles_sql(quote_ident(probe_text_col), n))).alias("gram")
+        )
         .distinct()
     )
     hits = doc_grams.join(
@@ -466,12 +468,12 @@ def boilerplate_ngrams(
     boilerplate set is small by construction (few grams repeat across
     min_df documents), so it broadcasts back onto the gram stream —
     the corpus-side stream is never shuffled a second time."""
-    from datafusion_server_spark.operators.dedup import _word_shingles
+    from datafusion_server_spark.operators.dedup import _word_shingles_sql
 
     docs = ensure_fanout_parallelism(docs)
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(_word_shingles(F.col(text_col), n)).alias("gram"),
+        F.explode(F.expr(_word_shingles_sql(quote_ident(text_col), n))).alias("gram"),
     ).distinct()
     bp = (
         doc_grams.groupBy("gram")
@@ -1085,13 +1087,13 @@ def self_overlap_scores(
     frequency aggregation; a gram is "shared" when its df >= 2, so the
     per-doc ratio needs no pairwise comparisons at all — the corpus-
     level structure collapses into the df table (map-side combined)."""
-    from datafusion_server_spark.operators.dedup import _word_shingles
+    from datafusion_server_spark.operators.dedup import _word_shingles_sql
 
     grams = (
         ensure_fanout_parallelism(
             df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
         )
-        .select("id", F.explode(_word_shingles(F.col("__t"), n)).alias("g"))
+        .select("id", F.explode(F.expr(_word_shingles_sql("__t", n))).alias("g"))
         .distinct()
     )
     dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("__df"))

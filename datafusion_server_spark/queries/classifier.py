@@ -653,7 +653,7 @@ def weak_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted final vote."""
     docs = tables.load(spark, sf_dir, "documents")
     # SQL-string votes: the operator parses the whole vote array in ONE
-    # round-trip (r14 chatter cut; Column votes remain supported)
+    # round-trip
     has = lambda w: f"ARRAY_CONTAINS(SPLIT(text, ' '), '{w}')"  # noqa: E731
     sgn = lambda c, v: f"CASE WHEN {c} THEN {v} ELSE 0 END"  # noqa: E731
     rules = [

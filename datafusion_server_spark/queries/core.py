@@ -62,19 +62,16 @@ def _q1(div: str) -> str:
     """
 
 
-# Spark side: FUSED split-sum (r12, verdict task 4). Each measure's
-# scaled-BIGINT conversion v = CAST(ROUND(expr*1e6) AS BIGINT) is
-# projected ONCE in an inner SELECT and the two split sums consume the
-# projected column — the inline `_ss` form evaluates the ROUND/CAST
-# chain twice per measure (Catalyst does not CSE across aggregate
-# argument expressions). Interleaved A/B at sf1 (scripts/
-# q1_exactness_ab.py, 6 rounds, load~5): split 1.027 s / fused 0.956 s
-# / single-unsplit-sum 1.006 s / DECIMAL(18,6) 2.293 s / DOUBLE floor
-# 0.346 s. `single` ≈ `fused` shows the per-row conversion, not the
-# extra DIV/% sum, is the exactness cost; DECIMAL's Int128 aggregation
-# confirms the r11 probe (discard). Values bit-identical to the split
-# form (same exact integers); the oracle keeps the inline single-phase
-# form — agreement proves the fusion.
+# Spark side: FUSED split-sum. Each measure's scaled-BIGINT conversion
+# v = CAST(ROUND(expr*1e6) AS BIGINT) is projected ONCE in an inner
+# SELECT and the two split sums consume the projected column — the
+# inline `_ss` form evaluates the ROUND/CAST chain twice per measure
+# (Catalyst does not CSE across aggregate argument expressions). The
+# per-row conversion, not the extra DIV/% sum, is the exactness cost
+# (A/B in PLANS.md, "Verdict task 4 — q1/q6 exactness constant").
+# Values bit-identical to the split form (same exact integers); the
+# oracle keeps the inline single-phase form — agreement proves the
+# fusion.
 def _q1_fused_spark() -> str:
     measures = [
         ("l_quantity", "sum_qty"),

@@ -29,7 +29,7 @@ SMOOTH = 0.05
 
 
 def _loss_sql(p: str, y: str) -> str:
-    """Mirror of ``operators.doremi._log_loss``: clamped 8-decimal
+    """Mirror of ``operators.doremi._log_loss_sql``: clamped 8-decimal
     binary cross-entropy, shortest-repr rounded."""
     pc = f"GREATEST({P_LO!r}, LEAST({P_HI!r}, {p}))"
     return rrepr(f"-({y} * LN({pc}) + (1.0 - {y}) * LN(1.0 - {pc}))", 8)

@@ -234,21 +234,6 @@ class Engine:
             )
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        # Large-HOF expression-tree shape (r10, verdict task 6): run the
-        # REAL span-corruption operator over a 2-row input so a serving
-        # boot pre-compiles that family's plan shapes. (r9's "8 s
-        # first-compile" diagnosis turned out to be per-run interpreted
-        # HOF recomputation, fixed in operators/text.py by hoisting the
-        # span map out of the per-token lambda; this prewarm leg remains
-        # as cheap insurance for the family's genuine first-call
-        # analysis/codegen cost, ~0.5 s.)
-        from datafusion_server_spark.operators.text import span_corruption
-
-        tiny = self.spark.range(2).selectExpr(
-            "id AS doc_id",
-            "concat_ws(' ', transform(sequence(1, 24), i -> concat('w', i))) AS text",
-        )
-        span_corruption(tiny, "text", "doc_id").collect()
         return time.time() - t0
 
     # -- shared steps ------------------------------------------------------

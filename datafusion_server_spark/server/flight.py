@@ -21,8 +21,10 @@ reference (flight.rs:153-167, 312-337).
 
 from __future__ import annotations
 
+import itertools
 import re
 import threading
+from collections.abc import Iterator
 
 import pyarrow as pa
 
@@ -31,6 +33,7 @@ try:
 except ImportError:  # pragma: no cover
     fl = None
 
+from datafusion_server_spark.server import encoders
 from datafusion_server_spark.server.api import Engine
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -47,6 +50,18 @@ def parse_ticket(ticket: str) -> tuple[str, str]:
     return session_id, rest
 
 
+def _stream(df) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
+    """(schema, batches) of a result, its first batch already executed so
+    a failing query fails the RPC itself. The schema is the DataFrame's
+    declared one — what get_flight_info reports — and every batch is cast
+    to it, as ``DataFrame.toArrow`` does: the executed plan can narrow
+    nullability (a filter on a column makes it NOT NULL)."""
+    schema = encoders.spark_to_arrow_schema(df)
+    batches = (b.cast(schema) for b in encoders.arrow_batches_incremental(df))
+    first = next(batches, None)
+    return schema, itertools.chain([] if first is None else [first], batches)
+
+
 if fl is not None:
 
     class FlightServer(fl.FlightServerBase):
@@ -57,10 +72,7 @@ if fl is not None:
 
         def _plan(self, ticket: str):
             session_id, sql = parse_ticket(ticket)
-            sess = self.engine.sessions.get(session_id)
-            from datafusion_server_spark.functions.dialect import transpile
-
-            return sess.sql(transpile(sql, sess.columns_of))
+            return self.engine._query(self.engine.sessions.get(session_id), sql)
 
         def _tracked(self, method: str, fn):
             """Per-RPC telemetry mirroring the reference's track_flight
@@ -87,8 +99,7 @@ if fl is not None:
                 ticket = "/".join(p.decode() for p in descriptor.path)
             else:
                 ticket = descriptor.command.decode()
-            df = self._plan(ticket)
-            schema = df.limit(0).toArrow().schema
+            schema = encoders.spark_to_arrow_schema(self._plan(ticket))
             endpoint = fl.FlightEndpoint(ticket.encode(), [self.location])
             return fl.FlightInfo(schema, descriptor, [endpoint], -1, -1)
 
@@ -106,16 +117,7 @@ if fl is not None:
             # stream batches as partitions land — never the full result on
             # the driver (reference flight.rs:96-144 execute_sql_stream ->
             # mpsc(32) -> gRPC)
-            import itertools
-
-            from datafusion_server_spark.server import encoders
-
-            df = self._plan(ticket.ticket.decode())
-            batches = encoders.arrow_batches_incremental(df)
-            first = next(batches, None)
-            if first is None:
-                return fl.GeneratorStream(encoders.spark_to_arrow_schema(df), iter(()))
-            return fl.GeneratorStream(first.schema, itertools.chain([first], batches))
+            return fl.GeneratorStream(*_stream(self._plan(ticket.ticket.decode())))
 
         def do_exchange(self, context, descriptor, reader, writer):
             return self._tracked(
@@ -128,9 +130,6 @@ if fl is not None:
             ``exchange_input`` -> ticket SQL -> incremental result stream.
             Descriptor command: ``{session_id}/{SQL}`` (same grammar as
             do_get tickets; the SQL references ``exchange_input``)."""
-            from datafusion_server_spark.functions.dialect import transpile
-            from datafusion_server_spark.server import encoders
-
             if descriptor.descriptor_type == fl.DescriptorType.PATH:
                 ticket = "/".join(p.decode() for p in descriptor.path)
             else:
@@ -150,15 +149,10 @@ if fl is not None:
                 sql = re.sub(
                     r"(?<![A-Za-z0-9_])exchange_input(?![A-Za-z0-9_])", view, sql
                 )
-                df = sess.sql(transpile(sql, sess.columns_of))
-                batches = encoders.arrow_batches_incremental(df)
-                first = next(batches, None)
-                writer.begin(first.schema if first is not None
-                             else encoders.spark_to_arrow_schema(df))
-                if first is not None:
-                    writer.write_batch(first)
-                    for batch in batches:
-                        writer.write_batch(batch)
+                schema, batches = _stream(self.engine._query(sess, sql))
+                writer.begin(schema)
+                for batch in batches:
+                    writer.write_batch(batch)
             finally:
                 sess.spark.catalog.dropTempView(view)
 

@@ -7,14 +7,8 @@ object-store clients. The Spark-native equivalent is the Hadoop
 filesystem configuration on the SparkContext; listing sources then read
 ``s3a://`` / ``gs://`` / ``abfss://`` URIs directly with full pushdown.
 
-Config shape mirrors the reference settings file:
-
-  {"storages": [
-     {"type": "s3",    "bucket": "b", "accessKey": "..", "secretKey": "..",
-      "endpoint": "..", "region": ".."},
-     {"type": "gcs",   "bucket": "b", "serviceAccountKey": "path.json"},
-     {"type": "azure", "container": "c", "accountName": "..", "accountKey": ".."},
-  ]}
+The ``[[storages]]`` config section (reference settings.rs keys) is
+dispatched to these setters by ``settings.Settings.apply_storages``.
 """
 
 from __future__ import annotations
@@ -101,46 +95,3 @@ def configure_webdav(
     for k, v in conf.items():
         h.set(k, v)
     return conf
-
-
-def configure_storages(spark: SparkSession, storages: list[dict]) -> list[dict[str, str]]:
-    """Apply the reference-shaped ``storages`` config list."""
-    applied = []
-    for st in storages:
-        kind = str(st.get("type", "")).lower()
-        if kind in ("s3", "aws", "minio"):
-            applied.append(
-                configure_s3(
-                    spark,
-                    access_key=st.get("accessKey"),
-                    secret_key=st.get("secretKey"),
-                    endpoint=st.get("endpoint"),
-                    region=st.get("region"),
-                    bucket=st.get("bucket"),
-                    path_style=bool(st.get("pathStyle", False)),
-                )
-            )
-        elif kind in ("gcs", "gs", "google"):
-            applied.append(
-                configure_gcs(spark, service_account_key=st.get("serviceAccountKey"))
-            )
-        elif kind in ("azure", "abfs", "abfss"):
-            applied.append(
-                configure_azure(
-                    spark,
-                    account_name=st["accountName"],
-                    account_key=st.get("accountKey"),
-                )
-            )
-        elif kind == "webdav":
-            applied.append(
-                configure_webdav(
-                    spark,
-                    url=st.get("url", ""),
-                    user=st.get("user"),
-                    password=st.get("password"),
-                )
-            )
-        else:
-            raise ValueError(f"unknown storage type: {kind!r}")
-    return applied

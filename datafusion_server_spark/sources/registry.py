@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Any
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -267,12 +266,3 @@ def register(spark: SparkSession, ds: DataSource, *, session=None) -> DataFrame:
         session.data_sources[ds.name] = {"format": ds.format, "location": ds.location,
                                          "cached": eager}
     return df
-
-
-def register_all(spark: SparkSession, payloads: list[dict | Any], *, session=None) -> list[str]:
-    names = []
-    for p in payloads:
-        ds = p if isinstance(p, DataSource) else DataSource.from_json(p)
-        register(spark, ds, session=session)
-        names.append(ds.name)
-    return names

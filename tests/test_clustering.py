@@ -49,10 +49,9 @@ def test_kmeans_improves_over_init(spark, sf_dir):
         assigned = clustering.assign_clusters(emb, cent, "embedding", "vec_id")
         cents_row = clustering._centroid_row(cent)
         joined = assigned.crossJoin(F.broadcast(cents_row))
-        d2 = F.aggregate(
-            F.filter(F.col("cents"), lambda ct: ct["cluster"] == F.col("cluster")),
-            F.lit(0).cast("bigint"),
-            lambda acc, ct: acc + clustering._d2_scaled(F.col("v"), ct["c"]),
+        d2 = F.expr(
+            "AGGREGATE(FILTER(cents, ct -> ct.cluster = cluster), CAST(0 AS BIGINT), "
+            f"(tot, ct) -> tot + {clustering._d2_scaled_sql('v', 'ct.c')})"
         )
         return joined.select(F.sum(d2).alias("t")).first().t
 

@@ -28,18 +28,25 @@ def test_s3_bucket_scoped(spark):
 
 
 def test_azure_and_storages_config(spark):
-    applied = credentials.configure_storages(
-        spark,
-        [
-            {"type": "s3", "accessKey": "A1", "secretKey": "S1", "bucket": "b1"},
-            {"type": "azure", "accountName": "acct", "accountKey": "KEY"},
-        ],
-    )
-    assert len(applied) == 2
+    """The ``[[storages]]`` section with the reference's keys
+    (settings.rs) lands in the Hadoop conf; unknown types fail."""
+    from datafusion_server_spark.settings import Settings
+
+    applied = Settings.from_dict(
+        {
+            "storages": [
+                {"type": "aws", "access_key_id": "A1", "secret_access_key": "S1",
+                 "bucket": "b1"},
+                {"type": "azure", "account_name": "acct", "access_key": "KEY"},
+            ]
+        }
+    ).apply_storages(spark)
+    assert applied == 2
     h = spark.sparkContext._jsc.hadoopConfiguration()
+    assert h.get("fs.s3a.bucket.b1.access.key") == "A1"
     assert h.get("fs.azure.account.key.acct.dfs.core.windows.net") == "KEY"
     with pytest.raises(ValueError):
-        credentials.configure_storages(spark, [{"type": "ftp"}])
+        Settings.from_dict({"storages": [{"type": "ftp"}]}).apply_storages(spark)
 
 
 def test_explain_passthrough(spark):

@@ -1,16 +1,18 @@
-"""Round-10 regression pins for the SQL-string expression refactor.
+"""Value pins for the SQL-text expression helpers.
 
-The r10 perf work replaced hot Column-API loops with SQL text delivered
-through one ``F.expr`` (plan construction was py4j-chatter-bound). The
-bench rows' DuckDB oracles already prove end-to-end values; these tests
-pin the *pairwise* equivalence of each string builder against its
-Column-API twin on randomized inputs, so a future edit to either side
-cannot drift silently. Also: invariants of the r10 LSH hot-bucket cap.
+Hot operator helpers are built as SQL text delivered through one
+``F.expr`` (plan construction is bound by py4j round-trips). The bench
+rows' DuckDB oracles already prove end-to-end values; these tests pin
+each helper against a plain-Python reference on randomized inputs, so
+an edit cannot drift silently. Also: invariants of the LSH hot-bucket
+cap, the in-row LSH codes, and SQL identifier/literal quoting.
 """
 
 from __future__ import annotations
 
+import math
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,9 +21,7 @@ from datafusion_server_spark.operators import dedup
 from datafusion_server_spark.operators.similarity import (
     SCALE,
     _dot_scaled,
-    _dot_scaled_sql,
     _norm_sql,
-    _unscale,
 )
 
 
@@ -32,7 +32,15 @@ def _rand_vecs(rng: random.Random, n: int, dim: int) -> list[tuple[int, list[flo
     ]
 
 
-def test_dot_scaled_sql_matches_column_form(spark):
+def _py_dot_scaled(va: list[float], vb: list[float]) -> int:
+    """Spark rounds a double through its decimal repr, half up."""
+    return sum(
+        int(Decimal(repr(x * y * 1e12)).quantize(Decimal(1), ROUND_HALF_UP))
+        for x, y in zip(va, vb)
+    )
+
+
+def test_dot_scaled_sql_matches_python_reference(spark):
     rng = random.Random(0xD07)
     rows = [
         (i, va, vb)
@@ -42,17 +50,17 @@ def test_dot_scaled_sql_matches_column_form(spark):
         rows, "id bigint, va array<double>, vb array<double>"
     )
     out = df.select(
-        _dot_scaled(F.col("va"), F.col("vb")).alias("col_form"),
-        F.expr(f"{_dot_scaled_sql('va', 'vb')} AS sql_form"),
-        F.sqrt(_unscale(_dot_scaled(F.col("va"), F.col("va")))).alias("col_norm"),
-        F.expr(f"{_norm_sql('va')} AS sql_norm"),
+        "va",
+        "vb",
+        _dot_scaled("va", "vb").alias("dot"),
+        F.expr(f"{_norm_sql('va')} AS norm"),
     ).collect()
     for r in out:
-        assert r.col_form == r.sql_form  # exact BIGINT equality
-        assert r.col_norm == r.sql_norm  # identical IEEE chain
+        assert r.dot == _py_dot_scaled(r.va, r.vb)  # exact BIGINT equality
+        assert r.norm == math.sqrt(_py_dot_scaled(r.va, r.va) / SCALE)
 
 
-def test_word_shingles_sql_matches_column_form(spark):
+def test_word_shingles_sql_matches_python_reference(spark):
     rng = random.Random(0x5816)
     words = ["alpha", "beta", "gamma", "delta", "x", "longerword"]
     texts = [
@@ -62,11 +70,11 @@ def test_word_shingles_sql_matches_column_form(spark):
     df = spark.createDataFrame(texts, "text string")
     for k in (2, 3, 4):
         out = df.select(
-            dedup._word_shingles(F.col("text"), k).alias("col_form"),
-            F.expr(f"{dedup._word_shingles_sql('`text`', k)} AS sql_form"),
+            "text", F.expr(f"{dedup._word_shingles_sql('`text`', k)} AS sh")
         ).collect()
         for r in out:
-            assert r.col_form == r.sql_form
+            w = r.text.split(" ")
+            assert r.sh == [" ".join(w[i : i + k]) for i in range(len(w) - k + 1)]
 
 
 def test_bucket_cap_invariants_random_corpus(spark):

@@ -4,6 +4,8 @@ recall vs brute force, and temperature-mix sampling semantics."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import functions as F
 
 from datafusion_server_spark import tables
@@ -174,20 +176,34 @@ def test_pq_frozen_codebook_reusable_for_new_shards(spark, sf_dir):
     sub = quantize._subspace_view(emb, "embedding", "vec_id", 8, 8)
 
     def encode(view):
-        return view.crossJoin(F.broadcast(row)).select(
+        cents = "ELEMENT_AT(books, subspace + 1)"
+        return view.crossJoin(F.broadcast(row)).selectExpr(
             "id",
             "subspace",
-            quantize._pq_argmin(
-                F.col("sub"), F.element_at(F.col("books"), F.col("subspace") + 1)
-            ).alias("cluster"),
+            "sub",
+            f"{cents} AS cents",
+            f"{quantize._pq_argmin_sql('sub', cents)} AS cluster",
         )
 
-    full = {(r.id, r.subspace, r.cluster) for r in encode(sub).collect() if r.id < 20}
+    full_rows = [r for r in encode(sub).collect() if r.id < 20]
+    full = {(r.id, r.subspace, r.cluster) for r in full_rows}
     shard = {
         (r.id, r.subspace, r.cluster)
         for r in encode(sub.filter(F.col("id") < 20)).collect()
     }
     assert full == shard
+
+    # nearest centroid by exact scaled-long d2 (Spark rounds a double
+    # through its decimal repr, half up), ties to the lower index
+    def d2(v, c):
+        return sum(
+            int(Decimal(repr((x - y) * (x - y) * 1e12)).quantize(Decimal(1), ROUND_HALF_UP))
+            for x, y in zip(v, c)
+        )
+
+    for r in full_rows:
+        best = min(r.cents, key=lambda ct: (d2(r.sub, ct.c), ct.cluster))
+        assert r.cluster == best.cluster
 
 
 def test_bigram_lm_detects_shuffled_word_order(spark):

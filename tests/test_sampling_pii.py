@@ -210,9 +210,7 @@ def test_dsir_separates_disjoint_vocabularies(spark):
     rows.append(Row(doc_id=900, text="alpha beta gamma", grp="probe_t"))
     rows.append(Row(doc_id=901, text="omega psi chi", grp="probe_b"))
     docs = spark.createDataFrame(rows)
-    scored = dsir_importance(
-        docs, "text", "doc_id", F.col("grp") == "t", n_buckets=64
-    )
+    scored = dsir_importance(docs, "text", "doc_id", "grp = 't'", n_buckets=64)
     w = {r["id"]: r["logw"] for r in scored.collect()}
     assert w[900] > 0 > w[901]
     assert w[900] - w[901] > 1.0
@@ -228,9 +226,48 @@ def test_dsir_weight_scales_with_length(spark):
     rows.append(Row(doc_id=100, text="alpha beta", grp="x"))
     rows.append(Row(doc_id=101, text="alpha beta alpha beta", grp="x"))
     docs = spark.createDataFrame(rows)
-    scored = dsir_importance(docs, "text", "doc_id", F.col("grp") == "t")
+    scored = dsir_importance(docs, "text", "doc_id", "grp = 't'")
     w = {r["id"]: r["logw_dec"] for r in scored.collect()}
     assert w[101] == w[100] * 2
+
+
+def test_dsir_seed_with_quote_and_backslash(spark):
+    """A caller seed containing ``'`` and ``\\`` is spliced as an escaped
+    SQL literal: the query parses, and each term hashes as
+    md5('{seed}:{term}'). One-term probe docs score their bucket's
+    log-ratio as recomputed here in Python."""
+    import hashlib
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from datafusion_server_spark.operators.sampling import dsir_importance
+
+    seed, n = "o'k\\s", 4
+    terms = [f"w{i}" for i in range(8)]
+    rows = [Row(doc_id=i, text="w0 w0 w1 w3", grp="t") for i in range(6)]
+    rows += [Row(doc_id=10 + i, text="w2 w4 w5 w6 w7", grp="b") for i in range(6)]
+    rows += [Row(doc_id=100 + j, text=t, grp="p") for j, t in enumerate(terms)]
+    docs = spark.createDataFrame(rows)
+    scored = dsir_importance(docs, "text", "doc_id", "grp = 't'", n_buckets=n, seed=seed)
+    got = {r["id"]: r["logw_dec"] for r in scored.collect()}
+
+    def bucket(term: str) -> int:
+        return int(hashlib.md5(f"{seed}:{term}".encode()).hexdigest()[:15], 16) % n
+
+    cr, ct = [0] * n, [0] * n
+    for r in rows:
+        for t in r.text.split(" "):
+            cr[bucket(t)] += 1
+            ct[bucket(t)] += r.grp == "t"
+    tr, tt = sum(cr), sum(ct)
+    lr = [
+        Decimal(repr(math.log((ct[b] + 1) / (tt + n)) - math.log((cr[b] + 1) / (tr + n))))
+        .quantize(Decimal("1e-8"), ROUND_HALF_UP)
+        for b in range(n)
+    ]
+    assert len({lr[bucket(t)] for t in terms}) >= 3  # buckets are distinguishable
+    for j, t in enumerate(terms):
+        assert abs(got[100 + j] - lr[bucket(t)]) <= Decimal("1e-8"), t
 
 
 def test_span_corruption_reconstruction_invariants(spark):

@@ -216,7 +216,7 @@ def test_dsir_model_stays_bucket_bounded_at_50k(spark):
         .alias("text"),
         (F.col("id") % 10 == 0).alias("is_t"),
     )
-    scored = dsir_importance(docs, "text", "doc_id", F.col("is_t"), n_buckets=128)
+    scored = dsir_importance(docs, "text", "doc_id", "is_t", n_buckets=128)
     assert scored.count() == 50_000
     # target-vocab docs all outrank background docs
     worst_target = scored.filter(F.col("id") % 10 == 0).agg(

@@ -370,6 +370,42 @@ def test_flight_do_put_do_get(engine):
     assert 'flight_requests_duration_seconds_bucket{method="do_get",status="ok",le="+Inf"}' in text
 
 
+def test_flight_do_get_table_at_namespace(spark, tmp_path):
+    """Flight tickets take the same SQL entry as REST: the
+    ``table@namespace`` pre-pass registers a configured database table
+    on a fresh session, and get_flight_info reports the schema do_get
+    streams."""
+    fl = pytest.importorskip("pyarrow.flight")
+    import sqlite3
+
+    from datafusion_server_spark.server.flight import serve as flight_serve
+    from datafusion_server_spark.settings import Settings
+    from datafusion_server_spark.sources import jdbc
+
+    db = tmp_path / "flops.sqlite"
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE customers (id INTEGER, name TEXT)")
+        conn.executemany("INSERT INTO customers VALUES (?, ?)", [(1, "a"), (2, "b")])
+    settings = Settings.from_dict(
+        {"databases": [{"type": "sqlite", "namespace": "flops", "database": str(db)}]}
+    )
+    ns_engine = Engine(spark, start_reaper=False, settings=settings)
+    server = flight_serve(ns_engine, "grpc://127.0.0.1:0")
+    try:
+        client = fl.FlightClient(f"grpc://127.0.0.1:{server.port}")
+        sql = "SELECT id, name FROM customers@flops WHERE id = 1"
+        ns_engine.session_create("flns_get", 600)
+        got = client.do_get(fl.Ticket(f"flns_get/{sql}".encode())).read_all()
+        assert got.to_pylist() == [{"id": 1, "name": "a"}]
+        ns_engine.session_create("flns_info", 600)
+        info = client.get_flight_info(fl.FlightDescriptor.for_command(f"flns_info/{sql}"))
+        assert info.schema == got.schema
+    finally:
+        server.shutdown()
+        ns_engine.sessions.close_all()
+        jdbc._NAMESPACES.pop("flops", None)
+
+
 def test_flight_do_exchange(engine):
     """Beyond-reference do_exchange: push a table, transform it with SQL
     referencing `exchange_input`, pull the result in one round trip."""
