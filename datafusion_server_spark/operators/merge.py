@@ -12,8 +12,8 @@ Reference semantics (/root/reference/lib/src/context/session.rs:550-656):
   ``options.distinct`` applies union-distinct; ``removeAfterMerged`` drops
   source tables afterwards (session_manager.rs:654-681).
 - materialization (session.rs:646-652): the merged result is collected and
-  re-registered in-memory — Spark-side we ``persist()`` instead of
-  collecting to the driver, which is the 100 TB-safe equivalent.
+  re-registered in-memory — Spark-side it is persisted instead of
+  collected to the driver, which is the 100 TB-safe equivalent.
 
 Scale notes: each column-merge join is a plain equi-join, so Catalyst/AQE
 pick broadcast vs shuffled strategies from observed sizes; nothing here
@@ -23,9 +23,13 @@ forces a driver-side materialization.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from datafusion_server_spark.session import ServerSession
 
 
 @dataclass(frozen=True)
@@ -117,54 +121,25 @@ def merge_row(base: DataFrame, targets: list[DataFrame], *, distinct: bool = Fal
     return merged.distinct() if distinct else merged
 
 
-def execute_merge(
-    spark: SparkSession,
-    proc: MergeProcessor,
-    *,
-    materialize: bool = True,
-    drop_sources: bool | None = None,
-    session=None,
-) -> DataFrame:
-    """Run one merge processor against the session's temp views and
-    re-register the result under the base table's name
-    (reference session.rs:646-652 + session_manager.rs:654-681).
-
-    When a ``ServerSession`` is passed, dropped targets are removed from
-    its ``data_sources`` map too — the reference deletes the
-    data_source_map entry alongside the deregistration
-    (session_manager.rs:654-681); without this, session-detail endpoints
-    would resolve a tracked name to a dropped view and fail.
-    """
+def execute_merge(sess: ServerSession, proc: MergeProcessor) -> DataFrame:
+    """Run one merge processor against the ``ServerSession``'s views,
+    register the persisted result under the base table's name, and with
+    ``removeAfterMerged`` drop the merged-in tables from the session
+    (reference session.rs:646-652 + session_manager.rs:654-681)."""
+    spark = sess.spark
     base = spark.table(proc.base_table)
     if proc.direction == "column":
         merged = merge_column(base, [(spark.table(t.table), t) for t in proc.targets])
+        merged_in = [t.table for t in proc.targets]
     else:
         merged = merge_row(
             base, [spark.table(t) for t in proc.target_tables], distinct=proc.distinct
         )
-    # Order matters (ADVICE r2 cache-leak finding, root-caused deeper):
-    # createOrReplaceTempView CASCADE-uncaches every cache entry whose plan
-    # references the replaced view definition. Persisting BEFORE the
-    # replace therefore never survives (the entry refers to the old view);
-    # persisting AFTER both works and makes the NEXT merge's replace
-    # auto-uncache this merge's plan — no per-invocation cache leak.
-    merged.createOrReplaceTempView(proc.base_table)
-    if materialize:
-        merged = merged.persist()
-    if session is not None and proc.base_table in session.data_sources:
-        session.data_sources[proc.base_table]["cached"] = materialize
-    remove = proc.remove_after_merged if drop_sources is None else drop_sources
-    if remove:
-        names = (
-            [t.table for t in proc.targets]
-            if proc.direction == "column"
-            else list(proc.target_tables)
-        )
-        for name in names:
-            if session is not None and name in session.data_sources:
-                session.remove(name)
-            else:
-                spark.catalog.dropTempView(name)
+        merged_in = list(proc.target_tables)
+    sess.register(proc.base_table, merged, cache=True)
+    if proc.remove_after_merged:
+        for name in merged_in:
+            sess.remove(name)
     return merged
 
 
@@ -193,7 +168,7 @@ def apply_changeset(
     AQE picks the shuffle join) — no windows, no driver state."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     data_cols = [c for c in base.columns if c not in keys]
-    # row-existence markers (r8, ADVICE): testing keys[0].isNotNull()
+    # row-existence markers: testing keys[0].isNotNull()
     # after the full-outer join would classify a NULL-keyed base row as
     # "no base row" and silently drop it; a literal marker column is
     # NULL exactly when the join found no row on that side, regardless
@@ -267,8 +242,8 @@ def scd2_apply(
         *[F.col(k).alias(f"__k_{k}") for k in keys],
         *[F.col(a).alias(f"__c_{a}") for a in attrs],
     )
-    # same literal-marker existence test as apply_changeset (r8 ADVICE:
-    # key-null-safe on both sides of the full-outer join)
+    # same literal-marker existence test as apply_changeset (key-null-safe
+    # on both sides of the full-outer join)
     cur = cur.withColumn("__has_base", F.lit(1))
     ch = ch.withColumn("__has_change", F.lit(1))
     j = cur.join(ch, [cur[k] == ch[f"__k_{k}"] for k in keys], "full_outer")

@@ -3,14 +3,9 @@
 are concatenated to ONE batch, passed to Python ``main(record_batch,
 **kwargs)``, chained in request order).
 
-Two execution modes:
-- ``apply_local``: exact reference semantics — collect to a single
-  pyarrow RecordBatch, run the chain in the driver. Correct for the
-  REST result sizes the reference serves (bounded responses).
-- ``apply_distributed``: the 100 TB path — the same callable contract
-  run per-Arrow-batch inside ``mapInArrow`` (no driver materialization).
-  Only valid for row-local transforms; the server chooses it when the
-  processor declares ``distributable = True``.
+The chain runs over the response's collected Arrow table, and its output
+goes straight to the response encoder — it never re-enters Spark, so a
+processor may return any Arrow type.
 """
 
 from __future__ import annotations
@@ -18,7 +13,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
 
 _PROCESSORS: dict[str, Callable[..., pa.RecordBatch]] = {}
 
@@ -27,40 +21,20 @@ def register_processor(name: str, fn: Callable[..., pa.RecordBatch]) -> None:
     _PROCESSORS[name] = fn
 
 
-def get_processor(name: str) -> Callable[..., pa.RecordBatch]:
-    return _PROCESSORS[name]
-
-
 def list_processors() -> list[str]:
     return sorted(_PROCESSORS)
 
 
-def apply_local(
-    spark: SparkSession, df: DataFrame, processors: list[dict]
-) -> DataFrame:
+def apply_local(table: pa.Table, processors: list[dict]) -> pa.Table:
     """Chain processors over the collected result (reference semantics:
-    exec_processor.rs concat -> main(batch) -> next)."""
-    tbl = df.toArrow()
-    batch = tbl.combine_chunks().to_batches(max_chunksize=max(tbl.num_rows, 1))
-    rb = batch[0] if batch else pa.RecordBatch.from_pydict({c: [] for c in tbl.column_names})
+    exec_processor.rs concat -> main(batch) -> next). Each processor gets
+    one RecordBatch and may return a RecordBatch or a Table."""
     for spec in processors:
-        fn = _PROCESSORS[spec["module"]]
-        kwargs = dict(spec.get("pluginOptions") or {})
-        out = fn(rb, **kwargs)
-        if isinstance(out, pa.Table):
-            out = out.combine_chunks().to_batches(max_chunksize=max(out.num_rows, 1))[0]
-        rb = out
-    return spark.createDataFrame(pa.Table.from_batches([rb]))
-
-
-def apply_distributed(df: DataFrame, processor: Callable[[pa.RecordBatch], pa.RecordBatch], schema) -> DataFrame:
-    """Arrow-batched distributed variant for row-local processors."""
-
-    def run(batches):
-        for b in batches:
-            yield processor(b)
-
-    return df.mapInArrow(run, schema)
+        batches = table.combine_chunks().to_batches()
+        batch = batches[0] if batches else pa.RecordBatch.from_pylist([], schema=table.schema)
+        out = _PROCESSORS[spec["module"]](batch, **(spec.get("pluginOptions") or {}))
+        table = pa.Table.from_batches([out]) if isinstance(out, pa.RecordBatch) else out
+    return table
 
 
 def pivot_table(rb: pa.RecordBatch, *, index: str, columns: str, values: str, **_) -> pa.RecordBatch:

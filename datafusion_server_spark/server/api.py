@@ -177,11 +177,7 @@ class Engine:
 
         self.spark = spark or get_spark()
         self.settings: Settings = settings or Settings()
-        self.sessions = SessionManager(
-            self.spark,
-            start_reaper=start_reaper,
-            session_conf=self.settings.session.spark_conf,
-        )
+        self.sessions = SessionManager(self.spark, start_reaper=start_reaper)
         self.metrics = Metrics()
         self.sessions.on_close = lambda sess: self.metrics.track_session_duration(
             time.time() - sess.created_at
@@ -192,7 +188,7 @@ class Engine:
         self.settings.apply(self.spark)
 
     def prewarm(self) -> float:
-        """Boot-time session pre-warm (r9, verdict task 6): drive one
+        """Boot-time session pre-warm: drive one
         tiny synthetic pipeline through the SAME stateless path a
         request takes — session create, transpile, whole-stage-codegen
         compile for the common shapes (project/filter, explode fanout,
@@ -241,26 +237,25 @@ class Engine:
     def _ingest(self, sess: ServerSession, data_sources: list[dict]) -> None:
         for payload in data_sources or []:
             ds = source_registry.DataSource.from_json(payload)
-            source_registry.register(sess.spark, ds, session=sess)
+            source_registry.register(sess, ds)
             scheme = ds.location.split("://", 1)[0] if "://" in ds.location else "file"
             self.metrics.track_data_source(scheme, ds.format)
 
     def _merges(self, sess: ServerSession, processor: dict | None) -> None:
         for spec in (processor or {}).get("mergeProcessors", []) or []:
-            execute_merge(sess.spark, MergeProcessor.from_json(spec), session=sess)
+            execute_merge(sess, MergeProcessor.from_json(spec))
 
     _INSERT_RE = re.compile(
         r"\s*INSERT\s+INTO\s+(?P<name>`[^`]+`|\w+)\s+(?P<rest>.+)", re.I | re.S
     )
 
     def _query(self, sess: ServerSession, sql: str) -> DataFrame:
+        """The one SQL entry of REST and Flight: register the query's
+        ``table@namespace`` relations (a bad namespace or table fails
+        here, with its own message), then run it in the session."""
         from datafusion_server_spark.sources import jdbc
 
-        try:
-            jdbc.register_tables_from_sql(sess.spark, sql)
-        except ValueError:
-            pass  # no namespaces configured; plain query
-
+        jdbc.register_tables_from_sql(sess.spark, sql)
         m = self._INSERT_RE.fullmatch(sql)
         if m:
             # INSERT INTO a session temp view: Spark refuses DML on views,
@@ -270,28 +265,31 @@ class Engine:
             rest = m.group("rest").strip().rstrip(";")
             if rest.upper().startswith("VALUES"):
                 rest = f"SELECT * FROM ({rest})"
-            incoming = sess.spark.sql(transpile(rest, sess.columns_of))
+            incoming = sess.sql(transpile(rest, sess.columns_of))
             existing = sess.spark.table(name)
-            merged = existing.union(incoming.toDF(*existing.columns)).persist()
-            merged.createOrReplaceTempView(name)
-            # free the PREVIOUS insert's persisted union — without this a
-            # long-lived session doing N INSERTs pins N cached plans
-            # (merged recomputes through the old plan if ever needed)
-            existing.unpersist()
-            sess.touch()
+            sess.register(name, existing.union(incoming.toDF(*existing.columns)))
             # lazy count: evaluated when the response is encoded — no
             # extra eager job here
             return incoming.selectExpr("CAST(COUNT(*) AS BIGINT) AS inserted_rows")
         return sess.sql(transpile(sql, sess.columns_of))
 
     def _respond(
-        self, df: DataFrame, response: dict | None, accept: str | None
+        self,
+        df: DataFrame,
+        post: list[dict] | None,
+        response: dict | None,
+        accept: str | None,
     ) -> tuple[bytes, str]:
+        """Collect ``df`` once, run the post-processors over that Arrow
+        table, and encode it."""
+        table = df.toArrow()
+        if post:
+            table = postprocess.apply_local(table, post)
         r = response or {}
         fmt = encoders.negotiate_format(r.get("format"), accept)
         opts = r.get("options") or {}
         return encoders.encode(
-            df,
+            table,
             fmt,
             has_headers=bool(opts.get("hasHeaders", True)),
             delimiter=str(opts.get("delimiter", ",")),
@@ -303,13 +301,13 @@ class Engine:
     def _oneshot(self, payload: dict):
         """Stateless session around one request: create (keepAlive
         60 s), ingest dataSources, run merge processors and the query;
-        yields (session, DataFrame) and destroys the session on exit."""
+        yields the query's DataFrame and destroys the session on exit."""
         sess = self.sessions.create(keep_alive_s=STATELESS_KEEP_ALIVE_S)
         self.metrics.track_session_context()
         try:
             self._ingest(sess, payload.get("dataSources", []))
             self._merges(sess, payload.get("processor"))
-            yield sess, self._query(sess, payload["query"])
+            yield self._query(sess, payload["query"])
         finally:
             try:
                 self.sessions.delete(sess.session_id)
@@ -318,11 +316,10 @@ class Engine:
 
     def dataframe_query(self, payload: dict, accept: str | None = None) -> tuple[bytes, str]:
         """Stateless one-shot (reference dataframe.rs:18-92)."""
-        with self._oneshot(payload) as (sess, df):
-            post = payload.get("postProcessors") or []
-            if post:
-                df = postprocess.apply_local(sess.spark, df, post)
-            return self._respond(df, payload.get("response"), accept)
+        with self._oneshot(payload) as df:
+            return self._respond(
+                df, payload.get("postProcessors"), payload.get("response"), accept
+            )
 
     def dataframe_query_stream(self, payload: dict):
         """Incremental variant of the stateless path (reference A21:
@@ -330,7 +327,7 @@ class Engine:
         session is destroyed once the generator is drained. Like the
         reference, it takes no postProcessors — those requests go
         through :meth:`dataframe_query`."""
-        with self._oneshot(payload) as (_, df):
+        with self._oneshot(payload) as df:
             yield from encoders.arrow_ipc_chunks(df)
 
     def session_create(self, session_id: str | None, keep_alive_s: int | None) -> dict:
@@ -353,61 +350,47 @@ class Engine:
     def session_query(
         self, session_id: str, payload: dict | str, accept: str | None = None
     ) -> tuple[bytes, str]:
-        """JSON body {sql, postProcessors?, response?} or raw SQL string
+        """JSON body {sql, postProcessors?, response?} or a raw SQL string
         (reference session.rs:90-215)."""
         sess = self.sessions.get(session_id)
         if isinstance(payload, str):
-            sql, post, response = payload, [], None
-        else:
-            sql = payload.get("sql") or payload.get("query")
-            post = payload.get("postProcessors") or []
-            response = payload.get("response")
-        df = self._query(sess, sql)
-        if post:
-            df = postprocess.apply_local(sess.spark, df, post)
-        return self._respond(df, response, accept)
+            payload = {"sql": payload}
+        if not payload.get("sql"):
+            raise ValueError("session query body requires 'sql'")
+        df = self._query(sess, payload["sql"])
+        return self._respond(
+            df, payload.get("postProcessors"), payload.get("response"), accept
+        )
 
     def session_upload(self, session_id: str, name: str, fmt: str, data: bytes) -> None:
-        """Multipart upload ingest (reference A23): format sniff by
-        extension/content happens in the HTTP layer; here data is staged
-        and registered."""
-        sess = self.sessions.get(session_id)
-        payload = {"format": fmt, "name": name, "location": ""}
+        """Multipart upload ingest (reference A23): the HTTP layer resolves
+        each field's format; here the bytes are staged and registered."""
         from datafusion_server_spark.sources import readers
 
+        sess = self.sessions.get(session_id)
         suffix = {"csv": ".csv", "json": ".json", "ndjson": ".ndjson",
                   "parquet": ".parquet", "avro": ".avro"}[fmt]
-        path = readers.stage_bytes(data, suffix)
-        payload["location"] = f"file://{path}" if not path.startswith("/") else path
-        ds = source_registry.DataSource.from_json(payload)
+        ds = source_registry.DataSource.from_json(
+            {"format": fmt, "name": name, "location": readers.stage_bytes(data, suffix)}
+        )
         ds.options.infer_schema_rows = readers.UPLOAD_INFER_ROWS
-        source_registry.register(sess.spark, ds, session=sess)
+        source_registry.register(sess, ds)
 
     def session_save(self, session_id: str, payload: dict) -> None:
-        """Save table(s) to a sink (reference A18/A19).
-
-        Accepts the reference's request shape — ``{"dataSources": [{format,
-        name, location, options}]}`` (handler/data_source.rs:136-150, where
-        ``name`` is the registered table and ``location`` the destination) —
-        as well as the single-table ``{table, location, format, options}``
-        form.
-        """
+        """Save tables to sinks (reference A18/A19) from the reference body
+        ``{"dataSources": [{format, name, location, options}]}``
+        (handler/data_source.rs:136-150): ``name`` is the registered table
+        and ``location`` the destination."""
         from datafusion_server_spark.sources import writers
 
         sess = self.sessions.get(session_id)
-        entries = payload.get("dataSources") or [
-            {
-                "name": payload["table"],
-                "location": payload["location"],
-                "format": payload.get("format", "parquet"),
-                "options": payload.get("options"),
-            }
-        ]
+        entries = payload.get("dataSources")
+        if not entries:
+            raise ValueError("save body requires 'dataSources'")
         for entry in entries:
-            table = entry["name"]
             location = entry["location"]
             fmt = str(entry.get("format", "parquet")).lower()
-            df = sess.spark.table(table)
+            df = sess.spark.table(entry["name"])
             opts = entry.get("options") or {}
             if location.endswith(".json") and fmt == "json":
                 writers.save_json_array_file(df, location, overwrite=bool(opts.get("overwrite")))
@@ -420,31 +403,37 @@ class Engine:
                     delimiter=str(opts.get("delimiter", ",")),
                 )
 
-    def session_detail(self, session_id: str) -> dict:
-        sess = self.sessions.get(session_id)
+    @staticmethod
+    def _source_info(sess: ServerSession, name: str) -> dict:
         from datafusion_server_spark.schema import struct_to_schema_json
 
+        ds = sess.data_sources[name]
+        return {
+            "format": ds.format,
+            "location": ds.location,
+            "cached": sess.spark.catalog.isCached(name),
+            "schema": struct_to_schema_json(sess.spark.table(name).schema),
+        }
+
+    def session_detail(self, session_id: str) -> dict:
+        sess = self.sessions.get(session_id)
         return {
             "id": sess.session_id,
             "created": sess.created_at,
-            "dataSources": {
-                name: dict(
-                    info,
-                    schema=struct_to_schema_json(sess.spark.table(name).schema),
-                )
-                for name, info in sess.data_sources.items()
-            },
+            "dataSources": {name: self._source_info(sess, name) for name in sess.data_sources},
         }
+
+    def data_source_detail(self, session_id: str, name: str) -> dict:
+        sess = self.sessions.get(session_id)
+        if name not in sess.data_sources:
+            raise KeyError(f"no such dataSource: {name}")
+        return self._source_info(sess, name)
 
     def remove_data_source(self, session_id: str, name: str) -> bool:
         return self.sessions.get(session_id).remove(name)
 
     def refresh_data_source(self, session_id: str, name: str) -> None:
-        """Re-read the source (reference session_manager.rs:474-488)."""
+        """Re-read the source with all of its options (reference
+        session_manager.rs:474-488)."""
         sess = self.sessions.get(session_id)
-        info = sess.data_sources.get(name)
-        if not info:
-            raise KeyError(name)
-        payload = {"format": info["format"], "name": name, "location": info["location"]}
-        ds = source_registry.DataSource.from_json(payload)
-        source_registry.register(sess.spark, ds, session=sess)
+        source_registry.register(sess, sess.data_sources[name])

@@ -14,6 +14,7 @@ incremental (reference lib/src/response/format/* + record_batch_stream.rs).
 from __future__ import annotations
 
 import io
+import itertools
 import json
 from collections.abc import Iterator
 from typing import Any
@@ -55,51 +56,44 @@ def _json_default(v: Any):
     return str(v)
 
 
-def to_json_array(df: DataFrame) -> bytes:
-    tbl = df.toArrow()
-    rows = tbl.to_pylist()
-    return json.dumps(rows, default=_json_default).encode()
+def to_json_array(table: pa.Table) -> bytes:
+    return json.dumps(table.to_pylist(), default=_json_default).encode()
 
 
-def to_csv(df: DataFrame, *, has_headers: bool = True, delimiter: str = ",") -> bytes:
+def to_csv(table: pa.Table, *, has_headers: bool = True, delimiter: str = ",") -> bytes:
     import csv as _csv
 
-    tbl = df.toArrow()
     buf = io.StringIO()
     writer = _csv.writer(buf, delimiter=delimiter)
     if has_headers:
-        writer.writerow(tbl.column_names)
-    cols = [tbl.column(c).to_pylist() for c in tbl.column_names]
-    for i in range(tbl.num_rows):
+        writer.writerow(table.column_names)
+    cols = [table.column(c).to_pylist() for c in table.column_names]
+    for i in range(table.num_rows):
         writer.writerow([cols[j][i] for j in range(len(cols))])
     return buf.getvalue().encode()
 
 
-def to_arrow_ipc(df: DataFrame) -> bytes:
-    tbl = df.toArrow()
+def to_arrow_ipc(table: pa.Table) -> bytes:
     sink = pa.BufferOutputStream()
-    with pa.ipc.new_stream(sink, tbl.schema) as writer:
-        writer.write_table(tbl)
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table)
     return sink.getvalue().to_pybytes()
 
 
-def encode(df: DataFrame, fmt: str, *, has_headers: bool = True, delimiter: str = ",") -> tuple[bytes, str]:
+def encode(table: pa.Table, fmt: str, *, has_headers: bool = True, delimiter: str = ",") -> tuple[bytes, str]:
+    """A collected result as a buffered response body: (bytes, content type)."""
     if fmt == "arrow":
-        return to_arrow_ipc(df), CONTENT_TYPES["arrow"]
+        return to_arrow_ipc(table), CONTENT_TYPES["arrow"]
     if fmt == "csv":
-        return to_csv(df, has_headers=has_headers, delimiter=delimiter), CONTENT_TYPES["csv"]
-    return to_json_array(df), CONTENT_TYPES["json"]
+        return to_csv(table, has_headers=has_headers, delimiter=delimiter), CONTENT_TYPES["csv"]
+    return to_json_array(table), CONTENT_TYPES["json"]
 
 
 def spark_to_arrow_schema(df: DataFrame) -> pa.Schema:
-    """Arrow schema for a DataFrame without running a job (fallback: an
-    empty-limit collect)."""
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
+    """The Arrow schema ``df.toArrow()`` would return, without running a job."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        return to_arrow_schema(df.schema)
-    except Exception:  # pragma: no cover - private-API drift
-        return df.limit(0).toArrow().schema
+    return to_arrow_schema(df.schema)
 
 
 def arrow_batches_incremental(df: DataFrame) -> Iterator[pa.RecordBatch]:
@@ -128,15 +122,28 @@ def arrow_batches_incremental(df: DataFrame) -> Iterator[pa.RecordBatch]:
             yield from reader
 
 
+def arrow_stream(df: DataFrame) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
+    """The one streamed source of a result: (schema, batches), its first
+    batch already executed so a failing query fails before any response
+    byte. The schema is the DataFrame's declared one — what Flight
+    get_flight_info reports — and every batch is cast to it, as
+    ``DataFrame.toArrow`` does: the executed plan can narrow nullability
+    (a filter on a column makes it NOT NULL)."""
+    schema = spark_to_arrow_schema(df)
+    batches = (b.cast(schema) for b in arrow_batches_incremental(df))
+    first = next(batches, None)
+    return schema, itertools.chain([] if first is None else [first], batches)
+
+
 def arrow_ipc_chunks(df: DataFrame, max_records_per_batch: int = 10000) -> Iterator[bytes]:
     """Incremental Arrow IPC framing (reference A21): ONE logical IPC
-    stream — schema header first, then one frame per record batch as each
-    partition lands, then the end-of-stream marker — yielded as separate
-    chunks for chunked HTTP transfer. Backed by
-    ``arrow_batches_incremental``, so the first chunk goes out while later
-    partitions are still executing."""
+    stream — the declared schema first, then one frame per record batch
+    as each partition lands, then the end-of-stream marker — yielded as
+    separate chunks for chunked HTTP transfer. Backed by ``arrow_stream``,
+    so the first chunk goes out while later partitions are still
+    executing."""
+    schema, batches = arrow_stream(df)
     buf = io.BytesIO()
-    writer: pa.ipc.RecordBatchStreamWriter | None = None
 
     def drain() -> bytes:
         data = buf.getvalue()
@@ -144,21 +151,12 @@ def arrow_ipc_chunks(df: DataFrame, max_records_per_batch: int = 10000) -> Itera
         buf.truncate()
         return data
 
-    for whole in arrow_batches_incremental(df):
-        # Re-slice to the requested batch granularity: partitions may emit
-        # arbitrarily large batches, and callers size max_records_per_batch
-        # to bound client-side memory per frame.
-        for start in range(0, max(whole.num_rows, 1), max_records_per_batch):
-            batch = whole.slice(start, max_records_per_batch)
-            if writer is None:
-                writer = pa.ipc.new_stream(buf, batch.schema)
-            writer.write_batch(batch)
-            chunk = drain()
-            if chunk:
-                yield chunk
-    if writer is None:  # empty result: header + EOS only
-        writer = pa.ipc.new_stream(buf, spark_to_arrow_schema(df))
-    writer.close()
-    tail = drain()
-    if tail:
-        yield tail
+    with pa.ipc.new_stream(buf, schema) as writer:
+        for whole in batches:
+            # Re-slice to the requested batch granularity: partitions may
+            # emit arbitrarily large batches, and callers size
+            # max_records_per_batch to bound client-side memory per frame.
+            for start in range(0, whole.num_rows, max_records_per_batch):
+                writer.write_batch(whole.slice(start, max_records_per_batch))
+                yield drain()
+    yield drain()

@@ -21,12 +21,8 @@ reference (flight.rs:153-167, 312-337).
 
 from __future__ import annotations
 
-import itertools
 import re
 import threading
-from collections.abc import Iterator
-
-import pyarrow as pa
 
 try:
     import pyarrow.flight as fl
@@ -35,6 +31,7 @@ except ImportError:  # pragma: no cover
 
 from datafusion_server_spark.server import encoders
 from datafusion_server_spark.server.api import Engine
+from datafusion_server_spark.sources.registry import DataSource
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -48,18 +45,6 @@ def parse_ticket(ticket: str) -> tuple[str, str]:
     if _IDENT.fullmatch(rest):
         rest = f"SELECT * FROM {rest}"
     return session_id, rest
-
-
-def _stream(df) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
-    """(schema, batches) of a result, its first batch already executed so
-    a failing query fails the RPC itself. The schema is the DataFrame's
-    declared one — what get_flight_info reports — and every batch is cast
-    to it, as ``DataFrame.toArrow`` does: the executed plan can narrow
-    nullability (a filter on a column makes it NOT NULL)."""
-    schema = encoders.spark_to_arrow_schema(df)
-    batches = (b.cast(schema) for b in encoders.arrow_batches_incremental(df))
-    first = next(batches, None)
-    return schema, itertools.chain([] if first is None else [first], batches)
 
 
 if fl is not None:
@@ -117,7 +102,9 @@ if fl is not None:
             # stream batches as partitions land — never the full result on
             # the driver (reference flight.rs:96-144 execute_sql_stream ->
             # mpsc(32) -> gRPC)
-            return fl.GeneratorStream(*_stream(self._plan(ticket.ticket.decode())))
+            return fl.GeneratorStream(
+                *encoders.arrow_stream(self._plan(ticket.ticket.decode()))
+            )
 
         def do_exchange(self, context, descriptor, reader, writer):
             return self._tracked(
@@ -149,7 +136,7 @@ if fl is not None:
                 sql = re.sub(
                     r"(?<![A-Za-z0-9_])exchange_input(?![A-Za-z0-9_])", view, sql
                 )
-                schema, batches = _stream(self.engine._query(sess, sql))
+                schema, batches = encoders.arrow_stream(self.engine._query(sess, sql))
                 writer.begin(schema)
                 for batch in batches:
                     writer.write_batch(batch)
@@ -167,9 +154,9 @@ if fl is not None:
                 raise ValueError("do_put descriptor must be session/table")
             session_id, table_name = path.split("/", 1)
             sess = self.engine.sessions.get(session_id)
-            table = reader.read_all()
-            df = sess.spark.createDataFrame(table)
-            sess.register(table_name, df, cache=True, info={"format": "flight"})
+            df = sess.spark.createDataFrame(reader.read_all())
+            source = DataSource.from_json({"format": "flight", "name": table_name})
+            sess.register(table_name, df, cache=True, source=source)
 
 
     def serve(engine: Engine, location: str = "grpc://127.0.0.1:50051") -> "FlightServer":

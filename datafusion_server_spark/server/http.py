@@ -14,10 +14,9 @@ container). Routes mirror the reference's axum router
   GET    /session/{id}/datasource/{name}/refresh
   POST   /session/{id}/processor      merge processors
   POST   /session/{id}/query          JSON {sql,...} or raw application/sql
-  POST   /session/{id}/datasource/save    (alias: /session/{id}/save)
+  POST   /session/{id}/datasource/save    {"dataSources": [...]}
   POST   /session/{id}/datasource/upload  multipart/form-data, one table
-                                          per field (alias: /session/{id}/
-                                          upload?name=&format= raw body)
+                                          per field
   GET    /healthz | /sysinfo | /metrics
 """
 
@@ -32,23 +31,6 @@ from urllib.parse import parse_qs, urlparse
 from datafusion_server_spark.server.api import Engine
 
 UPLOAD_LIMIT = 20 * 1024 * 1024  # reference default: settings.rs:213
-
-
-def sniff_format(content_type: str | None, name: str) -> str:
-    """Upload format sniff (reference request/format.rs:8-57)."""
-    ct = (content_type or "").lower()
-    if "csv" in ct:
-        return "csv"
-    if "parquet" in ct or "octet-stream" in ct and name.endswith(".parquet"):
-        return "parquet"
-    if "ndjson" in ct or "x-ndjson" in ct:
-        return "ndjson"
-    if "json" in ct:
-        return "json"
-    for ext, fmt in ((".csv", "csv"), (".parquet", "parquet"), (".ndjson", "ndjson"), (".jsonl", "ndjson"), (".json", "json")):
-        if name.endswith(ext):
-            return fmt
-    raise ValueError(f"cannot sniff format for {name!r} ({content_type!r})")
 
 
 # multipart-field format resolution, mirroring the reference's
@@ -104,7 +86,7 @@ _PATH_TEMPLATES = (
     (re.compile(r"^/session/[^/]+/datasource/(save|upload)$"), r"/session/:session_id/datasource/\1"),
     (re.compile(r"^/session/[^/]+/datasource/[^/]+/refresh$"), "/session/:session_id/datasource/:name/refresh"),
     (re.compile(r"^/session/[^/]+/datasource/[^/]+$"), "/session/:session_id/datasource/:name"),
-    (re.compile(r"^/session/[^/]+/(datasource|processor|query|save|upload)$"), r"/session/:session_id/\1"),
+    (re.compile(r"^/session/[^/]+/(datasource|processor|query)$"), r"/session/:session_id/\1"),
     (re.compile(r"^/session/(?!create$)[^/]+$"), "/session/:session_id"),
 )
 
@@ -288,39 +270,32 @@ class Handler(BaseHTTPRequestHandler):
                     self.engine.sessions.delete(sid)
                     return self._send_json(200, {"deleted": sid})
 
-            # reference router paths (routes.rs:35,46): POST
-            # /session/:id/datasource/save and /session/:id/datasource/upload
-            # (the bare /session/:id/{save,upload} forms are kept as aliases)
-            m = re.fullmatch(r"/session/([^/]+)(?:/datasource)?/(save|upload)", path)
+            # reference router paths (routes.rs:35,46)
+            m = re.fullmatch(r"/session/([^/]+)/datasource/(save|upload)", path)
             if m and method == "POST":
                 sid, action = m.groups()
                 if action == "save":
                     self.engine.session_save(sid, self._json())
                     return self._send_json(200, {"ok": True})
+                # reference upload semantics (data_source.rs:70-134): a
+                # multipart/form-data body, one table per field; name =
+                # field name (required); format from part content-type,
+                # else filename ext
                 ct = self.headers.get("Content-Type") or ""
-                if ct.lower().startswith("multipart/form-data"):
-                    # reference upload semantics (data_source.rs:70-134):
-                    # one table per field; name = field name (required);
-                    # format from part content-type, else filename ext
-                    uploaded = []
-                    for fname, ffile, fct, data in parse_multipart(ct, self._body()):
-                        if not fname:
-                            return self._error(400, "multipart field name is required")
-                        fmt = resolve_multipart_format(fct, ffile)
-                        if fmt is None:
-                            return self._error(
-                                415,
-                                "multipart field content-type must be 'text/csv', "
-                                "'application/json', or 'application/vnd.apache.parquet'",
-                            )
-                        self.engine.session_upload(sid, fname, fmt, data)
-                        uploaded.append({"name": fname, "format": fmt})
-                    return self._send_json(200, {"uploaded": uploaded})
-                # raw-body alias: ?name=&format= with whole-body payload
-                name = q.get("name") or "uploaded"
-                fmt = q.get("format") or sniff_format(ct, name)
-                self.engine.session_upload(sid, name, fmt, self._body())
-                return self._send_json(200, {"name": name, "format": fmt})
+                uploaded = []
+                for fname, ffile, fct, data in parse_multipart(ct, self._body()):
+                    if not fname:
+                        return self._error(400, "multipart field name is required")
+                    fmt = resolve_multipart_format(fct, ffile)
+                    if fmt is None:
+                        return self._error(
+                            415,
+                            "multipart field content-type must be 'text/csv', "
+                            "'application/json', or 'application/vnd.apache.parquet'",
+                        )
+                    self.engine.session_upload(sid, fname, fmt, data)
+                    uploaded.append({"name": fname, "format": fmt})
+                return self._send_json(200, {"uploaded": uploaded})
 
             m = re.fullmatch(r"/session/([^/]+)/(\w+)", path)
             if m:
@@ -330,8 +305,8 @@ class Handler(BaseHTTPRequestHandler):
                         names = self.engine.session_add_datasource(sid, self._json())
                         return self._send_json(200, {"dataSources": names})
                     if method == "GET":
-                        detail = self.engine.session_detail(sid)
-                        return self._send_json(200, sorted(detail["dataSources"]))
+                        sess = self.engine.sessions.get(sid)
+                        return self._send_json(200, sorted(sess.data_sources))
                 if action == "processor" and method == "POST":
                     self.engine.session_merge(sid, self._json())
                     return self._send_json(200, {"ok": True})
@@ -347,10 +322,7 @@ class Handler(BaseHTTPRequestHandler):
             if m:
                 sid, name = m.groups()
                 if method == "GET":
-                    detail = self.engine.session_detail(sid)
-                    if name not in detail["dataSources"]:
-                        return self._error(404, f"no such dataSource: {name}")
-                    return self._send_json(200, detail["dataSources"][name])
+                    return self._send_json(200, self.engine.data_source_detail(sid, name))
                 if method == "DELETE":
                     ok = self.engine.remove_data_source(sid, name)
                     return self._send_json(200 if ok else 404, {"removed": ok})
@@ -367,7 +339,7 @@ class Handler(BaseHTTPRequestHandler):
             # The oversized body was never read. Drain a bounded amount
             # before responding: close() with unread data in the
             # receive queue sends RST on Linux, which can destroy the
-            # in-flight 413 before the client reads it (r9 self-review).
+            # in-flight 413 before the client reads it.
             # Past the drain cap, close anyway — availability over a
             # perfectly-delivered error for a 100x-over-limit sender.
             try:
@@ -431,7 +403,7 @@ class Handler(BaseHTTPRequestHandler):
 
 
 class _Server(ThreadingHTTPServer):
-    """ThreadingHTTPServer with a serving-tier listen backlog (r12).
+    """ThreadingHTTPServer with a serving-tier listen backlog.
 
     The stdlib default ``request_queue_size`` is 5; a concurrency burst
     (the bench's 32-wide one-shot tier, or N clients released together)
@@ -484,11 +456,10 @@ def run_until_signalled(
     """Block until SIGTERM or SIGINT, then drain gracefully (reference
     signal_handler.rs:5-29 selects over ctrl-c AND terminate): a
     container orchestrator sends SIGTERM, and the server must stop
-    accepting, close every live session (unpersist + duration metrics,
+    accepting, close every live session (drop its views + duration metrics,
     the TTL reaper's path), and exit 0 — not die mid-request. The
-    optional Flight gRPC server drains the same way (r11 ADVICE:
-    without this, active Flight streams died abruptly at process
-    exit while the HTTP side drained)."""
+    optional Flight gRPC server drains the same way, so active Flight
+    streams finish instead of dying at process exit."""
     import signal
 
     stop = threading.Event()

@@ -25,12 +25,26 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import SparkSession
+
+if TYPE_CHECKING:
+    from datafusion_server_spark.sources.registry import DataSource
 
 DEFAULT_KEEP_ALIVE_S = 3600  # reference default: lib/src/settings.rs:211
 STATELESS_KEEP_ALIVE_S = 60  # reference: lib/src/response/handler/dataframe.rs:28-31
 REAPER_INTERVAL_S = 1.0  # reference: lib/src/server/interval_worker.rs:28-30
+
+# SQLConf every server session gets at create. newSession() takes its
+# SQLConf from the STATIC SparkConf, so the root's runtime conf does not
+# carry over: a root run with AQE off (the single-stream batch bench)
+# still serves with AQE and partition coalescing on, which measured
+# better for concurrent requests at every shuffle width (PLANS.md).
+SERVING_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+}
 
 
 def default_parallelism() -> int:
@@ -93,7 +107,9 @@ class ServerSession:
     """One server session = one isolated Spark temp-view catalog.
 
     Mirrors the reference ``Session`` (lib/src/context/session.rs:35-70):
-    id, created timestamp, TTL, and the set of registered data sources.
+    id, created timestamp, TTL, and its data sources — each name mapped to
+    the parsed ``DataSource`` it was loaded from, so a refresh replays it
+    with every option.
     """
 
     session_id: str
@@ -101,7 +117,7 @@ class ServerSession:
     keep_alive_s: int = DEFAULT_KEEP_ALIVE_S
     created_at: float = field(default_factory=time.time)
     last_access: float = field(default_factory=time.time)
-    data_sources: dict[str, dict] = field(default_factory=dict)
+    data_sources: dict[str, DataSource] = field(default_factory=dict)
 
     def touch(self) -> None:
         self.last_access = time.time()
@@ -110,34 +126,38 @@ class ServerSession:
     def expired(self) -> bool:
         return time.time() - self.last_access > self.keep_alive_s
 
-    def register(self, name: str, df, *, cache: bool = False, info: dict | None = None) -> None:
-        """Register a DataFrame as a named table in this session.
+    def register(
+        self, name: str, df, *, cache: bool = False, source: DataSource | None = None
+    ) -> None:
+        """Make ``df`` the session view ``name``: the one way a data source,
+        a merge result, an ``INSERT`` result or a Flight upload becomes a
+        table (reference session.rs:248-253 registers in-memory batches).
 
-        The reference concatenates ingested batches and registers them as an
-        in-memory table (session.rs:248-253); the Spark-native equivalent is
-        an (optionally cached) temp view — lazy by default so that listing
-        sources keep full pushdown.
+        A view being replaced is uncached first: ``createOrReplaceTempView``
+        only uncaches plans that reference the view by name, so a source
+        persisted before it was named would otherwise outlive its
+        replacement. ``cache`` persists AFTER the view exists: a plan
+        persisted before the replace of a view it reads is uncached by
+        that same replace. ``source`` (the ``DataSource`` to replay on
+        refresh) is recorded when given; merges and inserts keep the
+        name's existing entry.
         """
-        if cache:
-            df = df.persist()
+        if name in self.data_sources:
+            self.spark.catalog.uncacheTable(name)
         df.createOrReplaceTempView(name)
-        self.data_sources[name] = dict(info or {}, cached=cache)
+        if cache:
+            df.persist()
+        if source is not None:
+            self.data_sources[name] = source
 
     def remove(self, name: str) -> bool:
-        # reference: session_manager.rs:454-472 (remove_data_source)
-        if name in self.data_sources:
-            try:
-                df = self.spark.table(name)
-                df.unpersist()
-            except Exception:
-                pass
-            self.spark.catalog.dropTempView(name)
-            del self.data_sources[name]
-            return True
-        return False
+        """Drop the view (which uncaches it) and forget the name
+        (reference session_manager.rs:454-472)."""
+        self.data_sources.pop(name, None)
+        return self.spark.catalog.dropTempView(name)
 
     def columns_of(self, table: str) -> list[str] | None:
-        """Schema resolver for the dialect pre-pass (r11: multi-relation
+        """Schema resolver for the dialect pre-pass (the multi-relation
         qualified ``t.*`` GROUPS expansion): column names of a view
         registered in this session, or None when the name does not
         resolve — the rewrite then keeps its conservative reject."""
@@ -151,8 +171,16 @@ class ServerSession:
         return self.spark.sql(query)
 
     def close(self) -> None:
-        for name in list(self.data_sources):
-            self.remove(name)
+        """Drop every temp view of the session — data sources, ``CACHE
+        TABLE`` and SQL-created views, ``table@ns`` registrations — which
+        frees their entries in Spark's shared CacheManager (dropping the
+        SparkSession alone would not)."""
+        # a Scala Seq read by index: one py4j round trip per name
+        # (iterating it as a Java list costs dozens)
+        names = self.spark._jsparkSession.sessionState().catalog().getTempViewNames()
+        for i in range(names.size()):
+            self.spark.catalog.dropTempView(names.apply(i))
+        self.data_sources.clear()
 
 
 class SessionManager:
@@ -162,24 +190,12 @@ class SessionManager:
     detail/delete + expiry) on top of ``SparkSession.newSession()``.
     """
 
-    def __init__(
-        self,
-        root: SparkSession | None = None,
-        *,
-        start_reaper: bool = False,
-        session_conf: dict | None = None,
-    ):
+    def __init__(self, root: SparkSession | None = None, *, start_reaper: bool = False):
         self._root = root or get_spark()
         self._sessions: dict[str, ServerSession] = {}
         self._lock = threading.Lock()
         self._reaper: threading.Thread | None = None
         self._stop = threading.Event()
-        # per-session SQLConf overrides — newSession() initializes its
-        # SQLConf from the STATIC SparkConf, so serving-tier knobs (AQE
-        # on + partition coalescing, measured better at every shuffle
-        # setting under concurrent load) must be re-applied on every
-        # create.
-        self.session_conf: dict = dict(session_conf or {})
         # lifecycle hook invoked (outside the lock) with each closed
         # session — the Engine wires telemetry here (reference
         # track_session_context_duration, metrics.rs:139-147)
@@ -195,8 +211,8 @@ class SessionManager:
 
         sid = session_id or uuid.uuid4().hex
         spark = self._root.newSession()
-        for k, v in self.session_conf.items():
-            spark.conf.set(k, str(v))
+        for k, v in SERVING_CONF.items():
+            spark.conf.set(k, v)
         # dialect-shim SQL functions (regexp_match first-match semantics
         # etc.) live in the per-session temp-function catalog
         register_session_functions(spark)
@@ -228,10 +244,9 @@ class SessionManager:
             ]
 
     def _close(self, sessions: list[ServerSession]) -> list[str]:
-        """Close sessions already removed from the registry: unpersist
-        their cached sources (they live in Spark's shared CacheManager,
-        so dropping the SparkSession alone would not free them) and fire
-        the ``on_close`` hook (session-duration telemetry)."""
+        """Close sessions already removed from the registry (drop their
+        views, see ``ServerSession.close``) and fire the ``on_close`` hook
+        (session-duration telemetry)."""
         for sess in sessions:
             sess.close()
             cb = self.on_close

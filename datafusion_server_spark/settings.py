@@ -35,7 +35,7 @@ class ServerSettings:
     data_dir: str = "data"
     plugin_dir: str = "plugin"
     disable_stateful_features: bool = False
-    # Beyond-reference (r9): run one synthetic pipeline through the
+    # Beyond-reference: run one synthetic pipeline through the
     # stateless query path at boot, before the listener accepts traffic.
     # The reference's Rust server has no JIT warmup cliff; Spark pays
     # per-plan codegen + JVM warmup on the FIRST request (~2.7x a warm
@@ -48,21 +48,6 @@ class ServerSettings:
 class SessionSettings:
     default_keep_alive: int = 3600  # seconds (settings.rs:211)
     upload_limit_size: int = 20  # MB (settings.rs:213)
-    # beyond-reference (r11, serving-floor A/B): SQLConf overrides
-    # applied to EVERY server session at create. newSession() takes its
-    # SQLConf from the static SparkConf, so a serving tier that wants
-    # different knobs than the batch root session (measured: AQE ON
-    # wins the concurrent tier at every shuffle setting — coalesced
-    # tiny shuffles mean fewer tasks and less scheduler contention —
-    # while single-stream batch favors AQE off) sets them here. The
-    # default turns AQE on for server sessions; set to {} to inherit
-    # the root verbatim.
-    spark_conf: dict = field(
-        default_factory=lambda: {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        }
-    )
 
 
 @dataclass

@@ -21,12 +21,16 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_server_spark.sources import readers
 from datafusion_server_spark.sources.readers import ReadOptions
+
+if TYPE_CHECKING:
+    from datafusion_server_spark.session import ServerSession
 
 LISTING_SCHEMES = {"", "file", "s3", "s3a", "gs", "abfss", "wasbs", "hdfs", "webdav"}
 _SCHEME_REWRITE = {"s3": "s3a"}  # hadoop connector scheme
@@ -254,15 +258,10 @@ def load_data_source(spark: SparkSession, ds: DataSource) -> tuple[DataFrame, bo
     raise DataSourceError(f"unsupported (format={fmt!r}, scheme={scheme!r})")
 
 
-def register(spark: SparkSession, ds: DataSource, *, session=None) -> DataFrame:
-    """Load + register under the source name (temp view). Eager/buffered
-    sources are persisted — the Spark-safe analog of the reference's
-    in-memory concat_batches materialization."""
-    df, eager = load_data_source(spark, ds)
-    if eager:
-        df = df.persist()
-    df.createOrReplaceTempView(ds.name)
-    if session is not None:
-        session.data_sources[ds.name] = {"format": ds.format, "location": ds.location,
-                                         "cached": eager}
+def register(sess: ServerSession, ds: DataSource) -> DataFrame:
+    """Load ``ds`` and make it the view ``ds.name`` of the ``ServerSession``.
+    Eager/buffered sources are persisted — the Spark-safe analog of the
+    reference's in-memory concat_batches materialization."""
+    df, eager = load_data_source(sess.spark, ds)
+    sess.register(ds.name, df, cache=eager, source=ds)
     return df

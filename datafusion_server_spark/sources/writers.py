@@ -35,7 +35,7 @@ def save_json_array_file(df: DataFrame, path: str, *, overwrite: bool = False) -
         raise FileExistsError(f"refusing to overwrite {path} (set overwrite)")
     from datafusion_server_spark.server.encoders import to_json_array
 
-    data = to_json_array(df)
+    data = to_json_array(df.toArrow())
     tmp = path + ".tmp"
     with open(tmp, "wb") as f:
         f.write(data)

@@ -71,10 +71,8 @@ def test_no_cross_session_view_bleed_under_race(base_url):
             assert r.status_code == 200, r.text
             csv = "k,v\n" + "".join(f"{j},{i * 1000 + j}\n" for j in range(20))
             r = requests.post(
-                f"{base_url}/session/{sid}/upload",
-                params={"name": "people", "format": "csv"},
-                data=csv.encode(),
-                headers={"Content-Type": "text/csv"},
+                f"{base_url}/session/{sid}/datasource/upload",
+                files={"people": ("people.csv", csv.encode(), "text/csv")},
             )
             assert r.status_code == 200, r.text
             barrier.wait(timeout=60)  # maximize overlap before the reads
@@ -82,7 +80,7 @@ def test_no_cross_session_view_bleed_under_race(base_url):
             for _ in range(n_queries):
                 r = requests.post(
                     f"{base_url}/session/{sid}/query",
-                    json={"query": "SELECT CAST(SUM(v) AS BIGINT) AS s FROM people"},
+                    json={"sql": "SELECT CAST(SUM(v) AS BIGINT) AS s FROM people"},
                     headers={"Accept": "application/json"},
                 )
                 assert r.status_code == 200, r.text

@@ -159,23 +159,24 @@ def test_session_lifecycle(base_url, tmp_path):
 def test_session_upload_and_save(base_url, tmp_path):
     requests.get(f"{base_url}/session/create", params={"id": "up"})
     r = requests.post(
-        f"{base_url}/session/up/upload",
-        params={"name": "u1"},
-        data=CSV,
-        headers={"Content-Type": "text/csv"},
+        f"{base_url}/session/up/datasource/upload",
+        files={"u1": ("u1.csv", CSV, "text/csv")},
     )
-    assert r.json() == {"name": "u1", "format": "csv"}
+    assert r.json() == {"uploaded": [{"name": "u1", "format": "csv"}]}
     r = requests.post(
         f"{base_url}/session/up/query", json={"sql": "SELECT COUNT(*) AS n FROM u1"}
     )
     assert r.json() == [{"n": 3}]
     out = tmp_path / "saved.json"
     r = requests.post(
-        f"{base_url}/session/up/save",
-        json={"table": "u1", "location": str(out), "format": "json"},
+        f"{base_url}/session/up/datasource/save",
+        json={"dataSources": [{"name": "u1", "location": str(out), "format": "json"}]},
     )
     assert r.status_code == 200, r.text
     assert len(json.loads(out.read_text())) == 3
+    # the reference routes are the only ones: no bare save/upload aliases
+    for action in ("save", "upload"):
+        assert requests.post(f"{base_url}/session/up/{action}", data=b"").status_code == 404
     requests.delete(f"{base_url}/session/up")
 
 
@@ -320,6 +321,28 @@ def test_post_processor_pivot(base_url, tmp_path):
     assert rows[0]["x"] == 1.0 and rows[0]["y"] == 3.0
 
 
+def test_post_processor_output_skips_spark(engine):
+    """A post-processor's Arrow output goes straight to the encoder: a
+    type Spark cannot hold (uint32) comes back unchanged."""
+    from datafusion_server_spark.operators import postprocess
+
+    def as_uint32(rb, **_):
+        return pa.RecordBatch.from_arrays([rb.column(0).cast(pa.uint32())], ["u"])
+
+    postprocess.register_processor("as-uint32", as_uint32)
+    try:
+        data, _ = engine.dataframe_query({
+            "query": "SELECT CAST(id AS INT) AS v FROM range(3)",
+            "postProcessors": [{"module": "as-uint32"}],
+            "response": {"format": "arrow"},
+        })
+    finally:
+        postprocess._PROCESSORS.pop("as-uint32")
+    table = pa.ipc.open_stream(io.BytesIO(data)).read_all()
+    assert table.schema == pa.schema([("u", pa.uint32())])
+    assert table.column("u").to_pylist() == [0, 1, 2]
+
+
 def test_error_routes(base_url):
     assert requests.get(f"{base_url}/nope").status_code == 404
     assert requests.post(f"{base_url}/session/ghost/query", json={"sql": "SELECT 1"}).status_code == 404
@@ -404,6 +427,31 @@ def test_flight_do_get_table_at_namespace(spark, tmp_path):
         server.shutdown()
         ns_engine.sessions.close_all()
         jdbc._NAMESPACES.pop("flops", None)
+
+
+def test_table_at_namespace_errors_surface(spark, tmp_path):
+    """A misspelt namespace or a missing database table answers with its
+    own message, not a generic TABLE_OR_VIEW_NOT_FOUND."""
+    import sqlite3
+
+    from datafusion_server_spark.settings import Settings
+    from datafusion_server_spark.sources import jdbc
+
+    db = tmp_path / "ops.sqlite"
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE customers (id INTEGER, name TEXT)")
+        conn.execute("INSERT INTO customers VALUES (1, 'a')")
+    settings = Settings.from_dict(
+        {"databases": [{"type": "sqlite", "namespace": "ops", "database": str(db)}]}
+    )
+    ns_engine = Engine(spark, start_reaper=False, settings=settings)
+    try:
+        with pytest.raises(Exception, match="unknown database namespace"):
+            ns_engine.dataframe_query({"query": "SELECT name FROM customers@opz"})
+        with pytest.raises(Exception, match="no such sqlite table"):
+            ns_engine.dataframe_query({"query": "SELECT name FROM custmers@ops"})
+    finally:
+        jdbc._NAMESPACES.pop("ops", None)
 
 
 def test_flight_do_exchange(engine):
@@ -530,7 +578,7 @@ def test_cross_server_flight_source(engine, spark):
             "location": f"grpc://127.0.0.1:{server.port}/peer/SELECT k, v FROM shared_t WHERE k = 2",
         }
     )
-    register(consumer.spark, ds, session=consumer)
+    register(consumer, ds)
     rows = consumer.sql("SELECT * FROM remote_t").collect()
     assert [(r["k"], r["v"]) for r in rows] == [(2, "y")]
     engine.sessions.delete("peer")
@@ -613,19 +661,15 @@ def test_upload_limit_413_parity(spark):
     try:
         big = b"k,v\n" + b"1,2\n" * (600 * 1024)  # ~2.3 MB > 1 MB limit
         r = requests.post(
-            f"{base}/session/up413/upload",
-            params={"name": "t", "format": "csv"},
-            data=big,
-            headers={"Content-Type": "text/csv"},
+            f"{base}/session/up413/datasource/upload",
+            files={"t": ("t.csv", big, "text/csv")},
         )
         assert r.status_code == 413, (r.status_code, r.text[:120])
         # an in-limit request on a fresh connection still works
         requests.get(f"{base}/session/create", params={"id": "up413"})
         ok = requests.post(
-            f"{base}/session/up413/upload",
-            params={"name": "t", "format": "csv"},
-            data=b"k,v\n1,2\n",
-            headers={"Content-Type": "text/csv"},
+            f"{base}/session/up413/datasource/upload",
+            files={"t": ("t.csv", b"k,v\n1,2\n", "text/csv")},
         )
         assert ok.status_code == 200, ok.text
     finally:

@@ -13,7 +13,7 @@ from datafusion_server_spark.operators.merge import (
     merge_column,
     merge_row,
 )
-from datafusion_server_spark.session import SessionManager
+from datafusion_server_spark.session import ServerSession, SessionManager
 
 
 def test_session_isolation(spark):
@@ -88,7 +88,7 @@ def test_session_ttl_reap(spark):
 
 def test_reaper_unpersists_cached_sources_and_reports_duration(spark):
     """TTL expiry must free the storage of cached session sources
-    (close() -> remove() -> unpersist()) and report the session's
+    (close() drops every view, which uncaches it) and report the session's
     lifetime through the on_close hook — the reaper is the only exit
     path for abandoned sessions, so a leak here grows forever."""
     jsc = spark.sparkContext._jsc.sc()
@@ -98,7 +98,7 @@ def test_reaper_unpersists_cached_sources_and_reports_duration(spark):
     s = mgr.create("cachedttl", keep_alive_s=0)
     before = jsc.getPersistentRDDs().size()
     df = s.spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    s.register("cached_src", df, cache=True, info={"format": "memory"})
+    s.register("cached_src", df, cache=True)
     s.spark.table("cached_src").count()  # materialize the cache
     assert jsc.getPersistentRDDs().size() == before + 1
     time.sleep(0.05)
@@ -157,8 +157,9 @@ def test_execute_merge_reregisters(spark):
             "targets": [{"table": "mtgt", "baseKeys": ["k"], "targetKeys": ["k"]}],
         }
     )
-    execute_merge(spark, proc, materialize=False)
+    execute_merge(ServerSession("merge", spark), proc)
     assert spark.table("mbase").columns == ["k", "v", "w"]
+    spark.table("mbase").unpersist()
 
 
 def test_execute_merge_unpersists_previous_cached_plan(spark):
@@ -178,10 +179,11 @@ def test_execute_merge_unpersists_previous_cached_plan(spark):
             }
         )
 
-    m1 = execute_merge(spark, proc("mt1"), materialize=True)
+    sess = ServerSession("mleak", spark)
+    m1 = execute_merge(sess, proc("mt1"))
     m1.count()
     assert m1.storageLevel.useMemory
-    m2 = execute_merge(spark, proc("mt2"), materialize=True)
+    m2 = execute_merge(sess, proc("mt2"))
     m2.count()
     # the first merge's cached plan is released once superseded
     assert not m1.storageLevel.useMemory, "previous merge plan still cached"
@@ -548,6 +550,61 @@ def test_engine_refresh(spark, tmp_path):
     engine.sessions.delete("rf")
 
 
+def test_refresh_keeps_source_options(spark, tmp_path):
+    """A refresh replays the registered source with all of its options,
+    not just its format and location."""
+    from datafusion_server_spark.server.api import Engine
+
+    engine = Engine(spark, start_reaper=False)
+    engine.session_create("rfopts", 600)
+    p = tmp_path / "pipe.csv"
+    p.write_bytes(b"a|b\n1|2\n")
+    engine.session_add_datasource(
+        "rfopts",
+        {"format": "csv", "name": "piped", "location": str(p), "options": {"delimiter": "|"}},
+    )
+    query = {"sql": "SELECT * FROM piped ORDER BY a", "response": {"format": "json"}}
+    try:
+        assert json.loads(engine.session_query("rfopts", query)[0]) == [{"a": 1, "b": 2}]
+        p.write_bytes(b"a|b\n1|2\n3|4\n")
+        engine.refresh_data_source("rfopts", "piped")
+        assert json.loads(engine.session_query("rfopts", query)[0]) == [
+            {"a": 1, "b": 2}, {"a": 3, "b": 4}
+        ]
+    finally:
+        engine.sessions.delete("rfopts")
+
+
+def test_cache_table_freed_at_session_delete(spark, tmp_path):
+    """Deleting a session frees every cache entry its views hold in the
+    shared CacheManager: a user ``CACHE TABLE``, and a buffered (cached)
+    source together with the merge persisted over it."""
+    from datafusion_server_spark.server.api import Engine
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    engine = Engine(spark, start_reaper=False)
+    engine.session_create("cachetbl", 600)
+    doc = tmp_path / "src.json"
+    doc.write_text(json.dumps([{"k": 1, "v": "x"}]))
+    tgt = tmp_path / "tgt.csv"
+    tgt.write_bytes(b"k,w\n1,9\n")
+    engine.session_add_datasource("cachetbl", [
+        {"format": "json", "name": "src", "location": str(doc)},
+        {"format": "csv", "name": "tgt", "location": str(tgt)},
+    ])
+    engine.session_merge("cachetbl", {"mergeProcessors": [{
+        "direction": "column", "baseTable": "src",
+        "targets": [{"table": "tgt", "baseKeys": ["k"], "targetKeys": ["k"]}],
+    }]})
+    engine.session_query("cachetbl", {"sql": "CACHE TABLE w AS SELECT 5 AS b"})
+    engine.session_query("cachetbl", {"sql": "SELECT * FROM src"})
+    assert not cache_manager.isEmpty()
+    engine.sessions.delete("cachetbl")
+    assert cache_manager.isEmpty()
+
+
 def test_insert_into_session_view(spark, tmp_path):
     from datafusion_server_spark.server.api import Engine
 
@@ -568,9 +625,8 @@ def test_insert_into_session_view(spark, tmp_path):
 
 
 def test_insert_unpersists_previous_cache(spark, tmp_path):
-    """Each INSERT re-registers a persisted union; the PREVIOUS insert's
-    persisted plan must be unpersisted or a long-lived session pins one
-    cached plan per INSERT."""
+    """Each INSERT re-registers the view as a lazy union: a long-lived
+    session doing N INSERTs must not pin one cached plan per INSERT."""
     from datafusion_server_spark.server.api import Engine
 
     engine = Engine(spark, start_reaper=False)
@@ -590,7 +646,7 @@ def test_insert_unpersists_previous_cache(spark, tmp_path):
         engine._query(sess, f"INSERT INTO lt VALUES ({i + 10})").collect()
         # force materialization of the current persisted view plan
         engine._query(sess, "SELECT COUNT(*) AS n FROM lt").collect()
-    # only the CURRENT union may stay cached; the two earlier ones are freed
+    # at most the CURRENT view may be cached; earlier unions never are
     assert materialized_rdds() - base <= 1
     assert engine._query(sess, "SELECT COUNT(*) AS n FROM lt").collect()[0]["n"] == 4
     engine.sessions.delete("insleak")

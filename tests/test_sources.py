@@ -5,6 +5,7 @@ import json
 import pyarrow as pa
 import pytest
 
+from datafusion_server_spark.session import ServerSession
 from datafusion_server_spark.sources import plugins, readers
 from datafusion_server_spark.sources.readers import ReadOptions
 from datafusion_server_spark.sources.registry import DataSource, register
@@ -66,7 +67,7 @@ def test_registry_csv_roundtrip(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_bytes(CSV)
     ds = DataSource.from_json({"format": "csv", "name": "reg_csv_t", "location": str(p)})
-    register(spark, ds)
+    register(ServerSession("reg", spark), ds)
     assert spark.sql("SELECT COUNT(*) AS n FROM reg_csv_t").collect()[0]["n"] == 3
 
 
@@ -85,7 +86,7 @@ def test_connector_plugin(spark):
         ds = DataSource.from_json(
             {"format": "json", "name": "plugged", "location": "fake://hostish/p"}
         )
-        register(spark, ds)
+        register(ServerSession("reg", spark), ds)
         rows = spark.sql("SELECT * FROM plugged ORDER BY x").collect()
         assert [r["x"] for r in rows] == [1, 2, 3]
         assert rows[0]["who"] == "hostish"
