@@ -373,9 +373,9 @@ def main() -> None:
     # per-round record. Streaming jobs pay checkpoint + micro-batch
     # orchestration, so they are timed once (not min-of-3) and kept OUT of
     # the headline total — the DuckDB proxy has no streaming analog.
-    # Round 5 adds the new extension families (graph / DSIR / anomaly)
-    # as batch secondary rows — informational visibility, still outside
-    # the pinned headline set so the cross-round series stays comparable.
+    # The batch rows below are informational too: timed once and kept out
+    # of the pinned headline set, so adding a row here never moves the
+    # headline total or its DuckDB ratio.
     SECONDARY = [
         "streaming_session_window_native",
         "streaming_stream_stream_join",
@@ -383,30 +383,24 @@ def main() -> None:
         "sample_dsir_topk",
         "timeseries_anomaly_zscore",
         "pipeline_web_ingest",
-        # round-6 families (informational, non-pinned)
         "multimodal_webdataset_ingest",
         "chat_prompt_response_pairs",
         "eval_bradley_terry_sources",
         "embedding_abtt_renorm",
-        # round-7 families (informational, non-pinned)
         "similarity_mmr_select",
         "dedup_cdc_chunks",
         "prune_ccnet_perplexity_band",
         "mine_hard_negatives",
         "merge_apply_changeset",
         "sample_greedy_quality_budget",
-        # round-9 families (informational, non-pinned)
         "dedup_survivors_keep_longest",
         "weak_label_vote",
         "window_groups_exclude_minmax",
         "text_span_corruption",
-        # round-10 families (informational, non-pinned)
         "window_groups_exclude_stddev",
-        # round-11 families (informational, non-pinned)
         "prune_c4_rules",
         "prune_repetition_rules",
         "window_groups_offset_multi_star",
-        # round-12 families (informational, non-pinned)
         "window_groups_multi_star_collide",
         "window_groups_exclude_array_agg",
         "window_groups_using_join",
@@ -460,8 +454,8 @@ def main() -> None:
                 "queries_secondary": secondary,
                 "secondary_note": (
                     "non-headline rows, timed once, excluded from the headline "
-                    "total: streaming (no DuckDB analog) + round-5 extension "
-                    "families (graph/DSIR/anomaly/web-ingest)"
+                    "total: streaming (no DuckDB analog) + informational batch "
+                    "rows"
                 ),
             }
         ),

@@ -373,7 +373,6 @@ class Engine:
         ds = source_registry.DataSource.from_json(
             {"format": fmt, "name": name, "location": readers.stage_bytes(data, suffix)}
         )
-        ds.options.infer_schema_rows = readers.UPLOAD_INFER_ROWS
         source_registry.register(sess, ds)
 
     def session_save(self, session_id: str, payload: dict) -> None:

@@ -17,7 +17,8 @@ row-by-row in Python. The reference materializes remote sources eagerly
 into memory (session.rs:248-253); our equivalent is ``persist()`` at
 registration time, which the registry applies. Only the JSONPath shim
 touches Python, and only on the (bounded, <=20 MB upload limit) document
-it extracts from.
+it extracts from. Every schema-inferring read goes through ``_load``, which
+infers each local file's schema once (see the schema cache below).
 """
 
 from __future__ import annotations
@@ -25,25 +26,29 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import stat
 import tempfile
+import threading
+import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from datafusion_server_spark.schema import to_struct_type
 from datafusion_server_spark.sources import jsonpath as jp
 
-DEFAULT_INFER_ROWS = 100  # reference default: lib/src/request/body.rs:52
-UPLOAD_INFER_ROWS = 1000  # reference: lib/src/context/session.rs:309
-
 
 @dataclass
 class ReadOptions:
-    """Per-source options (reference lib/src/request/body.rs:22-57)."""
+    """Per-source options (reference lib/src/request/body.rs:22-57).
+    ``inferSchemaRows`` is accepted (it stays in ``extra``) and ignored:
+    Spark infers over the whole file, see ``read_csv``."""
 
     has_header: bool = True
     delimiter: str = ","
-    infer_schema_rows: int = DEFAULT_INFER_ROWS
     json_path: str | None = None
     require_normalize: bool = False
     schema_json: dict | None = None  # explicit DataSourceSchema
@@ -55,7 +60,6 @@ class ReadOptions:
         return ReadOptions(
             has_header=bool(p.get("hasHeader", True)),
             delimiter=str(p.get("delimiter", ",")),
-            infer_schema_rows=int(p.get("inferSchemaRows", DEFAULT_INFER_ROWS)),
             json_path=p.get("jsonPath"),
             require_normalize=bool(p.get("requireNormalize", False)),
             extra={k: v for k, v in p.items()},
@@ -66,22 +70,116 @@ class ReadOptions:
 
 
 _STAGE_DIR: str | None = None
+_STAGE_LOCK = threading.Lock()
 
 
 def stage_bytes(data: bytes, suffix: str) -> str:
     """Spill request bytes to a content-addressed staging file so repeated
-    registrations of the same payload reuse one file."""
+    registrations of the same payload reuse one file (and its cached
+    schema). Each writer fills its own temp file and renames it into
+    place, so concurrent stagings of the same bytes never share a file."""
     global _STAGE_DIR
-    if _STAGE_DIR is None:
-        _STAGE_DIR = tempfile.mkdtemp(prefix="dfss-stage-")
-    name = hashlib.md5(data).hexdigest() + suffix
-    path = os.path.join(_STAGE_DIR, name)
+    with _STAGE_LOCK:
+        if _STAGE_DIR is None:
+            _STAGE_DIR = tempfile.mkdtemp(prefix="dfss-stage-")
+        stage_dir = _STAGE_DIR
+    path = os.path.join(stage_dir, hashlib.md5(data).hexdigest() + suffix)
     if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        fd, tmp = tempfile.mkstemp(dir=stage_dir)
+        try:
+            with os.fdopen(fd, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     return path
+
+
+# -- schema cache --------------------------------------------------------------
+#
+# Schema inference reads the files on every registration: one Spark job for
+# Parquet and JSON, two for CSV. The cache maps what inference depends on
+# to the StructType it gave: the format and reader options, the session's
+# SQL conf, and the identity (path, inode, size, mtime, ctime) of the file
+# or of every entry of the directory tree Spark lists. Any rewrite,
+# re-creation or utime changes a ctime, so a changed file misses instead
+# of being evicted.
+
+SCHEMA_CACHE_ENTRIES = 256
+# Racy-timestamp rule (as in git's index): a tree whose newest ctime is
+# younger than this is never cached, so a rewrite inside the filesystem's
+# timestamp granularity cannot leave the key unchanged.
+RACY_WINDOW_NS = 1_000_000_000
+# Spark would read these as a glob, an escape or a URI part, not the path
+# os.stat sees.
+_UNCACHED_CHARS = frozenset("*?[]{}\\%#;")
+
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _stat_tree(path: str, out: list) -> None:
+    st = os.stat(path)
+    out.append((path, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns))
+    if stat.S_ISDIR(st.st_mode):
+        for name in sorted(os.listdir(path)):
+            child = os.path.join(path, name)
+            if os.path.islink(child) and os.path.isdir(child):
+                # not walked (it may loop), so a change inside would go unseen
+                raise OSError(f"symlinked directory: {child}")
+            _stat_tree(child, out)
+
+
+def _file_identity(location: str) -> tuple | None:
+    """The identity of every entry under ``location``, or None when the
+    location is not cacheable: not an absolute ``""``/``file`` path that
+    os.stat can see as Spark will, or changed inside the racy window."""
+    u = urlparse(location)
+    if u.scheme == "":
+        path = location
+    elif u.scheme == "file" and not (u.netloc or u.params or u.query or u.fragment):
+        path = u.path
+    else:
+        return None
+    if not os.path.isabs(path) or _UNCACHED_CHARS.intersection(path):
+        return None
+    entries: list = []
+    try:
+        _stat_tree(path, entries)
+    except OSError:
+        return None
+    if max(e[4] for e in entries) > time.time_ns() - RACY_WINDOW_NS:
+        return None
+    return tuple(entries)
+
+
+def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | None,
+          **options: str) -> DataFrame:
+    """Read ``location`` as ``fmt`` with ``options``. With no explicit
+    ``schema`` the schema comes from the cache, or is inferred as Spark
+    does and stored."""
+    reader = spark.read.format(fmt).options(**options)
+    if schema is not None:
+        return reader.schema(schema).load(location)
+    files = _file_identity(location)
+    if files is None:
+        return reader.load(location)
+    conf = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    key = (fmt, tuple(sorted(options.items())), conf, files)
+    with _schemas_lock:
+        cached = _schemas.get(key)
+        if cached is not None:
+            _schemas.move_to_end(key)
+    if cached is not None:
+        return reader.schema(cached).load(location)
+    df = reader.load(location)
+    inferred = df.schema
+    with _schemas_lock:
+        _schemas[key] = inferred
+        if len(_schemas) > SCHEMA_CACHE_ENTRIES:
+            _schemas.popitem(last=False)
+    return df
 
 
 def fetch(uri: str, timeout: float = 30.0) -> bytes:
@@ -96,29 +194,19 @@ def fetch(uri: str, timeout: float = 30.0) -> bytes:
 def read_csv(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".csv")
-    reader = (
-        spark.read.option("header", str(opts.has_header).lower())
-        .option("sep", opts.delimiter)
-    )
-    schema = opts.spark_schema()
-    if schema is not None:
-        return reader.schema(schema).csv(path_or_bytes)
     # infer-N semantics: Spark's inferSchema samples the whole file; the
     # reference samples the first N rows. Files on this path are bounded
     # (upload limit), so whole-file inference is a superset — schema
     # differences only arise when later rows widen a column, which the
     # reference would have gotten wrong anyway.
-    return reader.option("inferSchema", "true").csv(path_or_bytes)
+    return _load(spark, "csv", path_or_bytes, opts.spark_schema(),
+                 header=str(opts.has_header).lower(), sep=opts.delimiter, inferSchema="true")
 
 
 def read_ndjson(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".ndjson")
-    reader = spark.read
-    schema = opts.spark_schema()
-    if schema is not None:
-        return reader.schema(schema).json(path_or_bytes)
-    return reader.json(path_or_bytes)
+    return _load(spark, "json", path_or_bytes, opts.spark_schema())
 
 
 def read_json_array(spark: SparkSession, data: str | bytes, opts: ReadOptions) -> DataFrame:
@@ -136,17 +224,13 @@ def read_json_array(spark: SparkSession, data: str | bytes, opts: ReadOptions) -
         return read_ndjson(spark, stage_bytes(ndjson, ".ndjson"), opts)
     # top-level array: Spark's multiLine JSON reader handles it natively
     path = stage_bytes(text.encode(), ".json")
-    reader = spark.read.option("multiLine", "true")
-    schema = opts.spark_schema()
-    if schema is not None:
-        return reader.schema(schema).json(path)
-    return reader.json(path)
+    return _load(spark, "json", path, opts.spark_schema(), multiLine="true")
 
 
 def read_parquet(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".parquet")
-    return spark.read.parquet(path_or_bytes)
+    return _load(spark, "parquet", path_or_bytes, None)
 
 
 def read_orc(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions) -> DataFrame:
@@ -155,4 +239,4 @@ def read_orc(spark: SparkSession, path_or_bytes: str | bytes, opts: ReadOptions)
     parquet — predicate pushdown, column pruning, vectorized read)."""
     if isinstance(path_or_bytes, bytes):
         path_or_bytes = stage_bytes(path_or_bytes, ".orc")
-    return spark.read.orc(path_or_bytes)
+    return _load(spark, "orc", path_or_bytes, None)
