@@ -13,7 +13,8 @@ Reference semantics (/root/reference/lib/src/context/session.rs:550-656):
   source tables afterwards (session_manager.rs:654-681).
 - materialization (session.rs:646-652): the merged result is collected and
   re-registered in-memory — Spark-side it is persisted instead of
-  collected to the driver, which is the 100 TB-safe equivalent.
+  collected to the driver, which is the 100 TB-safe equivalent (a
+  stateless one-shot, which reads it once, skips the persist).
 
 Scale notes: each column-merge join is a plain equi-join, so Catalyst/AQE
 pick broadcast vs shuffled strategies from observed sizes; nothing here
@@ -121,11 +122,17 @@ def merge_row(base: DataFrame, targets: list[DataFrame], *, distinct: bool = Fal
     return merged.distinct() if distinct else merged
 
 
-def execute_merge(sess: ServerSession, proc: MergeProcessor) -> DataFrame:
+def execute_merge(sess: ServerSession, proc: MergeProcessor, *, persist: bool = True) -> DataFrame:
     """Run one merge processor against the ``ServerSession``'s views,
-    register the persisted result under the base table's name, and with
+    register the result under the base table's name, and with
     ``removeAfterMerged`` drop the merged-in tables from the session
-    (reference session.rs:646-652 + session_manager.rs:654-681)."""
+    (reference session.rs:646-652 + session_manager.rs:654-681).
+
+    The result is persisted for a named session, which may query it many
+    times. A stateless one-shot reads it once, so it passes
+    ``persist=False``: building the cache cost it more than the cache
+    saved (perfbench ``oneshot`` under the small plan, 4 cores, 10
+    interleaved pairs: p50 363 -> 303 ms, 8 wins)."""
     spark = sess.spark
     base = spark.table(proc.base_table)
     if proc.direction == "column":
@@ -136,7 +143,7 @@ def execute_merge(sess: ServerSession, proc: MergeProcessor) -> DataFrame:
             base, [spark.table(t) for t in proc.target_tables], distinct=proc.distinct
         )
         merged_in = list(proc.target_tables)
-    sess.register(proc.base_table, merged, cache=True)
+    sess.register(proc.base_table, merged, cache=persist)
     if proc.remove_after_merged:
         for name in merged_in:
             sess.remove(name)

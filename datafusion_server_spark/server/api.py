@@ -21,7 +21,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_server_spark.functions.dialect import transpile
+from datafusion_server_spark.functions.dialect import find_table_at_namespace, transpile
 from datafusion_server_spark.operators.merge import MergeProcessor, execute_merge
 from datafusion_server_spark.operators import postprocess
 from datafusion_server_spark.server import encoders
@@ -29,7 +29,9 @@ from datafusion_server_spark.session import (
     STATELESS_KEEP_ALIVE_S,
     ServerSession,
     SessionManager,
+    plan_conf,
 )
+from datafusion_server_spark.sources import readers
 from datafusion_server_spark.sources import registry as source_registry
 
 
@@ -164,6 +166,10 @@ class Metrics:
         return "\n".join(lines) + "\n"
 
 
+def _parse_sources(payloads: list[dict] | None) -> list[source_registry.DataSource]:
+    return [source_registry.DataSource.from_json(p) for p in payloads or []]
+
+
 class Engine:
     def __init__(
         self,
@@ -234,16 +240,15 @@ class Engine:
 
     # -- shared steps ------------------------------------------------------
 
-    def _ingest(self, sess: ServerSession, data_sources: list[dict]) -> None:
-        for payload in data_sources or []:
-            ds = source_registry.DataSource.from_json(payload)
+    def _ingest(self, sess: ServerSession, data_sources: list[source_registry.DataSource]) -> None:
+        for ds in data_sources:
             source_registry.register(sess, ds)
             scheme = ds.location.split("://", 1)[0] if "://" in ds.location else "file"
             self.metrics.track_data_source(scheme, ds.format)
 
-    def _merges(self, sess: ServerSession, processor: dict | None) -> None:
+    def _merges(self, sess: ServerSession, processor: dict | None, *, persist: bool = True) -> None:
         for spec in (processor or {}).get("mergeProcessors", []) or []:
-            execute_merge(sess, MergeProcessor.from_json(spec))
+            execute_merge(sess, MergeProcessor.from_json(spec), persist=persist)
 
     _INSERT_RE = re.compile(
         r"\s*INSERT\s+INTO\s+(?P<name>`[^`]+`|\w+)\s+(?P<rest>.+)", re.I | re.S
@@ -297,16 +302,37 @@ class Engine:
 
     # -- entry points ------------------------------------------------------
 
+    @staticmethod
+    def _input_bytes(sources: list[source_registry.DataSource], sql: str) -> int | None:
+        """Total bytes a one-shot reads, or None when that is unknown: no
+        dataSources, a ``table@namespace`` relation, or a source that is
+        not a local file tree (``readers.local_bytes``)."""
+        if not sources or find_table_at_namespace(sql):
+            return None
+        total = 0
+        for ds in sources:
+            size = readers.local_bytes(ds.location)
+            if size is None:
+                return None
+            total += size
+        return total
+
     @contextmanager
     def _oneshot(self, payload: dict):
         """Stateless session around one request: create (keepAlive
-        60 s), ingest dataSources, run merge processors and the query;
-        yields the query's DataFrame and destroys the session on exit."""
-        sess = self.sessions.create(keep_alive_s=STATELESS_KEEP_ALIVE_S)
+        60 s) with the plan its input sizes pick (``session.plan_conf``),
+        ingest dataSources, run merge processors (unpersisted: the query
+        reads each result once) and the query; yields the query's
+        DataFrame and destroys the session on exit."""
+        sources = _parse_sources(payload.get("dataSources"))
+        sess = self.sessions.create(
+            keep_alive_s=STATELESS_KEEP_ALIVE_S,
+            conf=plan_conf(self._input_bytes(sources, payload.get("query", ""))),
+        )
         self.metrics.track_session_context()
         try:
-            self._ingest(sess, payload.get("dataSources", []))
-            self._merges(sess, payload.get("processor"))
+            self._ingest(sess, sources)
+            self._merges(sess, payload.get("processor"), persist=False)
             yield self._query(sess, payload["query"])
         finally:
             try:
@@ -339,8 +365,7 @@ class Engine:
 
     def session_add_datasource(self, session_id: str, payload: Any) -> list[str]:
         sess = self.sessions.get(session_id)
-        sources = payload if isinstance(payload, list) else [payload]
-        self._ingest(sess, sources)
+        self._ingest(sess, _parse_sources(payload if isinstance(payload, list) else [payload]))
         return sorted(sess.data_sources)
 
     def session_merge(self, session_id: str, payload: dict) -> None:
@@ -365,8 +390,6 @@ class Engine:
     def session_upload(self, session_id: str, name: str, fmt: str, data: bytes) -> None:
         """Multipart upload ingest (reference A23): the HTTP layer resolves
         each field's format; here the bytes are staged and registered."""
-        from datafusion_server_spark.sources import readers
-
         sess = self.sessions.get(session_id)
         suffix = {"csv": ".csv", "json": ".json", "ndjson": ".ndjson",
                   "parquet": ".parquet", "avro": ".avro"}[fmt]
@@ -433,6 +456,13 @@ class Engine:
 
     def refresh_data_source(self, session_id: str, name: str) -> None:
         """Re-read the source with all of its options (reference
-        session_manager.rs:474-488)."""
+        session_manager.rs:474-488). A table uploaded through Flight
+        ``do_put`` has no location to re-read: that is a client error."""
         sess = self.sessions.get(session_id)
-        source_registry.register(sess, sess.data_sources[name])
+        ds = sess.data_sources[name]
+        if ds.format == "flight" and not ds.location:
+            raise source_registry.DataSourceError(
+                f"dataSource {name!r} was uploaded through Flight do_put and has "
+                f"no location to re-read; upload it again to replace it"
+            )
+        source_registry.register(sess, ds)

@@ -9,8 +9,16 @@ SQLConf over a shared SparkContext; a reaper thread enforces TTL
 3600 s at lib/src/settings.rs:211).
 
 Scale notes (100 TB / 1000-executor design):
-- AQE on: runtime join-strategy switching, skew-join splitting, and
-  partition coalescing replace any hand-tuned physical planning.
+- Two plans, chosen per session at create from exact input sizes. A
+  stateless one-shot whose inputs are all local file trees totalling
+  less than ``SMALL_INPUT_BYTES`` runs ``SMALL_PLAN_CONF``: AQE off and
+  one shuffle partition, so each query is one or two Spark jobs instead
+  of a job per exchange. Every other session (named sessions, one-shots
+  with no sources, ``table@ns`` relations, remote, glob or larger
+  inputs) runs ``SERVING_CONF``.
+- Under ``SERVING_CONF``, AQE on: runtime join-strategy switching,
+  skew-join splitting, and partition coalescing replace any hand-tuned
+  physical planning.
 - ``spark.sql.shuffle.partitions`` is a *default*; AQE coalesces down for
   small stages and the operators in this package repartition up for large
   ones, so the same code runs at sf0.001 and at 100 TB.
@@ -36,15 +44,36 @@ DEFAULT_KEEP_ALIVE_S = 3600  # reference default: lib/src/settings.rs:211
 STATELESS_KEEP_ALIVE_S = 60  # reference: lib/src/response/handler/dataframe.rs:28-31
 REAPER_INTERVAL_S = 1.0  # reference: lib/src/server/interval_worker.rs:28-30
 
-# SQLConf every server session gets at create. newSession() takes its
-# SQLConf from the STATIC SparkConf, so the root's runtime conf does not
-# carry over: a root run with AQE off (the single-stream batch bench)
-# still serves with AQE and partition coalescing on, which measured
-# better for concurrent requests at every shuffle width (PLANS.md).
+# SQLConf a server session gets at create unless it is a known-small
+# one-shot (``plan_conf``). newSession() takes its SQLConf from the
+# STATIC SparkConf, so the root's runtime conf does not carry over: a
+# root run with AQE off (the single-stream batch bench) still serves
+# with AQE and partition coalescing on, which measured better for
+# concurrent requests at every shuffle width of the root (PLANS.md).
 SERVING_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
 }
+# A one-shot whose inputs are all local file trees of fewer bytes than
+# this plans with SMALL_PLAN_CONF: AQE off and one shuffle partition.
+# On such inputs AQE re-plans nothing, but costs a Spark job per
+# exchange (and a range sort a sampling job). Set from the size sweep
+# in PLANS.md ("Verdict task 3"): at 4 cores every shape measured was
+# faster or within 5% up to 5 MB, but at 10 MB a single-stream
+# high-cardinality aggregate ran 40% slower on one partition.
+SMALL_INPUT_BYTES = 4 * 1024 * 1024
+SMALL_PLAN_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+}
+
+
+def plan_conf(input_bytes: int | None) -> dict[str, str]:
+    """The SQLConf for a one-shot reading ``input_bytes`` in total
+    (None: some input's size is unknown)."""
+    if input_bytes is not None and input_bytes < SMALL_INPUT_BYTES:
+        return SMALL_PLAN_CONF
+    return SERVING_CONF
 
 
 def default_parallelism() -> int:
@@ -203,15 +232,21 @@ class SessionManager:
         if start_reaper:
             self.start_reaper()
 
-    def create(self, session_id: str | None = None, keep_alive_s: int = DEFAULT_KEEP_ALIVE_S) -> ServerSession:
+    def create(
+        self,
+        session_id: str | None = None,
+        keep_alive_s: int = DEFAULT_KEEP_ALIVE_S,
+        conf: dict[str, str] = SERVING_CONF,
+    ) -> ServerSession:
         """A fresh ``newSession()`` per server session — its own temp-view
         catalog, temp functions and SQLConf, so nothing one tenant runs
-        (``CREATE TEMPORARY VIEW``, ``SET``) is visible to the next."""
+        (``CREATE TEMPORARY VIEW``, ``SET``) is visible to the next.
+        ``conf`` is applied before anything is read or planned."""
         from datafusion_server_spark.functions.dialect import register_session_functions
 
         sid = session_id or uuid.uuid4().hex
         spark = self._root.newSession()
-        for k, v in SERVING_CONF.items():
+        for k, v in conf.items():
             spark.conf.set(k, v)
         # dialect-shim SQL functions (regexp_match first-match semantics
         # etc.) live in the per-session temp-function catalog

@@ -101,10 +101,10 @@ def stage_bytes(data: bytes, suffix: str) -> str:
 # Schema inference reads the files on every registration: one Spark job for
 # Parquet and JSON, two for CSV. The cache maps what inference depends on
 # to the StructType it gave: the format and reader options, the session's
-# SQL conf, and the identity (path, inode, size, mtime, ctime) of the file
-# or of every entry of the directory tree Spark lists. Any rewrite,
-# re-creation or utime changes a ctime, so a changed file misses instead
-# of being evicted.
+# SQL conf, and the identity (path, mode, inode, size, mtime, ctime) of
+# the file or of every entry of the directory tree Spark lists. Any
+# rewrite, re-creation or utime changes a ctime, so a changed file misses
+# instead of being evicted.
 
 SCHEMA_CACHE_ENTRIES = 256
 # Racy-timestamp rule (as in git's index): a tree whose newest ctime is
@@ -121,7 +121,7 @@ _schemas_lock = threading.Lock()
 
 def _stat_tree(path: str, out: list) -> None:
     st = os.stat(path)
-    out.append((path, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns))
+    out.append((path, st.st_mode, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns))
     if stat.S_ISDIR(st.st_mode):
         for name in sorted(os.listdir(path)):
             child = os.path.join(path, name)
@@ -131,10 +131,9 @@ def _stat_tree(path: str, out: list) -> None:
             _stat_tree(child, out)
 
 
-def _file_identity(location: str) -> tuple | None:
-    """The identity of every entry under ``location``, or None when the
-    location is not cacheable: not an absolute ``""``/``file`` path that
-    os.stat can see as Spark will, or changed inside the racy window."""
+def _local_tree(location: str) -> list | None:
+    """``_stat_tree`` of ``location``, or None when it is not an absolute
+    ``""``/``file`` path that os.stat can see as Spark will."""
     u = urlparse(location)
     if u.scheme == "":
         path = location
@@ -149,9 +148,27 @@ def _file_identity(location: str) -> tuple | None:
         _stat_tree(path, entries)
     except OSError:
         return None
-    if max(e[4] for e in entries) > time.time_ns() - RACY_WINDOW_NS:
+    return entries
+
+
+def _file_identity(location: str) -> tuple | None:
+    """The identity of every entry under ``location``, or None when the
+    location is not cacheable: not a local tree (``_local_tree``), or
+    changed inside the racy window."""
+    entries = _local_tree(location)
+    if entries is None or max(e[5] for e in entries) > time.time_ns() - RACY_WINDOW_NS:
         return None
     return tuple(entries)
+
+
+def local_bytes(location: str) -> int | None:
+    """Bytes of the files under ``location``, or None when it is not a
+    local tree (``_local_tree``). The racy window does not apply: the
+    size only picks a plan (``session.plan_conf``)."""
+    entries = _local_tree(location)
+    if entries is None:
+        return None
+    return sum(e[3] for e in entries if not stat.S_ISDIR(e[1]))
 
 
 def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | None,

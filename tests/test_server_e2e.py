@@ -393,6 +393,48 @@ def test_flight_do_put_do_get(engine):
     assert 'flight_requests_duration_seconds_bucket{method="do_get",status="ok",le="+Inf"}' in text
 
 
+def test_refresh_flight_upload_is_client_error(engine, base_url):
+    """A table uploaded through do_put has no location to re-read: a
+    refresh answers 400 naming the cause, and the table stays."""
+    fl = pytest.importorskip("pyarrow.flight")
+    from datafusion_server_spark.server.flight import serve as flight_serve
+    from datafusion_server_spark.sources.registry import DataSourceError
+
+    server = flight_serve(engine, "grpc://127.0.0.1:0")
+    engine.session_create("flrefresh", 600)
+    try:
+        client = fl.FlightClient(f"grpc://127.0.0.1:{server.port}")
+        table = pa.table({"a": [1, 2, 3]})
+        writer, _ = client.do_put(fl.FlightDescriptor.for_path("flrefresh", "up"), table.schema)
+        writer.write_table(table)
+        writer.close()
+        with pytest.raises(DataSourceError, match="uploaded through Flight do_put"):
+            engine.refresh_data_source("flrefresh", "up")
+        r = requests.get(f"{base_url}/session/flrefresh/datasource/up/refresh")
+        assert r.status_code == 400 and "do_put" in r.json()["message"]
+        assert engine.sessions.get("flrefresh").spark.table("up").count() == 3
+    finally:
+        server.shutdown()
+        engine.sessions.delete("flrefresh")
+
+
+def test_prewarm_compiles_both_plans(engine, monkeypatch):
+    """Boot pre-warm drives both one-shot plans: the synthetic no-source
+    queries run SERVING_CONF, the tiny parquet query the small plan."""
+    from datafusion_server_spark.session import SERVING_CONF, SMALL_PLAN_CONF
+
+    confs = []
+    create = engine.sessions.create
+
+    def recording_create(*args, **kwargs):
+        confs.append(kwargs.get("conf"))
+        return create(*args, **kwargs)
+
+    monkeypatch.setattr(engine.sessions, "create", recording_create)
+    engine.prewarm()
+    assert SERVING_CONF in confs and SMALL_PLAN_CONF in confs
+
+
 def test_flight_do_get_table_at_namespace(spark, tmp_path):
     """Flight tickets take the same SQL entry as REST: the
     ``table@namespace`` pre-pass registers a configured database table
