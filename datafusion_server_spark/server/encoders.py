@@ -13,13 +13,17 @@ incremental (reference lib/src/response/format/* + record_batch_stream.rs).
 
 from __future__ import annotations
 
+import csv as _csv
 import io
 import itertools
 import json
+import math
 from collections.abc import Iterator
 from typing import Any
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.csv as pacsv
 from pyspark.sql import DataFrame
 
 CONTENT_TYPES = {
@@ -27,6 +31,9 @@ CONTENT_TYPES = {
     "csv": "text/csv",
     "arrow": "application/vnd.apache.arrow.stream",
 }
+# Rows per JSON text batch: bounds each batch's text under the 2 GiB
+# of Arrow's int32 string offsets for rows up to 32 KB of JSON.
+JSON_BATCH_ROWS = 65536
 
 
 def negotiate_format(body_format: str | None, accept: str | None) -> str:
@@ -56,21 +63,128 @@ def _json_default(v: Any):
     return str(v)
 
 
+def _finite(v: Any) -> Any:
+    """``v`` with every non-finite float inside it replaced by None."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    if isinstance(v, dict):
+        return {k: _finite(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_finite(x) for x in v]
+    return v
+
+
+def _has_control(col: pa.Array) -> bool:
+    """Whether a string holds a character JSON must escape as ``\\u``;
+    the cheap printable test clears most columns without the regex."""
+    return not pc.all(pc.utf8_is_printable(col)).as_py() \
+        and bool(pc.any(pc.match_substring_regex(col, r"[\x00-\x1f]")).as_py())
+
+
+def _json_text(col: pa.Array) -> pa.Array:
+    """Each cell of ``col`` as JSON text, nulls as ``null``. Per-cell
+    ``json.dumps`` only for the types ``to_json_array`` names."""
+    t = col.type
+    if pa.types.is_integer(t) or pa.types.is_boolean(t) or pa.types.is_decimal(t) \
+            or pa.types.is_null(t):
+        text = pc.cast(col, pa.string())
+    elif pa.types.is_floating(t):
+        # Arrow prints 23.0 as "23"; keep the float form so a reader
+        # does not take the column for integers
+        text = pc.replace_substring_regex(pc.cast(col, pa.string()), r"^(-?[0-9]+)$", r"\1.0")
+        text = pc.if_else(pc.is_finite(col), text, pa.scalar(None, pa.string()))
+    elif pa.types.is_string(t) and not _has_control(col):
+        for char in ("\\", '"'):
+            if pc.any(pc.match_substring(col, char)).as_py():
+                col = pc.replace_substring(col, char, "\\" + char)
+        text = pc.binary_join_element_wise('"', col, '"', "")
+    else:
+        return pa.array([json.dumps(_finite(v), default=_json_default) for v in col.to_pylist()],
+                        pa.string())
+    return pc.fill_null(text, "null")
+
+
 def to_json_array(table: pa.Table) -> bytes:
-    return json.dumps(table.to_pylist(), default=_json_default).encode()
+    """The table as a JSON array of objects, one per row, built column by
+    column with Arrow kernels, one record batch at a time:
+
+    - integers, booleans and decimals print as Arrow casts them to string;
+    - floats keep their float form (``23.0``); NaN and infinities are
+      ``null``;
+    - strings are escaped and quoted;
+    - nulls are ``null``.
+
+    Only these columns take a per-cell ``json.dumps`` (dates and times in
+    ISO form, binary as hex, non-finite floats as ``null``): temporal,
+    binary, nested (list, struct, map) and other types not above, and
+    ``string`` columns that hold a control character."""
+    keys = [json.dumps(name) + ":" for name in table.column_names]
+    heads = ["{" + k for k in keys[:1]] + ["," + k for k in keys[1:]]
+    pieces: list = [b"["]
+    for batch in table.to_batches(max_chunksize=JSON_BATCH_ROWS):
+        if not batch.num_rows:
+            continue
+        if not keys:
+            pieces.append(b"{}," * batch.num_rows)
+            continue
+        parts = [x for head, col in zip(heads, batch.columns) for x in (head, _json_text(col))]
+        rows = pc.binary_join_element_wise(*parts, "},", "")
+        _, offsets, data = rows.buffers()
+        offsets = pa.Array.from_buffers(pa.int32(), len(rows) + 1, [None, offsets], offset=rows.offset)
+        pieces.append(data[offsets[0].as_py():offsets[-1].as_py()])
+    if len(pieces) > 1:
+        pieces[-1] = pieces[-1][:-1]  # the last row's comma
+    pieces.append(b"]")
+    return b"".join(pieces)
+
+
+def _csv_ready(col: pa.ChunkedArray) -> pa.ChunkedArray | pa.Array:
+    """``col`` in a type ``pyarrow.csv.write_csv`` prints. Per-cell text
+    only for binary (hex), nested (list, struct, map) and other types
+    outside numbers, booleans, strings, dates and timestamps."""
+    t = col.type
+    if (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t)
+            or pa.types.is_boolean(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_null(t) or pa.types.is_date(t) or pa.types.is_timestamp(t)):
+        return col
+    return pa.array([None if v is None else v.hex() if isinstance(v, bytes) else str(v)
+                     for v in col.to_pylist()], pa.string())
+
+
+def _write_csv(body: pa.Table, quoting: str, delimiter: str) -> bytes:
+    out = pa.BufferOutputStream()
+    pacsv.write_csv(body, out, pacsv.WriteOptions(
+        include_header=False, quoting_style=quoting, delimiter=delimiter))
+    return out.getvalue().to_pybytes()
 
 
 def to_csv(table: pa.Table, *, has_headers: bool = True, delimiter: str = ",") -> bytes:
-    import csv as _csv
-
-    buf = io.StringIO()
-    writer = _csv.writer(buf, delimiter=delimiter)
+    """The table as CSV with ``\\n`` line ends. The header is written
+    here, each name quoted only where needed; the body by
+    ``pyarrow.csv.write_csv`` with no quoting, or, when some value holds
+    the delimiter, a quote or a line break, with every string quoted.
+    A null is an empty field; binary cells print as hex."""
+    head = io.StringIO()
     if has_headers:
-        writer.writerow(table.column_names)
-    cols = [table.column(c).to_pylist() for c in table.column_names]
-    for i in range(table.num_rows):
-        writer.writerow([cols[j][i] for j in range(len(cols))])
-    return buf.getvalue().encode()
+        _csv.writer(head, delimiter=delimiter, lineterminator="\n").writerow(table.column_names)
+    columns = [_csv_ready(c) for c in table.columns]
+    if delimiter.isalnum() or delimiter in "+-.: ":
+        # Arrow looks for the delimiter in strings only; one a number, date
+        # or boolean can print makes every column a string to be checked
+        columns = [pc.cast(c, pa.string()) for c in columns]
+    body = pa.table(columns, names=[str(i) for i in range(len(columns))])
+    try:
+        out = _write_csv(body, "none", delimiter)
+        if body.num_columns == 1:
+            # an empty value would be an empty line, which readers skip:
+            # write it as "", as the csv module does
+            out = out.replace(b"\n\n", b'\n""\n').replace(b"\n\n", b'\n""\n')
+            out = b'""' + out if out.startswith(b"\n") else out
+    except pa.ArrowInvalid:
+        if body.num_columns == 1:  # a string column: its nulls become ""
+            body = pa.table([pc.fill_null(columns[0], "")], names=["0"])
+        out = _write_csv(body, "needed", delimiter)
+    return head.getvalue().encode() + out
 
 
 def to_arrow_ipc(table: pa.Table) -> bytes:

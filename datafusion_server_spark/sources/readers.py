@@ -26,6 +26,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import stat
 import tempfile
 import threading
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from datafusion_server_spark.schema import to_struct_type
+from datafusion_server_spark.session import SMALL_PLAN_CONF
 from datafusion_server_spark.sources import jsonpath as jp
 
 
@@ -101,10 +103,11 @@ def stage_bytes(data: bytes, suffix: str) -> str:
 # Schema inference reads the files on every registration: one Spark job for
 # Parquet and JSON, two for CSV. The cache maps what inference depends on
 # to the StructType it gave: the format and reader options, the session's
-# SQL conf, and the identity (path, mode, inode, size, mtime, ctime) of
-# the file or of every entry of the directory tree Spark lists. Any
-# rewrite, re-creation or utime changes a ctime, so a changed file misses
-# instead of being evicted.
+# SQL conf less the keys of ``session.SMALL_PLAN_CONF`` (they shape the
+# plan, not what a read infers), and the identity (path, mode, inode,
+# size, mtime, ctime) of the file or of every entry of the directory tree
+# Spark lists. Any rewrite, re-creation or utime changes a ctime, so a
+# changed file misses instead of being evicted.
 
 SCHEMA_CACHE_ENTRIES = 256
 # Racy-timestamp rule (as in git's index): a tree whose newest ctime is
@@ -114,6 +117,10 @@ RACY_WINDOW_NS = 1_000_000_000
 # Spark would read these as a glob, an escape or a URI part, not the path
 # os.stat sees.
 _UNCACHED_CHARS = frozenset("*?[]{}\\%#;")
+
+# The plan keys' entries in the conf's text form ("k -> v, "); their
+# values are booleans and integers, so they hold no ", " or ")".
+_PLAN_ENTRIES = re.compile("|".join(f"(?<=[( ]){re.escape(k)} -> [^,)]*(, )?" for k in SMALL_PLAN_CONF))
 
 _schemas: OrderedDict[tuple, StructType] = OrderedDict()
 _schemas_lock = threading.Lock()
@@ -182,7 +189,7 @@ def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | Non
     files = _file_identity(location)
     if files is None:
         return reader.load(location)
-    conf = spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+    conf = _PLAN_ENTRIES.sub("", spark._jsparkSession.sessionState().conf().getAllConfs().toString())
     key = (fmt, tuple(sorted(options.items())), conf, files)
     with _schemas_lock:
         cached = _schemas.get(key)

@@ -192,6 +192,31 @@ def test_sql_conf_is_part_of_the_key(spark, tmp_path, no_racy_window, first):
         assert dict(df.dtypes)["b"] == want[tenant], tenant
 
 
+def test_plan_conf_is_not_part_of_the_key(spark, tmp_path, no_racy_window, monkeypatch):
+    """A small-plan one-shot and a named session read a file under two
+    plans (``SMALL_PLAN_CONF``, ``SERVING_CONF``) but infer the same
+    schema: the named session's registration hits the one-shot's entry."""
+    from datafusion_server_spark.server.api import Engine
+
+    monkeypatch.setattr(readers, "_schemas", type(readers._schemas)())
+    path = str(tmp_path / "shared.parquet")
+    pq.write_table(_facts(100), path)
+    engine = Engine(spark, start_reaper=False)
+    source = {"format": "parquet", "name": "shared", "location": path}
+    with engine._oneshot({"dataSources": [source], "query": "SELECT * FROM shared"}) as df:
+        assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert len(readers._schemas) == 1
+    engine.session_create("cache-plan-named", 600)
+    try:
+        _, jobs = _jobs(spark, lambda: engine.session_add_datasource("cache-plan-named", source))
+        assert engine.sessions.get("cache-plan-named").spark.conf.get(
+            "spark.sql.adaptive.enabled") == "true"
+    finally:
+        engine.sessions.delete("cache-plan-named")
+    assert jobs == 0
+    assert len(readers._schemas) == 1
+
+
 def test_file_inside_racy_window_is_not_stored(spark, tmp_path):
     path = str(tmp_path / "young.parquet")
     pq.write_table(_facts(), path)
