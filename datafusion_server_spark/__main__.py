@@ -9,7 +9,7 @@ import argparse
 def main() -> None:
     p = argparse.ArgumentParser(description="datafusion-server-spark")
     p.add_argument("-f", "--config", default=None, help="TOML/JSON config file "
-                   "(reference settings.rs shape: [server]/[session]/[log] + "
+                   "(reference settings.rs shape: [server]/[session] + "
                    "[[databases]]/[[storages]])")
     p.add_argument("--host", default=None)
     p.add_argument("--port", type=int, default=None)
@@ -27,6 +27,12 @@ def main() -> None:
         args.flight_port if args.flight_port is not None else settings.server.flight_grpc_port
     )
     engine = Engine(settings=settings)
+    if settings.server.prewarm:
+        # a latency optimization must never become a boot blocker
+        try:
+            print(f"prewarmed in {engine.prewarm():.2f}s", flush=True)
+        except Exception as e:  # noqa: BLE001 — availability over warmth
+            print(f"prewarm failed (serving anyway): {e}", flush=True)
     httpd = serve(engine, host, port)
     print(f"REST:   http://{host}:{httpd.server_address[1]}", flush=True)
     flight_server = None

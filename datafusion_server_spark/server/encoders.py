@@ -6,9 +6,10 @@ incremental (reference lib/src/response/format/* + record_batch_stream.rs).
 - Arrow is an IPC *stream* (arrow_stream.rs:7-20);
 - format negotiation: body.response.format > Accept header > JSON
   (http_response.rs:51-63);
-- incremental variant yields per-batch chunks with bounded buffering
-  (record_batch_stream.rs:42-73 mpsc(32) analog = toArrow batches /
-  toLocalIterator backpressure).
+- the streamed variant (Flight, chunked REST) yields Spark's own Arrow
+  batches partition by partition, with no Python worker in between; the
+  one-partition prefetch window is the bounded buffer
+  (record_batch_stream.rs:42-73 mpsc(32)).
 """
 
 from __future__ import annotations
@@ -204,10 +205,15 @@ def encode(table: pa.Table, fmt: str, *, has_headers: bool = True, delimiter: st
 
 
 def spark_to_arrow_schema(df: DataFrame) -> pa.Schema:
-    """The Arrow schema ``df.toArrow()`` would return, without running a job."""
+    """The Arrow schema ``df.toArrow()`` returns, without running a job:
+    the same conversion under the same session conf."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(df.schema)
+    return to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
 
 
 def arrow_batches_incremental(df: DataFrame) -> Iterator[pa.RecordBatch]:
@@ -215,47 +221,42 @@ def arrow_batches_incremental(df: DataFrame) -> Iterator[pa.RecordBatch]:
     materialization (reference A21/A22 semantics: execute_stream ->
     mpsc(32) -> network, record_batch_stream.rs:42-73 / flight.rs:96-144).
 
-    Shape: each executor partition IPC-serializes its Arrow batches
-    (mapInArrow, JVM->Python via Arrow), and ``toLocalIterator`` ships one
-    partition at a time to the driver — the socket transfer plus the
-    single-partition prefetch window is the bounded buffer; a result
-    larger than driver memory streams through without ever residing there.
-    """
+    Spark cuts each partition into Arrow IPC batch messages in the JVM
+    (``Dataset.toArrowBatchRdd``, at ``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` rows), and the server ``toLocalIterator`` uses
+    ships one partition at a time to the driver, prefetching the next.
+    Each message is read against the declared schema, so the batches
+    have exactly the types ``df.toArrow()`` gives; no Python worker runs.
+    ``toArrowBatchRdd`` is ``private[sql]``, reached over py4j as PySpark
+    reaches ``collectAsArrowToPython``."""
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.util import _local_iterator_from_socket
 
-    def _ipc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, b.schema) as w:
-                w.write_batch(b)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([sink.getvalue().to_pybytes()], type=pa.binary())], ["ipc"]
-            )
-
-    for row in df.mapInArrow(_ipc, "ipc binary").toLocalIterator(prefetchPartitions=True):
-        with pa.ipc.open_stream(bytes(row[0])) as reader:
-            yield from reader
+    schema = spark_to_arrow_schema(df)
+    jvm = df.sparkSession.sparkContext._jvm
+    sock_info = jvm.PythonRDD.toLocalIteratorAndServe(df._jdf.toArrowBatchRdd(), True)
+    for message in _local_iterator_from_socket(sock_info, NoOpSerializer()):
+        yield pa.ipc.read_record_batch(pa.py_buffer(message), schema)
 
 
 def arrow_stream(df: DataFrame) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
     """The one streamed source of a result: (schema, batches), its first
     batch already executed so a failing query fails before any response
-    byte. The schema is the DataFrame's declared one — what Flight
-    get_flight_info reports — and every batch is cast to it, as
-    ``DataFrame.toArrow`` does: the executed plan can narrow nullability
-    (a filter on a column makes it NOT NULL)."""
-    schema = spark_to_arrow_schema(df)
-    batches = (b.cast(schema) for b in arrow_batches_incremental(df))
+    byte. The schema is the DataFrame's declared one, what Flight
+    get_flight_info reports."""
+    batches = arrow_batches_incremental(df)
     first = next(batches, None)
-    return schema, itertools.chain([] if first is None else [first], batches)
+    return spark_to_arrow_schema(df), itertools.chain([] if first is None else [first], batches)
 
 
-def arrow_ipc_chunks(df: DataFrame, max_records_per_batch: int = 10000) -> Iterator[bytes]:
+def arrow_ipc_chunks(df: DataFrame) -> Iterator[bytes]:
     """Incremental Arrow IPC framing (reference A21): ONE logical IPC
     stream — the declared schema first, then one frame per record batch
     as each partition lands, then the end-of-stream marker — yielded as
     separate chunks for chunked HTTP transfer. Backed by ``arrow_stream``,
     so the first chunk goes out while later partitions are still
-    executing."""
+    executing; a frame holds at most the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows."""
     schema, batches = arrow_stream(df)
     buf = io.BytesIO()
 
@@ -266,11 +267,7 @@ def arrow_ipc_chunks(df: DataFrame, max_records_per_batch: int = 10000) -> Itera
         return data
 
     with pa.ipc.new_stream(buf, schema) as writer:
-        for whole in batches:
-            # Re-slice to the requested batch granularity: partitions may
-            # emit arbitrarily large batches, and callers size
-            # max_records_per_batch to bound client-side memory per frame.
-            for start in range(0, whole.num_rows, max_records_per_batch):
-                writer.write_batch(whole.slice(start, max_records_per_batch))
-                yield drain()
+        for batch in batches:
+            writer.write_batch(batch)
+            yield drain()
     yield drain()

@@ -425,31 +425,6 @@ def serve(engine: Engine, host: str = "127.0.0.1", port: int = 4000) -> Threadin
     return httpd
 
 
-def main() -> None:
-    import argparse
-
-    from datafusion_server_spark.settings import Settings
-
-    p = argparse.ArgumentParser(description="datafusion-server-spark REST server")
-    p.add_argument("-f", "--config", default=None, help="TOML/JSON config file")
-    p.add_argument("--host", default=None)
-    p.add_argument("--port", type=int, default=None)
-    args = p.parse_args()
-    settings = Settings.load(args.config)
-    host = args.host or settings.server.address
-    port = args.port if args.port is not None else settings.server.port
-    engine = Engine(settings=settings)
-    if settings.server.prewarm:
-        # a latency optimization must never become a boot blocker
-        try:
-            print(f"prewarmed in {engine.prewarm():.2f}s")
-        except Exception as e:  # noqa: BLE001 — availability over warmth
-            print(f"prewarm failed (serving anyway): {e}")
-    httpd = serve(engine, host, port)
-    print(f"serving on http://{host}:{port}")
-    run_until_signalled(engine, httpd)
-
-
 def run_until_signalled(
     engine: Engine, httpd: ThreadingHTTPServer, flight_server=None
 ) -> None:
@@ -481,7 +456,3 @@ def run_until_signalled(
     engine.sessions.stop_reaper()
     closed = engine.sessions.close_all()
     print(f"closed {len(closed)} session(s)", flush=True)
-
-
-if __name__ == "__main__":
-    main()

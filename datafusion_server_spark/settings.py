@@ -4,8 +4,10 @@ The reference boots from a TOML file (``datafusion-server -f config.toml``)
 with ``[server]`` / ``[session]`` / ``[log]`` tables plus ``[[databases]]``
 and ``[[storages]]`` arrays (/root/reference/lib/src/settings.rs:154-213,
 defaults at :190-213; example at bin/config.toml). This module mirrors the
-same keys and defaults, reads TOML (stdlib ``tomllib``) or JSON, and
-applies the config:
+keys the server reads, with the same defaults, reads TOML (stdlib
+``tomllib``) or JSON, and applies the config. Keys it has no use for
+(``[log]``, ``server.metrics_address``/``metrics_port``/``data_dir``) load
+and are ignored, so a reference config file boots unchanged:
 
 - ``databases``   -> JDBC namespaces (sources/jdbc.py), so ``table@ns``
   resolves (reference database_manager.rs);
@@ -29,10 +31,7 @@ class ServerSettings:
     port: int = 4000
     flight_address: str = "0.0.0.0"
     flight_grpc_port: int = 50051
-    metrics_address: str = "127.0.0.1"
-    metrics_port: int = 9100
     base_url: str = "/"
-    data_dir: str = "data"
     plugin_dir: str = "plugin"
     disable_stateful_features: bool = False
     # Beyond-reference: run one synthetic pipeline through the
@@ -51,15 +50,9 @@ class SessionSettings:
 
 
 @dataclass
-class LogSettings:
-    level: str = "info"
-
-
-@dataclass
 class Settings:
     server: ServerSettings = field(default_factory=ServerSettings)
     session: SessionSettings = field(default_factory=SessionSettings)
-    log: LogSettings = field(default_factory=LogSettings)
     databases: list[dict] = field(default_factory=list)
     storages: list[dict] = field(default_factory=list)
 
@@ -97,7 +90,7 @@ class Settings:
     @staticmethod
     def from_dict(raw: dict) -> "Settings":
         s = Settings()
-        for section, target in (("server", s.server), ("session", s.session), ("log", s.log)):
+        for section, target in (("server", s.server), ("session", s.session)):
             for k, v in (raw.get(section) or {}).items():
                 if hasattr(target, k):
                     setattr(target, k, v)

@@ -160,6 +160,38 @@ def test_sigterm_graceful_shutdown(tmp_path):
     assert "closed 1 session(s)" in out
 
 
+def test_boot_prewarms_before_rest_banner(tmp_path):
+    """``python -m datafusion_server_spark`` is the one boot path: with
+    ``server.prewarm`` set it pre-warms before the REST listener opens,
+    so the log shows ``prewarmed in`` ahead of the ``REST:`` banner."""
+    cfg = tmp_path / "cfg.json"
+    cfg.write_text('{"server": {"address": "127.0.0.1", "port": 0, "prewarm": true}}')
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "datafusion_server_spark", "-f", str(cfg),
+         "--flight-port", "0"],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "PYTHONUNBUFFERED": "1"},
+    )
+    lines = []
+    try:
+        deadline = time.time() + 240
+        for line in proc.stdout:
+            lines.append(line)
+            if line.startswith("REST:") or time.time() > deadline:
+                break
+        proc.send_signal(signal.SIGTERM)
+        proc.wait(timeout=60)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+    banner = [i for i, line in enumerate(lines) if line.startswith("REST:")]
+    warmed = [i for i, line in enumerate(lines) if line.startswith("prewarmed in")]
+    assert banner and warmed and warmed[0] < banner[0], lines
+
+
 def test_close_all_fires_duration_metrics(spark):
     """Engine.sessions.close_all() runs the reaper's close path: the
     on_close hook records a session-duration observation per session."""

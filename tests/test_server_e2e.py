@@ -223,6 +223,39 @@ def test_incremental_stream_empty_result(spark):
     assert table.num_rows == 0 and table.column_names == ["id"]
 
 
+# One column of each type the streamed path must carry as toArrow does
+TYPE_MATRIX_SQL = """
+SELECT CAST(id AS TINYINT) i8, CAST(id AS SMALLINT) i16, CAST(id AS INT) i32, id i64,
+       CAST(id AS FLOAT) f32, CAST(id AS DOUBLE) f64,
+       CAST(id AS DECIMAL(10, 2)) dec, CAST(id AS DECIMAL(38, 10)) dec38,
+       CAST(id AS STRING) str, CAST(CAST(id AS STRING) AS BINARY) bin, id % 2 = 0 flag,
+       DATE'2024-01-02' + CAST(id AS INT) dt,
+       TIMESTAMP'2024-01-02 03:04:05' + make_interval(0, 0, 0, 0, 0, 0, id) ts,
+       CAST(TIMESTAMP'2024-01-02 03:04:05' AS TIMESTAMP_NTZ) ts_ntz,
+       array(id, id + 1) arr, named_struct('x', id, 'y', CAST(id AS STRING)) st,
+       map(CAST(id AS STRING), id) mp, NULL nul, make_dt_interval(0, 0, 0, id) dti,
+       CASE WHEN id % 3 = 0 THEN NULL ELSE CAST(id AS STRING) END nullable_str
+FROM range(0, 50, 1, 3)
+"""
+
+
+@pytest.mark.parametrize("large_var_types", ["false", "true"])
+def test_arrow_stream_matches_to_arrow(spark, large_var_types):
+    """The streamed path reads Spark's batches against the declared
+    schema, so that schema must be the one ``toArrow`` builds, under the
+    session's ``useLargeVarTypes``: a wrong declaration would misread
+    the buffers, not just mislabel them."""
+    from datafusion_server_spark.server import encoders
+
+    sess = spark.newSession()
+    sess.conf.set("spark.sql.execution.arrow.useLargeVarTypes", large_var_types)
+    df = sess.sql(TYPE_MATRIX_SQL)
+    expected = df.toArrow()
+    schema, batches = encoders.arrow_stream(df)
+    assert schema == expected.schema
+    assert pa.Table.from_batches(list(batches), schema).equals(expected)
+
+
 def test_multipart_upload_reference_route(base_url, tmp_path):
     """Reference-compatible upload: POST /session/:id/datasource/upload with
     a multipart/form-data body, one table per field, format sniffed per

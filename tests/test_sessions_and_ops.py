@@ -201,8 +201,10 @@ def test_arrow_ipc_chunks_respects_max_records_per_batch(spark):
 
     from datafusion_server_spark.server import encoders
 
-    df = spark.range(0, 1000, 1, 2)
-    data = b"".join(encoders.arrow_ipc_chunks(df, max_records_per_batch=100))
+    sess = spark.newSession()
+    sess.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
+    df = sess.range(0, 1000, 1, 2)
+    data = b"".join(encoders.arrow_ipc_chunks(df))
     with pa.ipc.open_stream(io.BytesIO(data)) as reader:
         batches = list(reader)
     assert sum(b.num_rows for b in batches) == 1000

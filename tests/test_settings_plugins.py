@@ -47,7 +47,6 @@ def test_settings_defaults_match_reference():
     assert s.session.default_keep_alive == 3600
     assert s.session.upload_limit_size == 20
     assert s.upload_limit_bytes == 20 * 1024 * 1024
-    assert s.log.level == "info"
     # beyond-reference boot pre-warm (r9): default on, config-toggleable
     assert s.server.prewarm is True
     assert Settings.from_dict({"server": {"prewarm": False}}).server.prewarm is False
@@ -85,6 +84,20 @@ def test_settings_toml_and_json_overlay(tmp_path):
     json_p = tmp_path / "config.json"
     json_p.write_text(json.dumps({"server": {"port": 9999}}))
     assert Settings.load(json_p).server.port == 9999
+
+
+def test_reference_config_with_unread_keys_loads(tmp_path):
+    """A reference config file still carrying the keys this server does
+    not read (metrics listener, data_dir, [log]) loads; they are ignored."""
+    ref = tmp_path / "reference.toml"
+    ref.write_text(
+        '[server]\naddress = "127.0.0.1"\nport = 4100\nmetrics_address = "0.0.0.0"\n'
+        'metrics_port = 9200\ndata_dir = "/var/data"\n\n[log]\nlevel = "debug"\n'
+    )
+    s = Settings.load(ref)
+    assert (s.server.address, s.server.port) == ("127.0.0.1", 4100)
+    assert not hasattr(s, "log")
+    assert not any(hasattr(s.server, k) for k in ("metrics_address", "metrics_port", "data_dir"))
 
 
 def test_config_file_boot_e2e(spark, tmp_path):
