@@ -46,6 +46,13 @@ SESSION_SQL_FUNCTIONS: tuple[str, ...] = (
     RETURN CASE WHEN s RLIKE p THEN array(regexp_extract(s, p, 1)) END
     """,
 )
+# Whether SQL text may call one of SESSION_SQL_FUNCTIONS (a match inside a
+# string literal or comment only registers them needlessly).
+_NAMES_SESSION_FUNCTION = re.compile(r"\bregexp_match\s*\(", re.IGNORECASE)
+
+
+def names_session_function(sql: str) -> bool:
+    return _NAMES_SESSION_FUNCTION.search(sql) is not None
 
 
 def register_session_functions(spark) -> None:

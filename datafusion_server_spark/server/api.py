@@ -206,6 +206,9 @@ class Engine:
         import shutil
         import tempfile
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         t0 = time.time()
         synth = (
             "SELECT g, s, ROW_NUMBER() OVER (ORDER BY s DESC, g) AS r FROM ("
@@ -216,14 +219,13 @@ class Engine:
         self.dataframe_query({"query": synth, "response": {"format": "arrow"}})
         self.dataframe_query({"query": synth, "response": {"format": "json"}})
         # the first REAL request usually registers a file source: warm
-        # the parquet write/scan + DataSource registration path too (the
-        # synthetic query alone left a ~1.4 s first-request residue)
+        # the parquet scan + DataSource registration path too (the
+        # synthetic query alone left a ~1.4 s first-request residue), on
+        # one file, as most one-shots read
         tmp = tempfile.mkdtemp(prefix="prewarm_")
         try:
             loc = f"{tmp}/warm.parquet"
-            self.spark.range(100).selectExpr(
-                "id AS k", "CAST(id % 5 AS STRING) AS g"
-            ).write.mode("overwrite").parquet(loc)
+            pq.write_table(pa.table({"k": range(100), "g": [str(i % 5) for i in range(100)]}), loc)
             self.dataframe_query(
                 {
                     "dataSources": [
@@ -303,19 +305,14 @@ class Engine:
     # -- entry points ------------------------------------------------------
 
     @staticmethod
-    def _input_bytes(sources: list[source_registry.DataSource], sql: str) -> int | None:
-        """Total bytes a one-shot reads, or None when that is unknown: no
-        dataSources, a ``table@namespace`` relation, or a source that is
-        not a local file tree (``readers.local_bytes``)."""
+    def _input_sizes(sources: list[source_registry.DataSource], sql: str) -> list[tuple[int, int]] | None:
+        """(bytes, files) of each source a one-shot reads, or None when
+        that is unknown: no dataSources, a ``table@namespace`` relation,
+        or a source that is not a local file tree (``readers.local_size``)."""
         if not sources or find_table_at_namespace(sql):
             return None
-        total = 0
-        for ds in sources:
-            size = readers.local_bytes(ds.location)
-            if size is None:
-                return None
-            total += size
-        return total
+        sizes = [readers.local_size(ds.location) for ds in sources]
+        return None if None in sizes else sizes
 
     @contextmanager
     def _oneshot(self, payload: dict):
@@ -327,7 +324,7 @@ class Engine:
         sources = _parse_sources(payload.get("dataSources"))
         sess = self.sessions.create(
             keep_alive_s=STATELESS_KEEP_ALIVE_S,
-            conf=plan_conf(self._input_bytes(sources, payload.get("query", ""))),
+            conf=plan_conf(self._input_sizes(sources, payload.get("query", ""))),
         )
         self.metrics.track_session_context()
         try:

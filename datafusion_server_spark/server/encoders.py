@@ -99,6 +99,15 @@ def _json_text(col: pa.Array) -> pa.Array:
             if pc.any(pc.match_substring(col, char)).as_py():
                 col = pc.replace_substring(col, char, "\\" + char)
         text = pc.binary_join_element_wise('"', col, '"', "")
+    elif pa.types.is_date32(t):
+        text = pc.binary_join_element_wise('"', pc.cast(col, pa.string()), '"', "")
+    elif pa.types.is_timestamp(t) and t.unit == "us" and t.tz in (None, "UTC"):
+        # Arrow prints the zone-less UTC values as "YYYY-MM-DD HH:MM:SS.ffffff"
+        # (a cast from the zoned type, or strftime, is ~40x slower); Python's
+        # isoformat has a "T", no fraction when it is zero and "+00:00" for UTC
+        iso = pc.cast(col.cast(pa.timestamp("us")), pa.string())
+        iso = pc.replace_substring(pc.replace_substring(iso, " ", "T"), ".000000", "")
+        text = pc.binary_join_element_wise('"', iso, '+00:00"' if t.tz else '"', "")
     else:
         return pa.array([json.dumps(_finite(v), default=_json_default) for v in col.to_pylist()],
                         pa.string())
@@ -113,12 +122,15 @@ def to_json_array(table: pa.Table) -> bytes:
     - floats keep their float form (``23.0``); NaN and infinities are
       ``null``;
     - strings are escaped and quoted;
+    - ``date32`` and ``timestamp[us]`` (no zone or UTC) print in
+      Python's ISO form: no fraction when it is zero, ``+00:00`` for UTC;
     - nulls are ``null``.
 
     Only these columns take a per-cell ``json.dumps`` (dates and times in
-    ISO form, binary as hex, non-finite floats as ``null``): temporal,
-    binary, nested (list, struct, map) and other types not above, and
-    ``string`` columns that hold a control character."""
+    ISO form, binary as hex, non-finite floats as ``null``): other
+    temporal types, units and zones, binary, nested (list, struct, map)
+    and other types not above, and ``string`` columns that hold a
+    control character."""
     keys = [json.dumps(name) + ":" for name in table.column_names]
     heads = ["{" + k for k in keys[:1]] + ["," + k for k in keys[1:]]
     pieces: list = [b"["]

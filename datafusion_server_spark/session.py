@@ -9,13 +9,16 @@ SQLConf over a shared SparkContext; a reaper thread enforces TTL
 3600 s at lib/src/settings.rs:211).
 
 Scale notes (100 TB / 1000-executor design):
-- Two plans, chosen per session at create from exact input sizes. A
+- Plans chosen per session at create from exact input sizes. A
   stateless one-shot whose inputs are all local file trees totalling
-  less than ``SMALL_INPUT_BYTES`` runs ``SMALL_PLAN_CONF``: AQE off and
-  one shuffle partition, so each query is one or two Spark jobs instead
-  of a job per exchange. Every other session (named sessions, one-shots
-  with no sources, ``table@ns`` relations, remote, glob or larger
-  inputs) runs ``SERVING_CONF``.
+  less than ``SMALL_INPUT_BYTES`` plans with AQE off and one shuffle
+  partition. When every input is one file it runs ``SMALL_PLAN_CONF``,
+  which also turns broadcast off, and registers every source as one
+  partition, so each query is one Spark job of one stage: no exchange,
+  no broadcast job. When some input is a tree of several files it runs
+  ``SMALL_SPLIT_CONF`` over Spark's own splits. Every other session
+  (named sessions, one-shots with no sources, ``table@ns`` relations,
+  remote, glob or larger inputs) runs ``SERVING_CONF``.
 - Under ``SERVING_CONF``, AQE on: runtime join-strategy switching,
   skew-join splitting, and partition coalescing replace any hand-tuned
   physical planning.
@@ -37,6 +40,11 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import SparkSession
 
+from datafusion_server_spark.functions.dialect import (
+    names_session_function,
+    register_session_functions,
+)
+
 if TYPE_CHECKING:
     from datafusion_server_spark.sources.registry import DataSource
 
@@ -55,25 +63,42 @@ SERVING_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
 }
 # A one-shot whose inputs are all local file trees of fewer bytes than
-# this plans with SMALL_PLAN_CONF: AQE off and one shuffle partition.
-# On such inputs AQE re-plans nothing, but costs a Spark job per
-# exchange (and a range sort a sampling job). Set from the size sweep
-# in PLANS.md ("Verdict task 3"): at 4 cores every shape measured was
-# faster or within 5% up to 5 MB, but at 10 MB a single-stream
-# high-cardinality aggregate ran 40% slower on one partition.
+# this plans with AQE off and one shuffle partition. On such inputs AQE
+# re-plans nothing, but costs a Spark job per exchange (and a range sort
+# a sampling job). Set from the size sweep in PLANS.md ("Verdict task
+# 3"): at 4 cores every shape measured was faster or within 5% up to
+# 5 MB, but at 10 MB a single-stream high-cardinality aggregate ran 40%
+# slower on one partition.
 SMALL_INPUT_BYTES = 4 * 1024 * 1024
+# Small inputs of one file each: Spark reads each as one split anyway,
+# so its session coalesces every source view to one partition
+# (``ServerSession.single_partition``) at no cost in parallelism. A
+# one-partition view satisfies every distribution an aggregate, join or
+# sort asks for, so no exchange is planned, and with broadcast off a
+# join is a sort-merge join inside the same stage rather than a
+# broadcast job: each query is one job of one stage, where each extra
+# stage cost 25-45 ms of scheduling for a 4-48 ms task.
 SMALL_PLAN_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+# A small input that is a tree of several files keeps Spark's splits and
+# broadcast: on 16 files (3.95 MiB) one scan task made an aggregate 18%
+# slower, and without broadcast a join shuffled and sorted the whole
+# fact side, 44% slower (PLANS.md, "Verdict task 3").
+SMALL_SPLIT_CONF = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "1",
 }
 
 
-def plan_conf(input_bytes: int | None) -> dict[str, str]:
-    """The SQLConf for a one-shot reading ``input_bytes`` in total
-    (None: some input's size is unknown)."""
-    if input_bytes is not None and input_bytes < SMALL_INPUT_BYTES:
-        return SMALL_PLAN_CONF
-    return SERVING_CONF
+def plan_conf(inputs: list[tuple[int, int]] | None) -> dict[str, str]:
+    """The SQLConf for a one-shot whose sources are local trees of
+    ``inputs`` (bytes, files) each (None: some input's size is unknown)."""
+    if inputs is None or sum(size for size, _ in inputs) >= SMALL_INPUT_BYTES:
+        return SERVING_CONF
+    return SMALL_PLAN_CONF if all(files == 1 for _, files in inputs) else SMALL_SPLIT_CONF
 
 
 def default_parallelism() -> int:
@@ -138,15 +163,19 @@ class ServerSession:
     Mirrors the reference ``Session`` (lib/src/context/session.rs:35-70):
     id, created timestamp, TTL, and its data sources — each name mapped to
     the parsed ``DataSource`` it was loaded from, so a refresh replays it
-    with every option.
+    with every option. A ``single_partition`` session (one planned with
+    ``SMALL_PLAN_CONF``) registers every data source as one partition.
     """
 
     session_id: str
     spark: SparkSession
     keep_alive_s: int = DEFAULT_KEEP_ALIVE_S
+    single_partition: bool = False
     created_at: float = field(default_factory=time.time)
     last_access: float = field(default_factory=time.time)
     data_sources: dict[str, DataSource] = field(default_factory=dict)
+    # the dialect-shim functions are installed by the first SQL naming one
+    has_session_functions: bool = False
 
     def touch(self) -> None:
         self.last_access = time.time()
@@ -173,6 +202,10 @@ class ServerSession:
         """
         if name in self.data_sources:
             self.spark.catalog.uncacheTable(name)
+        if self.single_partition and source is not None:
+            # merge and INSERT results over one-partition views are one
+            # partition already; a coalesce of them cost ~7 ms of analysis
+            df = df.coalesce(1)
         df.createOrReplaceTempView(name)
         if cache:
             df.persist()
@@ -196,7 +229,14 @@ class ServerSession:
             return None
 
     def sql(self, query: str):
+        """Run ``query`` in the session: the one SQL entry of REST, Flight
+        and the ``INSERT`` shim. The dialect-shim functions
+        (``regexp_match``) are installed the first time a query names
+        one: their DDL costs more than the rest of a session's create."""
         self.touch()
+        if not self.has_session_functions and names_session_function(query):
+            register_session_functions(self.spark)
+            self.has_session_functions = True
         return self.spark.sql(query)
 
     def close(self) -> None:
@@ -241,17 +281,14 @@ class SessionManager:
         """A fresh ``newSession()`` per server session — its own temp-view
         catalog, temp functions and SQLConf, so nothing one tenant runs
         (``CREATE TEMPORARY VIEW``, ``SET``) is visible to the next.
-        ``conf`` is applied before anything is read or planned."""
-        from datafusion_server_spark.functions.dialect import register_session_functions
-
+        ``conf`` is applied before anything is read or planned; under
+        ``SMALL_PLAN_CONF`` every data source is registered as one
+        partition."""
         sid = session_id or uuid.uuid4().hex
         spark = self._root.newSession()
         for k, v in conf.items():
             spark.conf.set(k, v)
-        # dialect-shim SQL functions (regexp_match first-match semantics
-        # etc.) live in the per-session temp-function catalog
-        register_session_functions(spark)
-        sess = ServerSession(sid, spark, keep_alive_s)
+        sess = ServerSession(sid, spark, keep_alive_s, single_partition=conf == SMALL_PLAN_CONF)
         with self._lock:
             if sid in self._sessions:
                 raise ValueError(f"session already exists: {sid}")

@@ -119,7 +119,8 @@ RACY_WINDOW_NS = 1_000_000_000
 _UNCACHED_CHARS = frozenset("*?[]{}\\%#;")
 
 # The plan keys' entries in the conf's text form ("k -> v, "); their
-# values are booleans and integers, so they hold no ", " or ")".
+# values are booleans and integers ("-1" among them), so they hold no
+# ", " or ")".
 _PLAN_ENTRIES = re.compile("|".join(f"(?<=[( ]){re.escape(k)} -> [^,)]*(, )?" for k in SMALL_PLAN_CONF))
 
 _schemas: OrderedDict[tuple, StructType] = OrderedDict()
@@ -168,14 +169,15 @@ def _file_identity(location: str) -> tuple | None:
     return tuple(entries)
 
 
-def local_bytes(location: str) -> int | None:
-    """Bytes of the files under ``location``, or None when it is not a
-    local tree (``_local_tree``). The racy window does not apply: the
-    size only picks a plan (``session.plan_conf``)."""
+def local_size(location: str) -> tuple[int, int] | None:
+    """(bytes, number) of the files under ``location``, or None when it is
+    not a local tree (``_local_tree``). The racy window does not apply:
+    the size only picks a plan (``session.plan_conf``)."""
     entries = _local_tree(location)
     if entries is None:
         return None
-    return sum(e[3] for e in entries if not stat.S_ISDIR(e[1]))
+    sizes = [e[3] for e in entries if not stat.S_ISDIR(e[1])]
+    return sum(sizes), len(sizes)
 
 
 def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | None,

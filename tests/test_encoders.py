@@ -184,6 +184,20 @@ def test_json_float_form_and_strings():
         '{"f":1e+16,"s":null,"c":null}]').encode()
 
 
+def test_json_temporal_iso_form():
+    """Dates and microsecond timestamps print as Python's isoformat: a
+    four-digit year, no fraction when it is zero, ``+00:00`` for UTC."""
+    cells = [datetime.datetime(1, 1, 1, 0, 0, 0, 5), datetime.datetime(2024, 2, 29, 23, 59, 59), None]
+    table = pa.table({
+        "d": pa.array([datetime.date(1, 1, 1), datetime.date(2024, 2, 29), None]),
+        "ts": pa.array(cells, pa.timestamp("us")),
+        "utc": pa.array([c and c.replace(tzinfo=UTC) for c in cells], pa.timestamp("us", tz="UTC")),
+    })
+    assert to_json_array(table) == old_to_json_array(table).replace(b": ", b":").replace(b", ", b",")
+    assert json.loads(to_json_array(table))[1] == {
+        "d": "2024-02-29", "ts": "2024-02-29T23:59:59", "utc": "2024-02-29T23:59:59+00:00"}
+
+
 def test_json_empty_and_zero_columns():
     assert to_json_array(pa.table({"a": pa.array([], pa.int64())})) == b"[]"
     assert json.loads(to_json_array(pa.table({"a": [1, 2]}).select([]))) == [{}, {}]

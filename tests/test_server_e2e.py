@@ -156,6 +156,32 @@ def test_session_lifecycle(base_url, tmp_path):
     assert requests.get(f"{base_url}/session/e2e").status_code == 404
 
 
+def test_oneshot_installs_dialect_function_only_when_named(engine, tmp_path):
+    """The ``regexp_match`` DDL costs more than the rest of a session's
+    create, so a one-shot pays it only when its SQL names the function."""
+    p = tmp_path / "fn.csv"
+    p.write_bytes(CSV)
+    source = [{"format": "csv", "name": "fnpeople", "location": str(p)}]
+    with engine._oneshot({"dataSources": source, "query": "SELECT name FROM fnpeople"}) as df:
+        assert df.toArrow().num_rows == 3
+        assert not df.sparkSession.catalog.functionExists("regexp_match")
+    query = "SELECT regexp_match(name, '(r+)') AS m FROM fnpeople ORDER BY id"
+    with engine._oneshot({"dataSources": source, "query": query}) as df:
+        assert df.toArrow().column("m").to_pylist() == [None, None, ["r"]]
+        assert df.sparkSession.catalog.functionExists("regexp_match")
+
+
+def test_regexp_match_on_fresh_named_session(base_url):
+    requests.get(f"{base_url}/session/create", params={"id": "fresh-regexp"})
+    try:
+        r = requests.post(f"{base_url}/session/fresh-regexp/query",
+                          json={"sql": "SELECT regexp_match('a1b2', '([0-9])') AS m"})
+        assert r.status_code == 200, r.text
+        assert r.json() == [{"m": ["1"]}]
+    finally:
+        requests.delete(f"{base_url}/session/fresh-regexp")
+
+
 def test_session_upload_and_save(base_url, tmp_path):
     requests.get(f"{base_url}/session/create", params={"id": "up"})
     r = requests.post(

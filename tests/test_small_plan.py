@@ -2,8 +2,11 @@
 
 A stateless one-shot whose inputs are all local file trees below
 ``session.SMALL_INPUT_BYTES`` runs ``SMALL_PLAN_CONF`` (AQE off, one
-shuffle partition); everything else runs ``SERVING_CONF``. The same SQL
-thus runs under two plans, so the results must not depend on the plan:
+shuffle partition, no broadcast) over one-partition views when each
+input is one file, and ``SMALL_SPLIT_CONF`` when some input is a tree
+of several files; everything else runs ``SERVING_CONF``. The same SQL
+thus runs under several plans, so the results must not depend on the
+plan:
 each one-shot shape and a handful of iterative registry rows run under
 four confs and must return the same rows.
 
@@ -31,6 +34,7 @@ from datafusion_server_spark.session import SERVING_CONF, SMALL_PLAN_CONF
 
 AQE = "spark.sql.adaptive.enabled"
 WIDTH = "spark.sql.shuffle.partitions"
+BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 
 @pytest.fixture(scope="module")
@@ -124,6 +128,19 @@ def _oneshot_conf(engine: Engine, payload: dict) -> dict[str, str]:
         return {AQE: conf.get(AQE), WIDTH: conf.get(WIDTH)}
 
 
+def _collect_traced(spark, df, group: str) -> tuple[pa.Table, int, int]:
+    """``df.toArrow()`` with the number of Spark jobs and stages it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "small plan job count")
+    try:
+        rows = df.toArrow()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return rows, len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+
 def _is_serving(conf: dict[str, str], spark) -> bool:
     return conf == {AQE: "true", WIDTH: spark.conf.get(WIDTH)}
 
@@ -135,18 +152,24 @@ def test_small_local_oneshot_runs_small_plan(engine, sources, spark, fmt):
     serving plan needs a job per exchange plus a sort sample)."""
     src = sources["f0" if fmt == "parquet" else "f1"]
     payload = {"dataSources": [dict(src, name="s0")], "query": _AGG}
-    sc = spark.sparkContext
-    group = f"small-plan-{fmt}"
     with engine._oneshot(payload) as df:
         conf = df.sparkSession.conf
         assert conf.get(AQE) == "false" and conf.get(WIDTH) == "1"
-        sc.setJobGroup(group, "small plan job count")
-        try:
-            rows = df.toArrow()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        rows, jobs, _ = _collect_traced(spark, df, f"small-plan-{fmt}")
     assert rows.num_rows == 4
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert jobs == 1
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_small_plan_shape_is_one_job_one_stage(engine, sources, spark, shape):
+    """Under the small plan every source view is one partition and
+    broadcast is off, so no shape plans an exchange or a broadcast job:
+    the query is one Spark job of one stage."""
+    with engine._oneshot(_payload(sources, shape)) as df:
+        assert df.sparkSession.conf.get(BROADCAST) == "-1"
+        rows, jobs, stages = _collect_traced(spark, df, f"one-stage-{shape}")
+    assert rows.num_rows > 0
+    assert (jobs, stages) == (1, 1)
 
 
 def test_above_threshold_keeps_serving_conf(engine, sources, spark, monkeypatch):
@@ -157,6 +180,31 @@ def test_above_threshold_keeps_serving_conf(engine, sources, spark, monkeypatch)
     assert _is_serving(_oneshot_conf(engine, payload), spark)
     monkeypatch.setattr(session_mod, "SMALL_INPUT_BYTES", total + 1)
     assert _oneshot_conf(engine, payload) == {AQE: "false", WIDTH: "1"}
+
+
+def test_plan_conf_one_stage_needs_one_file_per_source():
+    small = session_mod.SMALL_INPUT_BYTES // 4
+    assert session_mod.plan_conf([(small, 1), (small, 1)]) is SMALL_PLAN_CONF
+    assert session_mod.plan_conf([(small, 1), (small, 16)]) is session_mod.SMALL_SPLIT_CONF
+    assert session_mod.plan_conf([(small * 3, 1), (small, 1)]) is SERVING_CONF
+    assert session_mod.plan_conf(None) is SERVING_CONF
+
+
+def test_small_multi_file_tree_keeps_splits_and_broadcast(engine, spark, tmp_path):
+    """A small tree of several files plans AQE off at width 1, but keeps
+    broadcast and Spark's splits: one scan task over 16 files, or a join
+    that shuffles the whole fact side, cost more than the stages saved."""
+    rng = np.random.Generator(np.random.PCG64(5))
+    for i in range(3):
+        pq.write_table(_fact(rng, 200), str(tmp_path / f"part-{i}.parquet"))
+    payload = {"dataSources": [{"format": "parquet", "name": "s0", "location": str(tmp_path)}],
+               "query": _AGG}
+    with engine._oneshot(payload) as df:
+        conf = df.sparkSession.conf
+        assert {k: conf.get(k) for k in (AQE, WIDTH, BROADCAST)} == {
+            AQE: "false", WIDTH: "1", BROADCAST: spark.conf.get(BROADCAST)}
+        assert "Repartition" not in df.sparkSession.table("s0")._jdf.queryExecution().analyzed().toString()
+        assert df.toArrow().num_rows == 4
 
 
 def test_no_source_keeps_serving_conf(engine, spark):
@@ -228,8 +276,10 @@ def test_named_session_keeps_serving_conf(engine, sources, spark):
     engine.session_create("small-plan-named", 600)
     try:
         engine.session_add_datasource("small-plan-named", dict(sources["f0"], name="s0"))
-        conf = engine.sessions.get("small-plan-named").spark.conf
+        sess = engine.sessions.get("small-plan-named")
+        conf = sess.spark.conf
         assert _is_serving({AQE: conf.get(AQE), WIDTH: conf.get(WIDTH)}, spark)
+        assert not sess.single_partition
     finally:
         engine.sessions.delete("small-plan-named")
 
