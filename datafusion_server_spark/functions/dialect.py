@@ -1545,35 +1545,19 @@ def check_unsupported(sql: str) -> None:
     masked, _ = _protect_strings(sql)
     if _GROUPS_FRAME.search(masked):
         raise UnsupportedDialectFeature(
-            "this GROUPS window frame shape is not rewritable to Spark SQL: "
-            "unbounded/current-row GROUPS frames become RANGE, offset GROUPS "
-            "frames become dense-rank-keyed RANGE frames in a derived "
-            "subquery (incl. SELECT *, DISTINCT, set-operation branches, "
-            "sole-relation qualified t.* — r7, EXCLUDE CURRENT ROW/"
-            "GROUP/TIES on SUM/COUNT/AVG via frame-minus-excluded "
-            "arithmetic — r7, and top-level GROUP BY/HAVING via an "
-            "aggregation-hoisting pre-pass — r8, with GROUP BY ordinals "
-            "resolved to select-list expressions and EXCLUDE on MIN/MAX "
-            "decomposed to LEAST/GREATEST over sub-frames — r9, and "
-            "multi-relation qualified t.*/column refs over base-join "
-            "FROM clauses expanded from the registered-view schemas — "
-            "r11, incl. column names colliding across relations via "
-            "per-relation wrap aliases — r12, schema-resolver sessions "
-            "only, incl. JOIN USING with fully-merged keys — INNER r12, "
-            "LEFT/RIGHT/FULL r13 with per-side key refs wrap-aliased "
-            "against the coalesced output — and two-relation NATURAL "
-            "INNER JOIN — r12), but ambiguous "
-            "multi-relation qualified refs (bare * over colliding "
-            "schemas, intra-relation duplicates, derived tables, "
-            "NATURAL chains/OUTER), parenthesized "
-            "set-op branches, EXCLUDE on aggregates that are neither "
-            "subtractable nor order-decomposable (percentiles; "
-            "ARRAY_AGG decomposes for EXCLUDE GROUP/TIES — r12 — but "
-            "keeps the reject under EXCLUDE CURRENT ROW, whose "
-            "peers-minus-self element order SQL leaves unspecified), "
-            "out-of-range ordinals, and window args that are neither group "
-            "keys nor aggregate calls stay unsupported — use RANGE or "
-            "ROWS frames there"
+            "this GROUPS window frame cannot be rewritten to Spark SQL. "
+            "Rewritten: unbounded and current-row GROUPS frames (to RANGE) "
+            "and offset GROUPS frames (to RANGE over a dense rank), also "
+            "under SELECT *, DISTINCT, GROUP BY/HAVING, set operations and "
+            "joins, with EXCLUDE on SUM, COUNT, AVG, MIN, MAX and ARRAY_AGG. "
+            "Rejected: qualified references over joins that are ambiguous "
+            "(bare * over colliding columns, duplicate columns, derived "
+            "tables, NATURAL chains or outer NATURAL joins) or whose tables' "
+            "columns are unknown, parenthesized set-operation branches, "
+            "EXCLUDE on other aggregates and ARRAY_AGG under EXCLUDE CURRENT "
+            "ROW, out-of-range GROUP BY ordinals, and window arguments that "
+            "are neither group keys nor aggregate calls. Use a RANGE or ROWS "
+            "frame for these."
         )
 
 

@@ -28,11 +28,6 @@ norms AS (SELECT vec_id,
           FROM el GROUP BY vec_id)
 """
 
-# scaled-long dot: SUM over BIGINT (DuckDB accumulates HUGEINT -> cast
-# back), divided by 1e12 at use
-_SDOT = "CAST(SUM(CAST(ROUND({prod} * 1e12) AS BIGINT)) AS BIGINT)"
-_DOTD = "(CAST(dot AS DOUBLE) / 1e12)"
-
 _KNN_ORACLE = f"""
 WITH {_EL_CTE},
 dots AS (

@@ -30,8 +30,6 @@ from urllib.parse import parse_qs, urlparse
 
 from datafusion_server_spark.server.api import Engine
 
-UPLOAD_LIMIT = 20 * 1024 * 1024  # reference default: settings.rs:213
-
 
 # multipart-field format resolution, mirroring the reference's
 # format::resolve_from (request/format.rs:8-57): exact content-type match
@@ -227,11 +225,14 @@ class Handler(BaseHTTPRequestHandler):
             if method == "GET" and path == "/sysinfo":
                 import platform
 
+                from datafusion_server_spark.sources import registry
+
                 return self._send_json(200, {
                     "version": __import__("datafusion_server_spark").__version__,
                     "python": platform.python_version(),
                     "spark": self.engine.spark.version,
                     "sessions": len(self.engine.sessions.list()),
+                    "connectors": dict(registry.connectors),
                 })
             if method == "GET" and path == "/metrics":
                 return self._send(200, self.engine.metrics.prometheus().encode(), "text/plain")

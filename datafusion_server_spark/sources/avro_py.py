@@ -461,10 +461,12 @@ def _spark_type(schema: Any) -> str:
     return _spark_type(t)
 
 
-def read_avro(spark, data: bytes):
-    """bytes -> DataFrame via the pure-Python decoder. Schema maps from
-    the embedded Avro schema (record of fields -> columns)."""
-    schema, records = read_ocf(data)
+def read_avro(spark, path: str):
+    """The Avro file at ``path`` -> DataFrame via the pure-Python decoder.
+    Schema maps from the embedded Avro schema (record of fields ->
+    columns)."""
+    with open(path, "rb") as fh:
+        schema, records = read_ocf(fh.read())
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("top-level avro schema must be a record")
     ddl = ", ".join(f"{f['name']} {_spark_type(f['type'])}" for f in schema["fields"])

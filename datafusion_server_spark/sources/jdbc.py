@@ -4,19 +4,19 @@ The reference implements a custom DataFusion TableProvider that pushes
 projection/filter/limit into remote Postgres/MySQL SQL
 (lib/src/data_source/database/table_provider.rs:46-170). Spark's JDBC
 source already performs the same pushdowns natively, so this module is
-thin: namespace config -> JDBC URL/properties, a schema cache per
-(namespace, table) mirroring table_resolver.rs:39-66, and the
+thin: namespace config -> JDBC URL/properties, and the
 ``table@namespace`` SQL pre-pass of table_register.rs:19-75 (see
 functions.dialect.rewrite_table_at_namespace).
 
 Two namespace kinds:
 
-- ``jdbc`` (postgres/mysql/...): Spark's distributed JDBC reader —
-  requires the driver jar on the classpath (none ship in this
-  container; calls surface a clear error instead of a classpath trace);
+- ``jdbc`` (postgres/mysql/...): Spark's distributed JDBC reader when
+  the URL's driver is on the classpath (looked up once per process,
+  ``registry.has_connector``), else the native wire client for
+  postgres and mysql URLs;
 - ``sqlite``: a REAL external database served by the stdlib ``sqlite3``
   module — the full table@namespace flow (namespace config, SQL
-  pre-pass, schema cache, query execution) runs live with no jar. Rows
+  pre-pass, query execution) runs live with no jar. Rows
   transfer through Arrow on the driver, the standard shape for
   smallish dimension/lookup tables living in an operational DB; big
   fact tables belong on the JDBC path with partitioned reads.
@@ -29,10 +29,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_server_spark.schema import struct_to_schema_json
-
 _NAMESPACES: dict[str, "DatabaseNamespace"] = {}
-_SCHEMA_CACHE: dict[tuple[str, str], dict] = {}
 
 
 @dataclass(frozen=True)
@@ -58,15 +55,6 @@ class DatabaseNamespace:
 
 def configure_namespace(ns: DatabaseNamespace) -> None:
     _NAMESPACES[ns.name] = ns
-
-
-def _cache_full_schema(namespace: str, table: str, ddl: str) -> None:
-    """Record the FULL remote table schema (reference table_resolver.rs
-    caches the unprojected schema) — called by the fallback readers with
-    probe/PRAGMA metadata so projection pushdown never narrows the cache."""
-    from pyspark.sql.types import StructType
-
-    _SCHEMA_CACHE[(namespace, table)] = struct_to_schema_json(StructType.fromDDL(ddl))
 
 
 def read_table(spark: SparkSession, ds) -> DataFrame:
@@ -409,11 +397,6 @@ def _read_sqlite(
         ]
         if not decls:
             raise ValueError(f"no such sqlite table: {table!r} in {ns.url}")
-        _cache_full_schema(
-            ns.name,
-            table,
-            ", ".join(f"{c} {_sqlite_spark_type(t)}" for c, t in decls),
-        )
         # sqlite LIKE is ASCII-case-insensitive — same lost-rows hazard as
         # MySQL collations for negated string predicates; don't push them.
         pd = refine_pushdown(
@@ -485,14 +468,6 @@ def _read_mysql_wire(
     )
     try:
         probe_cols, _ = conn.query(build_remote_sql(table, Pushdown(limit=0), quote="`"))
-        _cache_full_schema(
-            ns.name,
-            table,
-            ", ".join(
-                f"{n} {mysqlwire.spark_type_for_column(tc, fl)}"
-                for n, tc, fl in probe_cols
-            ),
-        )
         pd = refine_pushdown(
             pushdown, [c[0] for c in probe_cols], allow_string_predicates=False
         )
@@ -539,11 +514,6 @@ def _read_pg_wire(
         probe_cols, _ = conn.simple_query(
             build_remote_sql(table, Pushdown(limit=0), quote='"')
         )
-        _cache_full_schema(
-            ns.name,
-            table,
-            ", ".join(f"{n} {pgwire.spark_type_for_oid(oid)}" for n, oid in probe_cols),
-        )
         pd = refine_pushdown(pushdown, [c[0] for c in probe_cols])
         cols, rows = conn.simple_query(build_remote_sql(table, pd, quote='"'))
     finally:
@@ -565,38 +535,22 @@ def read_jdbc(
     ns = _NAMESPACES.get(namespace)
     if ns is None:
         raise ValueError(f"unknown database namespace: {namespace!r}")
+    if ns.kind == "sqlite":
+        return _read_sqlite(spark, ns, table, pushdown)
     wire_fallbacks = {"jdbc:postgresql:": _read_pg_wire, "jdbc:mysql:": _read_mysql_wire}
     fallback = next(
         (fn for prefix, fn in wire_fallbacks.items() if ns.url.startswith(prefix)),
         None,
     )
-    # the fallback readers cache the FULL remote schema themselves (from
-    # the probe/PRAGMA); the native JDBC path caches df.schema here.
-    if ns.kind == "sqlite":
-        df = _read_sqlite(spark, ns, table, pushdown)
-    elif ns.kind == "jdbc" and fallback is not None:
-        # Prefer Spark's distributed JDBC reader (native pushdown,
-        # partitioned reads — `pushdown` is ignored there on purpose);
-        # fall back to the native wire-protocol client when the driver jar
-        # is absent so a configured postgres/mysql namespace still
-        # executes instead of dying on a classpath error.
-        try:
-            df = spark.read.jdbc(ns.url, table, properties=ns.properties())
-            _SCHEMA_CACHE[(namespace, table)] = struct_to_schema_json(df.schema)
-        except Exception as jdbc_err:
-            if "ClassNotFoundException" not in str(
-                jdbc_err
-            ) and "No suitable driver" not in str(jdbc_err):
-                raise
-            df = fallback(spark, ns, table, pushdown)
-    else:
-        df = spark.read.jdbc(ns.url, table, properties=ns.properties())
-        _SCHEMA_CACHE[(namespace, table)] = struct_to_schema_json(df.schema)
-    return df
+    from datafusion_server_spark.sources.registry import has_connector
 
-
-def cached_schema(namespace: str, table: str) -> dict | None:
-    return _SCHEMA_CACHE.get((namespace, table))
+    # Spark's distributed JDBC reader when the driver is on the classpath
+    # (native pushdown, partitioned reads — `pushdown` is ignored there on
+    # purpose); else the native wire-protocol client, so a configured
+    # postgres/mysql namespace still executes.
+    if ns.kind == "jdbc" and fallback is not None and not has_connector(spark, ns.url):
+        return fallback(spark, ns, table, pushdown)
+    return spark.read.jdbc(ns.url, table, properties=ns.properties())
 
 
 def register_tables_from_sql(spark: SparkSession, sql: str) -> list[str]:

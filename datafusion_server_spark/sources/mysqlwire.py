@@ -106,7 +106,6 @@ _TYPES: dict[int, tuple] = {
     0x10: (lambda v: v, "binary"),  # BIT (raw)
 }
 _BLOB_CODES = {0xF9, 0xFA, 0xFB, 0xFC}
-_TEXT_CODES = {0x0F, 0xFD, 0xFE}  # VARCHAR, VAR_STRING, STRING
 
 
 def spark_type_for_column(type_code: int, flags: int) -> str:

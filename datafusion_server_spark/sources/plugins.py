@@ -38,10 +38,6 @@ def has_scheme(scheme: str) -> bool:
     return scheme.lower() in _CONNECTORS
 
 
-def list_connectors() -> list[str]:
-    return sorted(_CONNECTORS)
-
-
 def system_info() -> dict:
     # reference plugin_manager.rs:186-199 system_config kwargs
     return {"system_version": __version__, "system_log_level": "info"}
@@ -115,12 +111,11 @@ def load(spark: SparkSession, ds) -> DataFrame:
     if isinstance(result, pa.Table):
         return spark.createDataFrame(result)
     if isinstance(result, bytes):
-        return readers.read_parquet(spark, result, ds.options)
+        return readers.read_parquet(spark, readers.stage_bytes(result, ".parquet"), ds.options)
     if isinstance(result, str):
-        text = result.lstrip()
-        if text.startswith("[") or text.startswith("{"):
-            return readers.read_json_array(spark, result, ds.options)
-        return readers.read_csv(spark, result.encode(), ds.options)
+        if result.lstrip().startswith(("[", "{")):
+            return readers.read_json_array(spark, readers.stage_bytes(result.encode(), ".json"), ds.options)
+        return readers.read_csv(spark, readers.stage_bytes(result.encode(), ".csv"), ds.options)
     if isinstance(result, list):
         return spark.createDataFrame(result)
     raise TypeError(f"connector returned unsupported type: {type(result).__name__}")

@@ -1,29 +1,38 @@
 """Data-source dispatch: (format x URI scheme) -> reader, mirroring the
 reference's ingestion switch (lib/src/context/session_manager.rs:336-416).
 
-Dispatch policy (same shape as the reference):
-- object-store / local **listing** locations (csv/ndjson/parquet/avro on
-  file, s3, gs, abfss, wasbs) register LAZY scans — full predicate
-  pushdown / column pruning / partition pruning stay available
-  (reference A7: object_store/reader.rs:14-134);
-- http(s) buffered formats are fetched, staged, and registered eagerly
-  (reference concat_batches + register_batch, session.rs:248-253) — the
-  registry persists them so repeated queries don't re-fetch;
-- delta (+ versionAsOf), flight, jdbc, and plugin schemes dispatch to
-  their gated readers.
+Plugin schemes, flight, jdbc and delta dispatch to their own readers.
+Every other source resolves its location once (``_resolve``), then one
+format table (``_FORMATS``) reads it:
 
-Scale note: at 100 TB everything flows through the lazy listing path —
-the buffered path exists for REST-pushed payloads (bounded by the 20 MB
-upload limit, settings.rs:213), exactly like the reference.
+- local and object-store **listing** locations register LAZY scans, so
+  predicate pushdown, column pruning and partition pruning stay
+  available (reference A7: object_store/reader.rs:14-134);
+- http(s) sources are fetched and staged to a local file, and S3 sources
+  are staged by the pure-Python client when hadoop-aws is missing; both
+  register eagerly (reference concat_batches + register_batch,
+  session.rs:248-253), so repeated queries don't re-fetch;
+- a whole JSON document, and avro without spark-avro, are decoded by
+  Python from a local path and register eagerly too.
+
+Whether an optional connector (spark-avro, delta-spark, hadoop-aws, a
+JDBC driver) is on the classpath is asked once per process, only when a
+source needs it (``has_connector``). Its answer picks the connector or
+the fallback; a present connector's own read errors reach the caller.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import tempfile
+import threading
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_server_spark.sources import readers
@@ -33,7 +42,6 @@ if TYPE_CHECKING:
     from datafusion_server_spark.session import ServerSession
 
 LISTING_SCHEMES = {"", "file", "s3", "s3a", "gs", "abfss", "wasbs", "hdfs", "webdav"}
-_SCHEME_REWRITE = {"s3": "s3a"}  # hadoop connector scheme
 
 
 class DataSourceError(ValueError):
@@ -68,21 +76,140 @@ class DataSource:
         return DataSource(fmt, str(name), str(location), opts, payload.get("pluginOptions"))
 
 
-def _rewrite_scheme(location: str, scheme: str) -> str:
-    new = _SCHEME_REWRITE.get(scheme)
-    if new:
-        return new + location[len(scheme):]
-    return location
+# -- connector lookup ----------------------------------------------------------
+
+# connector -> found: "avro", "delta", "s3a", or a JDBC URL's "jdbc:<sub>"
+connectors: dict[str, bool] = {}
+_connectors_lock = threading.Lock()
+
+
+def has_connector(spark: SparkSession, connector: str) -> bool:
+    """Whether ``connector`` is on the classpath: the data source "avro"
+    (spark-avro) or "delta" (delta-spark), "s3a" (hadoop-aws), or a JDBC
+    URL (its driver). Asked once per process with the JVM call Spark's
+    own read makes (a class probe would lie: Spark ships avro shim
+    classes without the module)."""
+    key = ":".join(connector.split(":", 2)[:2]) if connector.startswith("jdbc:") else connector
+    with _connectors_lock:
+        found = connectors.get(key)
+        if found is None:
+            jvm = spark._jvm
+            try:
+                if key.startswith("jdbc:"):
+                    jvm.java.sql.DriverManager.getDriver(connector)
+                elif key == "s3a":
+                    jvm.org.apache.hadoop.fs.FileSystem.getFileSystemClass(
+                        "s3a", spark._jsc.hadoopConfiguration())
+                else:
+                    jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+                        key, spark._jsparkSession.sessionState().conf())
+                found = True
+            except (Py4JJavaError, CapturedException):  # the JVM's "not found"
+                found = False
+            connectors[key] = found
+    return found
+
+
+# -- dispatch -------------------------------------------------------------------
+
+
+def _local_path(location: str) -> str | None:
+    """The filesystem path of a bare or ``file://`` location, else None."""
+    u = urlparse(location)
+    return u.path if u.scheme == "file" else location if u.scheme == "" else None
+
+
+def _read_avro(spark: SparkSession, location: str, opts: ReadOptions) -> DataFrame:
+    """spark-avro's lazy scan, or else the pure-Python OCF decoder over
+    the local file or directory of files (A8, reference reader.rs:114-134)."""
+    if has_connector(spark, "avro"):
+        return spark.read.format("avro").load(location)
+    from datafusion_server_spark.sources import avro_py
+
+    parts = [avro_py.read_avro(spark, p) for p in readers.local_files(location)]
+    if not parts:
+        raise DataSourceError(f"no avro files under {location!r}")
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+# format -> reader(spark, location, options)
+_FORMATS = {
+    "csv": readers.read_csv,
+    "ndjson": readers.read_ndjson,
+    "parquet": readers.read_parquet,
+    "orc": readers.read_orc,
+    "json": readers.read_json_array,
+    "avro": _read_avro,
+}
+
+
+def _python_read(spark: SparkSession, fmt: str) -> str | None:
+    """Why ``fmt`` is decoded by Python from a local path rather than
+    scanned by Spark, or None when Spark scans it."""
+    if fmt == "json":
+        return "a whole JSON document is parsed locally; use 'ndjson' for listing reads"
+    if fmt == "avro" and not has_connector(spark, "avro"):
+        return "spark-avro jar missing"
+    return None
+
+
+def _resolve(spark: SparkSession, ds: DataSource, scheme: str, spark_reads: bool) -> tuple[str, bool]:
+    """(location the reader reads, staged): http(s) sources are fetched,
+    and S3 sources without hadoop-aws (or for a Python reader) are
+    listed, into local copies."""
+    if scheme in ("http", "https"):
+        return readers.stage_bytes(readers.fetch(ds.location), "." + ds.format), True
+    if scheme in ("s3", "s3a"):
+        if spark_reads and has_connector(spark, "s3a"):
+            return "s3a" + ds.location[len(scheme):], False
+        from datafusion_server_spark.sources import s3_py
+
+        try:
+            return s3_py.stage_prefix(
+                spark,
+                "s3://" + ds.location.split("://", 1)[1],
+                os.path.join(tempfile.gettempdir(), "spark_graft_s3_stage"),
+            ), True
+        except s3_py.S3Error as se:
+            raise DataSourceError(
+                f"s3 read unavailable (hadoop-aws missing and the "
+                f"pure-Python fallback failed: {se})"
+            ) from se
+    return ds.location, False
+
+
+def _read_delta(spark: SparkSession, ds: DataSource) -> DataFrame:
+    """delta-spark, or else the pure-Python transaction-log replay over a
+    local table (A9, reference deltalake.rs:29-96), whose snapshot files
+    still load through the distributed parquet scan."""
+    version = ds.options.extra.get("version")
+    if has_connector(spark, "delta"):
+        reader = spark.read.format("delta")
+        if version is not None:
+            reader = reader.option("versionAsOf", str(version))
+        return reader.load(ds.location)
+    local = _local_path(ds.location)
+    if local is None or not os.path.isdir(local):
+        raise DataSourceError(
+            "delta reader unavailable (delta-spark missing and location "
+            f"not a local table): {ds.location!r}"
+        )
+    from datafusion_server_spark.sources import delta_py
+
+    try:
+        return delta_py.read_delta(spark, local, int(version) if version is not None else None)
+    except delta_py.DeltaProtocolError as pe:
+        raise DataSourceError(f"delta reader unavailable: {pe}") from pe
 
 
 def load_data_source(spark: SparkSession, ds: DataSource) -> tuple[DataFrame, bool]:
     """Resolve one data source to a DataFrame.
 
     Returns (df, eager): ``eager`` means the source was buffered from a
-    remote/inline payload and should be persisted on registration (the
-    reference materializes these; session.rs:248-253).
+    remote/inline payload or decoded on the driver and should be persisted
+    on registration (the reference materializes these; session.rs:248-253).
     """
-    scheme = urlparse(ds.location).scheme.lower()
+    scheme = urlparse(ds.location).scheme
     fmt = ds.format
 
     # Python connector plugins claim custom schemes (reference A13)
@@ -90,172 +217,30 @@ def load_data_source(spark: SparkSession, ds: DataSource) -> tuple[DataFrame, bo
 
     if plugins.has_scheme(scheme):
         return plugins.load(spark, ds), True
-
-    if fmt in ("csv", "ndjson", "parquet", "orc", "avro") and scheme in LISTING_SCHEMES:
-
-        def read_listing(location: str, loc_scheme: str) -> tuple[DataFrame, bool]:
-            if fmt == "csv":
-                return readers.read_csv(spark, location, ds.options), False
-            if fmt == "ndjson":
-                return readers.read_ndjson(spark, location, ds.options), False
-            if fmt == "parquet":
-                return readers.read_parquet(spark, location, ds.options), False
-            if fmt == "orc":
-                return readers.read_orc(spark, location, ds.options), False
-            # avro: spark-avro jar first (lazy distributed scan), then the
-            # pure-Python OCF fallback for locally readable paths — files
-            # OR directories of files (A8, reference reader.rs:114-134);
-            # the fallback materializes driver-side, hence eager
-            try:
-                return spark.read.format("avro").load(location), False
-            except Exception as e:  # spark-avro package not on classpath
-                local = (
-                    urlparse(location).path
-                    if loc_scheme == "file"
-                    else location if loc_scheme == "" else None
-                )
-                if local is None or not os.path.exists(local):
-                    raise DataSourceError(
-                        f"avro reader unavailable (spark-avro jar missing and "
-                        f"location not locally readable): {e}"
-                    ) from e
-                from datafusion_server_spark.sources import avro_py
-
-                paths = (
-                    sorted(
-                        os.path.join(local, f)
-                        for f in os.listdir(local)
-                        if not f.startswith((".", "_"))
-                    )
-                    if os.path.isdir(local)
-                    else [local]
-                )
-                out = None
-                for p in paths:
-                    with open(p, "rb") as fh:
-                        part = avro_py.read_avro(spark, fh.read())
-                    out = part if out is None else out.unionByName(part)
-                if out is None:
-                    raise DataSourceError(f"no avro files under {local!r}")
-                return out, True
-
-        if scheme in ("s3", "s3a"):
-            # hadoop-aws when present (distributed, pushdown); otherwise
-            # the pure-Python SigV4 client stages the objects locally and
-            # the normal reader takes over (A7 fallback, s3_py.py) —
-            # same execute-without-the-jar contract as avro/delta/pgwire
-            try:
-                return read_listing(_rewrite_scheme(ds.location, scheme), scheme)
-            except Exception as e:
-                # stage when the failure is a MISSING JAR, not a data error:
-                # hadoop-aws absent (S3AFileSystem/ClassNotFound) or, for
-                # avro, spark-avro absent on a non-local location (the
-                # wrapped DataSourceError from read_listing) — staging then
-                # lets the avro_py local fallback read the staged copies
-                missing_jar = (
-                    "S3AFileSystem" in str(e)
-                    or "ClassNotFoundException" in str(e)
-                    or (
-                        isinstance(e, DataSourceError)
-                        and "not locally readable" in str(e)
-                    )
-                )
-                if not missing_jar:
-                    raise
-                import tempfile
-
-                from datafusion_server_spark.sources import s3_py
-
-                try:
-                    staged = s3_py.stage_prefix(
-                        spark,
-                        "s3://" + ds.location.split("://", 1)[1],
-                        os.path.join(tempfile.gettempdir(), "spark_graft_s3_stage"),
-                    )
-                except s3_py.S3Error as se:
-                    raise DataSourceError(
-                        f"s3 read unavailable (hadoop-aws missing and the "
-                        f"pure-Python fallback failed: {se})"
-                    ) from se
-                df, _ = read_listing(staged, "")
-                return df, True  # staged copy = buffered source
-        return read_listing(_rewrite_scheme(ds.location, scheme), scheme)
-
-    if scheme in ("http", "https"):
-        data = readers.fetch(ds.location)
-        if fmt == "csv":
-            return readers.read_csv(spark, data, ds.options), True
-        if fmt == "json":
-            return readers.read_json_array(spark, data, ds.options), True
-        if fmt == "ndjson":
-            return readers.read_ndjson(spark, data, ds.options), True
-        if fmt == "parquet":
-            return readers.read_parquet(spark, data, ds.options), True
-        if fmt == "avro":
-            from datafusion_server_spark.sources import avro_py
-
-            return avro_py.read_avro(spark, data), True
-        raise DataSourceError(f"format {fmt!r} not supported over http(s)")
-
-    if fmt == "json" and scheme in LISTING_SCHEMES:
-        # whole-document JSON array (optionally JSONPath-extracted): the
-        # document itself is read locally; rows register eagerly. Only
-        # local paths reach read_json_array — a raw s3://... string would
-        # otherwise be parsed as the JSON document itself.
-        if scheme == "file":
-            location = urlparse(ds.location).path
-        elif scheme == "":
-            location = ds.location
-        else:
-            raise DataSourceError(
-                f"format 'json' (whole-document array) reads local or "
-                f"http(s) documents; scheme {scheme!r} is not fetchable "
-                f"here — use 'ndjson' for object-store listing reads"
-            )
-        if not os.path.exists(location):
-            raise DataSourceError(f"json document not found: {location}")
-        return readers.read_json_array(spark, location, ds.options), True
-
     if fmt in ("delta", "deltalake"):
-        reader = spark.read.format("delta")
-        version = ds.options.extra.get("version")
-        if version is not None:
-            reader = reader.option("versionAsOf", str(version))
-        try:
-            return reader.load(ds.location), False
-        except Exception as e:  # delta-spark not on classpath
-            # Pure-Python transaction-log replay fallback (A9, reference
-            # deltalake.rs:29-96): local tables only — the snapshot's
-            # files still load through the distributed parquet scan.
-            local = (
-                urlparse(ds.location).path if scheme == "file" else ds.location
-                if scheme == "" else None
-            )
-            if local is None or not os.path.isdir(local):
-                raise DataSourceError(
-                    f"delta reader unavailable (delta-spark missing and "
-                    f"location not a local table): {e}"
-                ) from e
-            from datafusion_server_spark.sources import delta_py
-
-            try:
-                return delta_py.read_delta(
-                    spark, local, int(version) if version is not None else None
-                ), False
-            except delta_py.DeltaProtocolError as pe:
-                raise DataSourceError(f"delta reader unavailable: {pe}") from pe
-
+        return _read_delta(spark, ds), False
     if fmt == "flight" or scheme in ("grpc", "flight"):
         from datafusion_server_spark.sources import flight_client
 
         return flight_client.do_get(spark, ds.location, ds.options), True
-
     if fmt in ("jdbc", "database", "table"):
         from datafusion_server_spark.sources import jdbc
 
         return jdbc.read_table(spark, ds), False
 
-    raise DataSourceError(f"unsupported (format={fmt!r}, scheme={scheme!r})")
+    read = _FORMATS.get(fmt)
+    if read is None or scheme not in LISTING_SCHEMES | {"http", "https"}:
+        raise DataSourceError(f"unsupported (format={fmt!r}, scheme={scheme!r})")
+    why = _python_read(spark, fmt)
+    location, eager = _resolve(spark, ds, scheme, why is None)
+    if why is not None:
+        location = _local_path(location)
+        if location is None or not os.path.exists(location):
+            raise DataSourceError(
+                f"{fmt} reader unavailable ({why}) and {ds.location!r} is not locally readable"
+            )
+        eager = True
+    return read(spark, location, ds.options), eager
 
 
 def register(sess: ServerSession, ds: DataSource) -> DataFrame:

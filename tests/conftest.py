@@ -19,3 +19,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def connector_reads(monkeypatch):
+    """Every connector read the test makes: ``DataFrameReader.format`` of
+    "avro" or "delta", a ``load`` of an ``s3a://`` path, and any
+    ``spark.read.jdbc``. Without the connector each of them fails."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls: list[tuple[str, str]] = []
+
+    def record(method: str, is_connector) -> None:
+        original = getattr(DataFrameReader, method)
+
+        def wrapper(self, arg=None, *args, **kwargs):
+            if is_connector(arg):
+                calls.append((method, str(arg)))
+            return original(self, arg, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameReader, method, wrapper)
+
+    record("format", lambda source: source in ("avro", "delta"))
+    record("load", lambda path: str(path).startswith("s3a://"))
+    record("jdbc", lambda url: True)
+    return calls

@@ -138,6 +138,18 @@ def test_registry_delta_fallback_with_version(spark, tmp_path):
     assert sorted(r["id"] for r in df.collect()) == [1, 2, 3, 4]
 
 
+def test_registry_delta_makes_no_failed_connector_read(spark, tmp_path, connector_reads):
+    """Without delta-spark the registry replays the log directly: no
+    delta-spark read is tried and failed first."""
+    from datafusion_server_spark.sources.registry import DataSource, load_data_source
+
+    ds = DataSource.from_json({"format": "delta", "name": "dt", "location": _make_table(tmp_path)})
+    df, eager = load_data_source(spark, ds)
+    assert connector_reads == []
+    assert eager is False
+    assert sorted((r["id"], r["v"]) for r in df.collect()) == [(3, "v3"), (4, "v4"), (5, "v5")]
+
+
 def test_commit_gap_refused(spark, tmp_path):
     """A retention-cleaned commit with no covering checkpoint must error,
     not silently return a snapshot missing its actions."""

@@ -237,7 +237,26 @@ def test_namespace_fallback_e2e(spark, my_server):
     rows = {r["id"]: r for r in df.collect()}
     assert rows[1]["name"] == "alice" and rows[2]["name"] is None
     assert rows[1]["blob"] == b"\x00\xff\x10"
-    assert jdbc.cached_schema("mywire_ns", "people") is not None
+
+
+def test_query_makes_no_failed_jdbc_read(spark, my_server, connector_reads):
+    """Without a mysql JDBC driver a ``table@ns`` query goes straight to
+    the wire client: no ``spark.read.jdbc`` is tried and failed first."""
+    from datafusion_server_spark.functions.dialect import quote_table_at_namespace
+
+    jdbc.configure_namespace(
+        jdbc.DatabaseNamespace(
+            name="myquery_ns",
+            url=f"jdbc:mysql://127.0.0.1:{my_server.server_address[1]}/{DB}",
+            user=USER,
+            password=PASSWORD,
+        )
+    )
+    sql = "SELECT id, name FROM people@myquery_ns ORDER BY id"
+    assert jdbc.register_tables_from_sql(spark, sql) == ["people@myquery_ns"]
+    rows = spark.sql(quote_table_at_namespace(sql)).collect()
+    assert connector_reads == []
+    assert [(r["id"], r["name"]) for r in rows] == [(1, "alice"), (2, None)]
 
 
 def test_pushdown_splices_numeric_predicates_only(spark, my_server):

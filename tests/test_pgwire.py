@@ -238,10 +238,9 @@ def test_server_error_surfaces(pg_server):
 
 def test_namespace_fallback_e2e(spark, pg_server):
     """A configured postgres namespace executes END TO END without the
-    JDBC jar: spark.read.jdbc dies on the missing driver, the native
-    wire client takes over, and the resulting DataFrame carries proper
-    Spark types + the schema cache entry (reference table flow,
-    table_provider.rs + table_resolver.rs)."""
+    JDBC jar: no postgres driver is on the classpath, so the native
+    wire client reads, and the resulting DataFrame carries proper
+    Spark types (reference table flow, table_provider.rs)."""
     port = pg_server.server_address[1]
     ns = jdbc.DatabaseNamespace(
         name="pgwire_ns",
@@ -258,7 +257,6 @@ def test_namespace_fallback_e2e(spark, pg_server):
     rows = {r["id"]: r for r in df.collect()}
     assert rows[1]["name"] == "alice" and rows[2]["name"] is None
     assert rows[1]["blob"] == b"\x00\xff\x10"
-    assert jdbc.cached_schema("pgwire_ns", "people") is not None
     # and through the SQL pre-pass (table@namespace, raw dialect form)
     from datafusion_server_spark.functions.dialect import quote_table_at_namespace
 
@@ -266,6 +264,26 @@ def test_namespace_fallback_e2e(spark, pg_server):
     registered = jdbc.register_tables_from_sql(spark, raw_sql)
     assert registered == ["people@pgwire_ns"]
     assert spark.sql(quote_table_at_namespace(raw_sql)).collect()[0]["n"] == 2
+
+
+def test_query_makes_no_failed_jdbc_read(spark, pg_server, connector_reads):
+    """Without a postgres JDBC driver a ``table@ns`` query goes straight to
+    the wire client: no ``spark.read.jdbc`` is tried and failed first."""
+    from datafusion_server_spark.functions.dialect import quote_table_at_namespace
+
+    jdbc.configure_namespace(
+        jdbc.DatabaseNamespace(
+            name="pgquery_ns",
+            url=f"jdbc:postgresql://127.0.0.1:{pg_server.server_address[1]}/{DB}",
+            user=USER,
+            password=PASSWORD,
+        )
+    )
+    sql = "SELECT id, name FROM people@pgquery_ns ORDER BY id"
+    assert jdbc.register_tables_from_sql(spark, sql) == ["people@pgquery_ns"]
+    rows = spark.sql(quote_table_at_namespace(sql)).collect()
+    assert connector_reads == []
+    assert [(r["id"], r["name"]) for r in rows] == [(1, "alice"), (2, None)]
 
 
 def test_pushdown_splices_remote_sql(spark, pg_server):

@@ -186,6 +186,30 @@ def test_registry_s3_fallback_e2e(spark, s3_server, tmp_path, monkeypatch):
     ]
 
 
+def test_registry_s3_makes_no_failed_connector_read(spark, s3_server, tmp_path, monkeypatch,
+                                                    connector_reads):
+    """Without hadoop-aws an s3:// source is staged straight away: no
+    s3a:// read is tried and failed first."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    from datafusion_server_spark.sources import credentials
+    from datafusion_server_spark.sources.registry import DataSource, load_data_source
+
+    credentials.configure_s3(
+        spark, access_key=ACCESS, secret_key=SECRET,
+        endpoint=f"http://127.0.0.1:{s3_server.server_address[1]}",
+        region=REGION, bucket=BUCKET, path_style=True,
+    )
+    ds = DataSource.from_json({"format": "csv", "name": "s3csv", "location": f"s3://{BUCKET}/data/"})
+    df, eager = load_data_source(spark, ds)
+    assert connector_reads == []
+    assert eager is True
+    assert sorted((r["id"], r["name"]) for r in df.collect()) == [
+        (1, "alice"), (2, "bob"), (3, "carol"),
+    ]
+
+
 def test_restage_clears_stale_files(spark, s3_server, tmp_path):
     """Re-staging a prefix after objects were deleted in S3 must not
     leave phantom files from the previous staging behind."""

@@ -134,8 +134,9 @@ def test_hit_reads_like_inference_and_starts_no_job(spark, tmp_path, no_racy_win
 
 def test_json_array_hit_matches_inference(spark, no_racy_window):
     doc = b'[{"id": 1, "tags": ["a"], "meta": {"k": 1}}, {"id": 2, "tags": [], "meta": {"k": 2}}]'
-    cold, cold_jobs = _jobs(spark, lambda: readers.read_json_array(spark, doc, ReadOptions()))
-    hit, hit_jobs = _jobs(spark, lambda: readers.read_json_array(spark, doc, ReadOptions()))
+    path = readers.stage_bytes(doc, ".json")
+    cold, cold_jobs = _jobs(spark, lambda: readers.read_json_array(spark, path, ReadOptions()))
+    hit, hit_jobs = _jobs(spark, lambda: readers.read_json_array(spark, path, ReadOptions()))
     assert cold_jobs >= 1
     assert hit_jobs == 0
     assert hit.schema == cold.schema

@@ -18,7 +18,7 @@ NDJSON = b'{"id": 1, "v": "x"}\n{"id": 2, "v": "y"}\n'
 
 
 def test_read_csv_infer(spark):
-    df = readers.read_csv(spark, CSV, ReadOptions())
+    df = readers.read_csv(spark, readers.stage_bytes(CSV, ".csv"), ReadOptions())
     rows = {r["name"]: r for r in (row.asDict() for row in df.collect())}
     assert rows["alice"]["id"] == 1
     assert rows["bob"]["score"] == 7.25
@@ -34,18 +34,18 @@ def test_read_csv_explicit_schema(spark):
             ]
         }
     )
-    df = readers.read_csv(spark, CSV, opts)
+    df = readers.read_csv(spark, readers.stage_bytes(CSV, ".csv"), opts)
     assert dict(df.dtypes) == {"id": "bigint", "name": "string", "score": "double"}
 
 
 def test_read_csv_delimiter_no_header(spark):
     opts = ReadOptions(has_header=False, delimiter=";")
-    df = readers.read_csv(spark, b"1;x\n2;y\n", opts)
+    df = readers.read_csv(spark, readers.stage_bytes(b"1;x\n2;y\n", ".csv"), opts)
     assert df.count() == 2
 
 
 def test_read_json_array_nested(spark):
-    df = readers.read_json_array(spark, JSON_ARRAY, ReadOptions())
+    df = readers.read_json_array(spark, readers.stage_bytes(JSON_ARRAY, ".json"), ReadOptions())
     assert df.count() == 2
     row = df.orderBy("id").collect()[0]
     assert row["tags"] == ["a", "b"]
@@ -54,12 +54,13 @@ def test_read_json_array_nested(spark):
 
 def test_read_json_with_jsonpath(spark):
     doc = json.dumps({"data": {"items": [{"a": 1}, {"a": 2}, {"a": 3}]}}).encode()
-    df = readers.read_json_array(spark, doc, ReadOptions(json_path="$.data.items[*]"))
+    path = readers.stage_bytes(doc, ".json")
+    df = readers.read_json_array(spark, path, ReadOptions(json_path="$.data.items[*]"))
     assert sorted(r["a"] for r in df.collect()) == [1, 2, 3]
 
 
 def test_read_ndjson(spark):
-    df = readers.read_ndjson(spark, NDJSON, ReadOptions())
+    df = readers.read_ndjson(spark, readers.stage_bytes(NDJSON, ".ndjson"), ReadOptions())
     assert df.count() == 2
 
 
@@ -250,6 +251,98 @@ def test_avro_registry_fallback_e2e(spark, tmp_path):
     assert rows[3]["attrs"] == {"b": 2, "c": 3}
 
 
+def test_local_avro_makes_no_failed_connector_read(spark, tmp_path, connector_reads):
+    """Without spark-avro a local avro file goes straight to the Python
+    decoder: no spark-avro read is tried and failed first."""
+    from datafusion_server_spark.sources import avro_py
+    from datafusion_server_spark.sources.registry import DataSource, load_data_source
+
+    p = tmp_path / "people.avro"
+    p.write_bytes(avro_py.write_ocf(AVRO_SCHEMA, AVRO_RECORDS))
+    df, eager = load_data_source(spark, DataSource.from_json(
+        {"format": "avro", "name": "people_avro", "location": str(p)}))
+    assert connector_reads == []
+    assert eager is True
+    assert sorted((r["id"], r["name"], r["nick"]) for r in df.collect()) == [
+        (1, "alice", "al"), (2, "bob", None), (3, "carol", "cc"),
+    ]
+
+
+def _record_lookups(monkeypatch) -> list[str]:
+    """A fresh connector cache that lists each connector looked up."""
+    from datafusion_server_spark.sources import registry
+
+    lookups: list[str] = []
+
+    class Recording(dict):
+        def __setitem__(self, key, value):
+            lookups.append(key)
+            super().__setitem__(key, value)
+
+    monkeypatch.setattr(registry, "connectors", Recording())
+    return lookups
+
+
+def test_connector_lookup_once_and_not_for_builtin_formats(spark, tmp_path, monkeypatch):
+    """A local csv, ndjson, parquet or orc source looks up no connector;
+    avro looks spark-avro up once however often it registers."""
+    from datafusion_server_spark.sources import avro_py, registry
+
+    lookups = _record_lookups(monkeypatch)
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    for fmt, writer in (("csv", "csv"), ("ndjson", "json"), ("parquet", "parquet"), ("orc", "orc")):
+        path = str(tmp_path / fmt)
+        src.write.option("header", "true").format(writer).save(path)
+        df, _ = registry.load_data_source(spark, DataSource.from_json(
+            {"format": fmt, "name": f"t_{fmt}", "location": path}))
+        assert sorted(tuple(r) for r in df.select("id", "v").collect()) == [(1, "a"), (2, "b")]
+    assert lookups == []
+    p = tmp_path / "people.avro"
+    p.write_bytes(avro_py.write_ocf(AVRO_SCHEMA, AVRO_RECORDS))
+    for _ in range(2):
+        registry.load_data_source(spark, DataSource.from_json(
+            {"format": "avro", "name": "people_avro", "location": str(p)}))
+    assert lookups == ["avro"]
+
+
+def test_concurrent_lookups_ask_once(spark, monkeypatch):
+    import sys
+    import threading
+
+    from datafusion_server_spark.sources import registry
+
+    lookups = _record_lookups(monkeypatch)
+    threads = [threading.Thread(target=registry.has_connector, args=(spark, "avro"))
+               for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert lookups == ["avro"]
+
+
+def test_present_connector_error_reaches_caller(spark, tmp_path, monkeypatch):
+    """A connector the lookup found is read with no fallback behind it:
+    its own error reaches the caller. The lookup is cached per process,
+    so the test replaces the cache to fake spark-avro's presence."""
+    from datafusion_server_spark.sources import avro_py, registry
+    from datafusion_server_spark.sources.registry import DataSourceError, load_data_source
+
+    monkeypatch.setattr(registry, "connectors", {"avro": True})
+    p = tmp_path / "people.avro"
+    p.write_bytes(avro_py.write_ocf(AVRO_SCHEMA, AVRO_RECORDS))
+    with pytest.raises(Exception, match="avro") as err:
+        load_data_source(spark, DataSource.from_json(
+            {"format": "avro", "name": "people_avro", "location": str(p)}))
+    assert not isinstance(err.value, DataSourceError)
+
+
 def test_avro_unsupported_codec_clear_error():
     from datafusion_server_spark.sources import avro_py
 
@@ -362,3 +455,72 @@ def test_read_orc_roundtrip(spark, tmp_path):
     assert sorted(back.collect()) == sorted(src.collect())
     plan = back.filter("id = 2").select("s")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan or "ORC" in plan or "orc" in plan
+
+
+@pytest.fixture
+def http_dir(tmp_path):
+    """(directory, base URL) of a localhost HTTP server over a new directory."""
+    import functools
+    import http.server
+    import threading
+
+    root = tmp_path / "served"
+    root.mkdir()
+
+    class Quiet(http.server.SimpleHTTPRequestHandler):
+        def log_message(self, *args):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(
+        ("127.0.0.1", 0), functools.partial(Quiet, directory=str(root)))
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield root, f"http://127.0.0.1:{srv.server_address[1]}"
+    srv.shutdown()
+    srv.server_close()
+
+
+def _parquet_bytes() -> bytes:
+    import io
+
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"id": [1, 2, 3], "name": ["alice", "bob", None]}), buf)
+    return buf.getvalue()
+
+
+def _avro_bytes() -> bytes:
+    from datafusion_server_spark.sources import avro_py
+
+    return avro_py.write_ocf(AVRO_SCHEMA, AVRO_RECORDS)
+
+
+HTTP_CASES = {  # case -> (format, file name, body, options)
+    "csv": ("csv", "t.csv", lambda: CSV, {}),
+    "json": ("json", "t.json", lambda: JSON_ARRAY, {}),
+    "json_path": ("json", "doc.json",
+                  lambda: json.dumps({"data": {"items": [{"a": 1}, {"a": 2}]}}).encode(),
+                  {"jsonPath": "$.data.items[*]"}),
+    "ndjson": ("ndjson", "t.ndjson", lambda: NDJSON, {}),
+    "parquet": ("parquet", "t.parquet", _parquet_bytes, {}),
+    "avro": ("avro", "t.avro", _avro_bytes, {}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HTTP_CASES))
+def test_http_source_reads_like_the_local_file(spark, http_dir, case):
+    """Every format served over http(s) registers eagerly, with the rows
+    and schema of the same file read locally."""
+    from datafusion_server_spark.sources.registry import load_data_source
+
+    root, base = http_dir
+    fmt, name, body, options = HTTP_CASES[case]
+    (root / name).write_bytes(body())
+    local, _ = load_data_source(spark, DataSource.from_json(
+        {"format": fmt, "name": "local", "location": str(root / name), "options": options}))
+    remote, eager = load_data_source(spark, DataSource.from_json(
+        {"format": fmt, "name": "remote", "location": f"{base}/{name}", "options": options}))
+    assert eager is True
+    assert remote.schema == local.schema
+    assert sorted(remote.collect(), key=repr) == sorted(local.collect(), key=repr)
+    assert remote.count() > 0
