@@ -1008,7 +1008,7 @@ def window_groups_exclude_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # r8: the last cheap offset-GROUPS residual — a GROUPS frame in a query
 # with a TOP-LEVEL GROUP BY / HAVING. The dialect pre-pass
-# (rewrite_groups_over_groupby) moves the aggregation into a derived
+# (dialect._groups_over_groupby) moves the aggregation into a derived
 # table (group keys + window-consumed aggregates projected under bound
 # aliases), after which the ordinary dense-rank rewrite applies. The
 # oracle derives the GROUPS-over-aggregate semantics independently via

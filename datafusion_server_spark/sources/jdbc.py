@@ -6,7 +6,7 @@ projection/filter/limit into remote Postgres/MySQL SQL
 source already performs the same pushdowns natively, so this module is
 thin: namespace config -> JDBC URL/properties, and the
 ``table@namespace`` SQL pre-pass of table_register.rs:19-75 (see
-functions.dialect.rewrite_table_at_namespace).
+functions.dialect.quote_table_at_namespace).
 
 Two namespace kinds:
 
@@ -156,6 +156,24 @@ _SAFE_WHERE_WORDS = frozenset(
 )
 
 
+# A literal means the same to Spark and to the remote engine only when it
+# is a plain '...' with no backslash: Spark reads ``\'`` as an escaped
+# quote, Postgres and SQLite as a backslash that closes the literal, so
+# the remote engine would see different SQL (a second statement, a
+# comment eating the rest). Prefixed literals (``r'..'``, ``X'..'``) differ
+# across dialects too.
+_PLAIN_LITERAL = re.compile(r"'(?:[^'\\]|'')*'")
+
+
+def _literals_are_plain(clause: str, mask) -> bool:
+    """True iff every literal placeholder in the masked ``clause`` stands
+    for a plain literal that no remote dialect lexes differently."""
+    return all(
+        not prefix and _PLAIN_LITERAL.fullmatch(mask.lexemes[int(i)])
+        for prefix, i in re.findall(r"(\w?)\x00(\d+)\x00", clause)
+    )
+
+
 def _where_is_pushable(clause: str) -> bool:
     """True iff the (string-protected) WHERE text is built only from plain
     column references, literals, comparison operators, and AND/OR/NOT/IN/
@@ -195,20 +213,18 @@ def extract_pushdown(sql: str, table: str, namespace: str) -> Pushdown:
     degrades to fetching more than strictly needed, never to a wrong
     result.
     """
-    from datafusion_server_spark.functions.dialect import (
-        _protect_strings,
-        _restore_strings,
-    )
+    from datafusion_server_spark.functions.dialect import SqlMask
 
-    protected, literals = _protect_strings(sql)
+    mask = SqlMask(sql)
+    protected = mask.text
     rel = re.escape(f"{table}@{namespace}")
 
     single_select = len(re.findall(r"\bSELECT\b", protected, re.I)) == 1
-    sole_relation = len(re.findall(rf"[`\"]?{rel}[`\"]?", protected)) == 1
+    sole_relation = len(re.findall(rel, protected)) == 1
 
     # locate FROM <rel> [AS alias] once; both projection and filter use it
     m_from = re.search(
-        rf"\bFROM\s+([`\"]?){rel}\1(?P<aliaspart>\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?",
+        rf"\bFROM\s+{rel}(?P<aliaspart>\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?",
         protected,
         re.I,
     )
@@ -227,10 +243,10 @@ def extract_pushdown(sql: str, table: str, namespace: str) -> Pushdown:
     # relation alias stay in); the wire readers intersect it against the
     # remote schema (refine_pushdown), so a stray word only ever
     # over-fetches one column — never breaks the query. Quoted identifiers
-    # (backtick / double quote) disable projection pushdown outright: we
-    # can't tokenize them reliably across dialects.
+    # (backtick / double quote, masked as \x01n\x01) disable projection
+    # pushdown outright: we can't tokenize them reliably across dialects.
     columns: tuple[str, ...] | None = None
-    if "*" not in protected and "`" not in protected and '"' not in protected:
+    if "*" not in protected and "\x01" not in protected:
         candidates: list[str] = []
         for m in re.finditer(r"\b([A-Za-z_]\w*)\b(\s*\()?", protected):
             word, call = m.group(1), m.group(2)
@@ -261,12 +277,16 @@ def extract_pushdown(sql: str, table: str, namespace: str) -> Pushdown:
                 if stop:
                     clause = clause[: stop.start()]
                 clause = clause.strip().rstrip(";").strip()
-                if clause and _where_is_pushable(clause):
+                if (
+                    clause
+                    and _where_is_pushable(clause)
+                    and _literals_are_plain(clause, mask)
+                ):
                     if alias:
                         clause = re.sub(
                             rf"\b{re.escape(alias)}\.", "", clause
                         )
-                    where = _restore_strings(clause, literals)
+                    where = mask.restore(clause)
 
     # -- limit ------------------------------------------------------------
     limit: int | None = None
@@ -299,6 +319,16 @@ def extract_pushdown(sql: str, table: str, namespace: str) -> Pushdown:
     return Pushdown(
         columns=columns, where=where, limit=limit, referenced_words=words
     )
+
+
+def _where_columns(where: str) -> set[str]:
+    """The lowercased column names a pushed WHERE clause references."""
+    from datafusion_server_spark.functions.dialect import SqlMask
+
+    return {
+        m.group(1).lower()
+        for m in re.finditer(r"\b([A-Za-z_]\w*)\b", SqlMask(where).text)
+    } - _SAFE_WHERE_WORDS
 
 
 def refine_pushdown(
@@ -347,16 +377,8 @@ def refine_pushdown(
     if where is not None:
         if not allow_string_predicates and "'" in where:
             where = None
-        else:
-            from datafusion_server_spark.functions.dialect import _protect_strings
-
-            protected, _ = _protect_strings(where)
-            idents = {
-                m.group(1).lower()
-                for m in re.finditer(r"\b([A-Za-z_]\w*)\b", protected)
-            } - _SAFE_WHERE_WORDS
-            if not idents <= set(lower):
-                where = None
+        elif not _where_columns(where) <= set(lower):
+            where = None
     limit = pd.limit
     if limit is not None and pd.where is not None and where is None:
         limit = None
@@ -410,19 +432,12 @@ def _read_sqlite(
         # WHERE takes the limit with it (remote LIMIT before an
         # unapplied WHERE returns the wrong n).
         if pd.where is not None:
-            from datafusion_server_spark.functions.dialect import _protect_strings
-
             numeric = {
                 c.lower()
                 for c, t in decls
                 if _sqlite_spark_type(t) in ("bigint", "double")
             }
-            protected_where, _ = _protect_strings(pd.where)
-            idents = {
-                m.group(1).lower()
-                for m in re.finditer(r"\b([A-Za-z_]\w*)\b", protected_where)
-            } - _SAFE_WHERE_WORDS
-            if not idents <= numeric:
+            if not _where_columns(pd.where) <= numeric:
                 pd = Pushdown(columns=pd.columns, where=None, limit=None)
         if pd.columns:
             decls = [(c, t) for c, t in decls if c in set(pd.columns)]

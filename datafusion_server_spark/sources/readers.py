@@ -19,8 +19,9 @@ reference materializes remote sources eagerly into memory
 (session.rs:248-253); our equivalent is ``persist()`` at registration
 time, which the registry applies. Only the JSONPath shim touches Python:
 it reads the whole document into driver memory, and nothing bounds its
-size. Every schema-inferring read goes through ``_load``, which infers
-each local file's schema once (see the schema cache below).
+size. Every Spark file scan goes through ``_load``, which infers each
+local file's schema once (see the schema cache below) and reads a local
+file named ``_*`` or ``.*`` through a visible link (``_visible``).
 """
 
 from __future__ import annotations
@@ -77,16 +78,20 @@ _STAGE_DIR: str | None = None
 _STAGE_LOCK = threading.Lock()
 
 
+def _stage_dir() -> str:
+    global _STAGE_DIR
+    with _STAGE_LOCK:
+        if _STAGE_DIR is None:
+            _STAGE_DIR = tempfile.mkdtemp(prefix="dfss-stage-")
+        return _STAGE_DIR
+
+
 def stage_bytes(data: bytes, suffix: str) -> str:
     """Spill request bytes to a content-addressed staging file so repeated
     registrations of the same payload reuse one file (and its cached
     schema). Each writer fills its own temp file and renames it into
     place, so concurrent stagings of the same bytes never share a file."""
-    global _STAGE_DIR
-    with _STAGE_LOCK:
-        if _STAGE_DIR is None:
-            _STAGE_DIR = tempfile.mkdtemp(prefix="dfss-stage-")
-        stage_dir = _STAGE_DIR
+    stage_dir = _stage_dir()
     path = os.path.join(stage_dir, hashlib.md5(data).hexdigest() + suffix)
     if not os.path.exists(path):
         fd, tmp = tempfile.mkstemp(dir=stage_dir)
@@ -182,11 +187,32 @@ def local_size(location: str) -> tuple[int, int] | None:
     return sum(sizes), len(sizes)
 
 
+def _visible(location: str) -> str:
+    """``location``, or a symlink to it under a visible name when it is a
+    local file named ``_*`` or ``.*``: Spark's file index skips such a
+    name even when the path names the file itself. Names inside a
+    directory stay skipped, as Spark skips them."""
+    u = urlparse(location)
+    path = u.path if u.scheme == "file" else location if u.scheme == "" else ""
+    name = os.path.basename(path)
+    if not name.startswith((".", "_")) or not os.path.isfile(path):
+        return location
+    target = os.path.abspath(path)
+    link = os.path.join(_stage_dir(), hashlib.md5(target.encode()).hexdigest() + "-" + name.lstrip("._"))
+    try:
+        os.symlink(target, link)
+    except FileExistsError:
+        pass
+    return link
+
+
 def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | None,
           **options: str) -> DataFrame:
-    """Read ``location`` as ``fmt`` with ``options``. With no explicit
+    """Read ``location`` as ``fmt`` with ``options``, every Spark file
+    scan's one entry (``_visible`` applies to all). With no explicit
     ``schema`` the schema comes from the cache, or is inferred as Spark
     does and stored."""
+    location = _visible(location)
     reader = spark.read.format(fmt).options(**options)
     if schema is not None:
         return reader.schema(schema).load(location)
@@ -250,16 +276,17 @@ def read_json_array(spark: SparkSession, path: str, opts: ReadOptions) -> DataFr
                 rows += jp.extract_rows(f.read(), opts.json_path, normalize=opts.require_normalize)
         ndjson = "\n".join(json.dumps(r) for r in rows).encode()
         return read_ndjson(spark, stage_bytes(ndjson, ".ndjson"), opts)
-    if os.path.basename(path).startswith((".", "_")):
-        # Spark skips such a file even when it is named explicitly
-        with open(path, "rb") as f:
-            path = stage_bytes(f.read(), ".json")
     # top-level array: Spark's multiLine JSON reader handles it natively
     return _load(spark, "json", path, opts.spark_schema(), multiLine="true")
 
 
 def read_parquet(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
     return _load(spark, "parquet", path, None)
+
+
+def read_avro(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
+    """spark-avro scan; the caller checks the connector is present."""
+    return _load(spark, "avro", path, None)
 
 
 def read_orc(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:

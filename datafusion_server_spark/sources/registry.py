@@ -123,7 +123,7 @@ def _read_avro(spark: SparkSession, location: str, opts: ReadOptions) -> DataFra
     """spark-avro's lazy scan, or else the pure-Python OCF decoder over
     the local file or directory of files (A8, reference reader.rs:114-134)."""
     if has_connector(spark, "avro"):
-        return spark.read.format("avro").load(location)
+        return readers.read_avro(spark, location, opts)
     from datafusion_server_spark.sources import avro_py
 
     parts = [avro_py.read_avro(spark, p) for p in readers.local_files(location)]

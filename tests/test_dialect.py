@@ -847,3 +847,35 @@ def test_offset_groups_natural_join_expansion(spark):
         ),
     ]:
         assert rewrite_offset_groups(bad, res) == bad
+
+
+def test_offset_groups_backtick_qualified_sole_relation(spark):
+    """A backtick-quoted column behind the sole relation's qualifier
+    keeps its quotes while the qualifier is stripped in the outer query."""
+    sess = spark.newSession()
+    sess.createDataFrame(
+        [(1, 1), (1, 2), (2, 3), (3, 4), (3, 5), (3, 6)], "x bigint, v bigint"
+    ).createOrReplaceTempView("t")
+    sql = "SELECT t.`x`, SUM(v) OVER (ORDER BY t.`x` GROUPS 1 PRECEDING) AS w FROM t"
+    out = transpile(sql)
+    assert out.startswith("SELECT `x`, ")
+    got = sorted(tuple(r) for r in sess.sql(out).collect())
+    assert got == [(1, 3), (1, 3), (2, 6), (3, 18), (3, 18), (3, 18)]
+
+
+def test_offset_groups_backtick_qualified_join(spark):
+    """The same over a two-relation join resolved through ``columns_of``."""
+    sess = spark.newSession()
+    sess.createDataFrame([(1, 0), (2, 0), (3, 0)], "k bigint, v bigint").createOrReplaceTempView("a")
+    sess.createDataFrame(
+        [(1, 10), (1, 20), (2, 30), (3, 40)], "k2 bigint, w bigint"
+    ).createOrReplaceTempView("b")
+    cols = {"a": ["k", "v"], "b": ["k2", "w"]}
+    sql = (
+        "SELECT a.`k`, SUM(b.w) OVER (ORDER BY a.`k` GROUPS 1 PRECEDING) AS r "
+        "FROM a JOIN b ON a.`k` = b.k2"
+    )
+    out = transpile(sql, lambda t: cols[t])
+    assert "GROUPS" not in out
+    got = sorted(tuple(r) for r in sess.sql(out).collect())
+    assert got == [(1, 30), (1, 30), (2, 60), (3, 70)]

@@ -1,7 +1,8 @@
 """Seeded fuzz of the GROUPS dialect rewriter (r9, verdict task 2).
 
-The rewriter is ~900 lines of staged text surgery grown over four
-rounds; its failure mode of record (r7 ADVICE #1, r8 ADVICE #2) is
+The rewriter (the GROUPS passes of ``functions/dialect.py``) is about
+1,100 lines, some 720 of them code, of staged text surgery over masked
+SQL; its failure mode of record is
 emitting inner SQL that fails Spark analysis instead of the documented
 clear reject. This fuzzer generates hundreds of structured GROUPS
 queries — frame bounds x EXCLUDE x PARTITION x order-key ties x

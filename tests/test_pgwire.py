@@ -340,3 +340,26 @@ def test_pushdown_unsafe_predicates_degrade_to_full_fetch(spark, pg_server):
 
     rows = spark.sql(quote_table_at_namespace(sql)).collect()
     assert [r["name"] for r in rows] == ["alice"]
+
+
+def test_pushdown_keeps_backslash_literals_local(spark, pg_server):
+    """Spark reads ``\\'`` inside a literal as an escaped quote; Postgres
+    reads a backslash that ends the literal. A WHERE holding one is never
+    spliced into the remote statement, where the rest of the literal
+    would run as SQL."""
+    jdbc.configure_namespace(
+        jdbc.DatabaseNamespace(
+            name="pgdrop_ns",
+            url=f"jdbc:postgresql://127.0.0.1:{pg_server.server_address[1]}/{DB}",
+            user=USER,
+            password=PASSWORD,
+        )
+    )
+    sql = r"SELECT name FROM people@pgdrop_ns WHERE name = 'x\'; DROP TABLE people; --'"
+    pg_server.received_sql.clear()
+    assert jdbc.register_tables_from_sql(spark, sql) == ["people@pgdrop_ns"]
+    assert pg_server.received_sql
+    assert not any("DROP" in s or "WHERE" in s for s in pg_server.received_sql)
+    from datafusion_server_spark.functions.dialect import quote_table_at_namespace
+
+    assert spark.sql(quote_table_at_namespace(sql)).collect() == []

@@ -466,3 +466,37 @@ def test_server_sessions_run_with_aqe_on(spark):
         eng.sessions.delete(sess.session_id)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_sqlite_pushdown_keeps_the_rows_spark_keeps(spark, tmp_path):
+    """The remote scan must not filter or cut rows the statement never
+    filtered: WHERE and LIMIT inside a comment are not SQL, and a WHERE
+    that SQLite would lex differently from Spark is not pushed."""
+    import sqlite3
+
+    from datafusion_server_spark.server.api import Engine
+    from datafusion_server_spark.sources import jdbc
+
+    db = tmp_path / "ops.sqlite"
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE t (a INTEGER, x INTEGER)")
+        conn.executemany("INSERT INTO t VALUES (?, ?)", [(1, 1), (2, 2), (3, 1), (4, 3)])
+    cfg = tmp_path / "cfg.toml"
+    cfg.write_text(f'[[databases]]\ntype = "sqlite"\nnamespace = "ops"\ndatabase = "{db}"\n')
+    engine = Engine(spark, start_reaper=False, settings=Settings.load(cfg))
+    try:
+        pd = jdbc.extract_pushdown("SELECT a, x FROM t@ops -- WHERE x = 1 LIMIT 2", "t", "ops")
+        assert pd.where is None and pd.limit is None
+        data, _ = engine.dataframe_query(
+            {"query": "SELECT a, x FROM t@ops -- WHERE x = 1 LIMIT 2"}
+        )
+        assert sorted(r["a"] for r in json.loads(data)) == [1, 2, 3, 4]
+        # Spark reads one literal up to the last quote and keeps every
+        # row; SQLite would end the literal at the backslash and read
+        # `OR x < 0 --...`, keeping none.
+        sql = r"SELECT a, x FROM t@ops WHERE 'a\' OR x < 0 --' <> 'b' OR x >= 0"
+        assert jdbc.extract_pushdown(sql, "t", "ops").where is None
+        data, _ = engine.dataframe_query({"query": sql})
+        assert sorted(r["a"] for r in json.loads(data)) == [1, 2, 3, 4]
+    finally:
+        jdbc._NAMESPACES.pop("ops", None)

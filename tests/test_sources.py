@@ -524,3 +524,34 @@ def test_http_source_reads_like_the_local_file(spark, http_dir, case):
     assert remote.schema == local.schema
     assert sorted(remote.collect(), key=repr) == sorted(local.collect(), key=repr)
     assert remote.count() > 0
+
+
+@pytest.mark.parametrize(
+    "fmt,hidden",
+    [("csv", ".h.csv"), ("parquet", "_p.parquet"), ("ndjson", ".n.ndjson"),
+     ("orc", "_o.orc"), ("json", ".d.json")],
+)
+def test_hidden_file_name_registers(spark, tmp_path, fmt, hidden):
+    """Spark's file index skips a file named ``_*`` or ``.*`` even when
+    the path names it; such a file reads the same rows as a copy of it
+    under a visible name."""
+    import pyarrow.orc as po
+    import pyarrow.parquet as pq
+
+    from datafusion_server_spark.sources import registry
+
+    table = pa.table({"id": [1, 2, 3], "v": ["a", "b", "c"]})
+    writers = {
+        "csv": lambda p: p.write_text("id,v\n1,a\n2,b\n3,c\n"),
+        "parquet": lambda p: pq.write_table(table, p),
+        "ndjson": lambda p: p.write_text("".join(json.dumps(r) + "\n" for r in table.to_pylist())),
+        "orc": lambda p: po.write_table(table, str(p)),
+        "json": lambda p: p.write_text(json.dumps(table.to_pylist())),
+    }
+    rows = {}
+    for name in (hidden, "visible" + hidden[2:]):
+        writers[fmt](tmp_path / name)
+        df, _ = registry.load_data_source(spark, DataSource.from_json(
+            {"format": fmt, "name": f"t_{fmt}", "location": str(tmp_path / name)}))
+        rows[name] = sorted(tuple(r) for r in df.select("id", "v").collect())
+    assert rows[hidden] == rows["visible" + hidden[2:]] == [(1, "a"), (2, "b"), (3, "c")]
