@@ -91,6 +91,8 @@ _BRACKET = re.compile(r"/\*|\*/")
 _DELIM = {"lit": "\x00", "name": "\x01", "comment": "\x02"}
 _PLACEHOLDER = re.compile(r"([\x00-\x02])(\d+)\1")
 _COMMENT = re.compile(r"\x02\d+\x02")
+# whitespace or a comment placeholder: what separates two tokens
+_S = rf"(?:\s|{_COMMENT.pattern})"
 
 
 class SqlMask:
@@ -133,6 +135,11 @@ class SqlMask:
             return token
         lexeme = self.lexemes[int(m.group(2))]
         return lexeme[1:-1].replace("``", "`") if lexeme[0] == "`" else None
+
+    def code(self) -> str:
+        """``text`` with each comment placeholder read as a space: the
+        SQL alone, for a scan that carries no comment over."""
+        return _COMMENT.sub(" ", self.text)
 
     def restore(self, text: str) -> str:
         def put(m: re.Match) -> str:
@@ -278,7 +285,10 @@ class UnsupportedDialectFeature(ValueError):
     produce an opaque failure."""
 
 
-_GROUPS_FRAME = re.compile(r"\bGROUPS\s+BETWEEN\b|\bGROUPS\s+(\d+|UNBOUNDED)\s+PRECEDING\b", re.IGNORECASE)
+# The GROUPS patterns below read a comment placeholder as whitespace (``_S``).
+_GROUPS_FRAME = re.compile(
+    rf"\bGROUPS{_S}+BETWEEN\b|\bGROUPS{_S}+(\d+|UNBOUNDED){_S}+PRECEDING\b", re.IGNORECASE
+)
 
 # A GROUPS frame whose endpoints are UNBOUNDED PRECEDING / CURRENT ROW /
 # UNBOUNDED FOLLOWING is value-identical to the same RANGE frame: RANGE
@@ -286,22 +296,22 @@ _GROUPS_FRAME = re.compile(r"\bGROUPS\s+BETWEEN\b|\bGROUPS\s+(\d+|UNBOUNDED)\s+P
 # is exactly what GROUPS CURRENT ROW means. Only offset GROUPS frames
 # (``GROUPS n PRECEDING``) have no Spark equivalent.
 _GROUPS_REWRITABLE = re.compile(
-    r"\bGROUPS\s+(BETWEEN\s+(?:UNBOUNDED\s+PRECEDING|CURRENT\s+ROW)\s+AND\s+"
-    r"(?:UNBOUNDED\s+FOLLOWING|CURRENT\s+ROW)|UNBOUNDED\s+PRECEDING)\b",
+    rf"\bGROUPS{_S}+(BETWEEN{_S}+(?:UNBOUNDED{_S}+PRECEDING|CURRENT{_S}+ROW){_S}+AND{_S}+"
+    rf"(?:UNBOUNDED{_S}+FOLLOWING|CURRENT{_S}+ROW)|UNBOUNDED{_S}+PRECEDING)\b",
     re.IGNORECASE,
 )
 
 
 def _groups_frames(text: str) -> str:
     text = re.sub(
-        r"(GROUPS\s+[^()]*?)\s+EXCLUDE\s+NO\s+OTHERS\b",
+        rf"(GROUPS{_S}+[^()]*?){_S}+EXCLUDE{_S}+NO{_S}+OTHERS\b",
         r"\1",
         text,
         flags=re.IGNORECASE,
     )
     return _GROUPS_REWRITABLE.sub(
         lambda m: m.group(0)
-        if re.match(r"\s*EXCLUDE\b", text[m.end():], re.IGNORECASE)
+        if re.match(rf"{_S}*EXCLUDE\b", text[m.end():], re.IGNORECASE)
         else f"RANGE {m.group(1)}",
         text,
     )
@@ -340,12 +350,12 @@ def rewrite_groups_frames(sql: str) -> str:
 # rejected with a clear message.
 
 _OFFSET_GROUPS_SPEC = re.compile(
-    r"^(?P<head>.*?\bORDER\s+BY\b.*?)\s*"
-    r"\bGROUPS\s+(?P<frame>"
-    r"BETWEEN\s+(?:UNBOUNDED\s+PRECEDING|\d+\s+(?:PRECEDING|FOLLOWING)|CURRENT\s+ROW)"
-    r"\s+AND\s+(?:UNBOUNDED\s+FOLLOWING|\d+\s+(?:PRECEDING|FOLLOWING)|CURRENT\s+ROW)"
-    r"|\d+\s+PRECEDING)"
-    r"\s*(?P<excl>EXCLUDE\s+(?:NO\s+OTHERS|CURRENT\s+ROW|GROUP|TIES))?\s*$",
+    rf"^(?P<head>.*?\bORDER\s+BY\b.*?){_S}*"
+    rf"\bGROUPS{_S}+(?P<frame>"
+    rf"BETWEEN{_S}+(?:UNBOUNDED{_S}+PRECEDING|\d+{_S}+(?:PRECEDING|FOLLOWING)|CURRENT{_S}+ROW)"
+    rf"{_S}+AND{_S}+(?:UNBOUNDED{_S}+FOLLOWING|\d+{_S}+(?:PRECEDING|FOLLOWING)|CURRENT{_S}+ROW)"
+    rf"|\d+{_S}+PRECEDING)"
+    rf"{_S}*(?P<excl>EXCLUDE{_S}+(?:NO{_S}+OTHERS|CURRENT{_S}+ROW|GROUP|TIES))?{_S}*$",
     re.IGNORECASE | re.DOTALL,
 )
 

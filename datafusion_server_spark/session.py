@@ -15,10 +15,16 @@ Scale notes (100 TB / 1000-executor design):
   partition. When every input is one file it runs ``SMALL_PLAN_CONF``,
   which also turns broadcast off, and registers every source as one
   partition, so each query is one Spark job of one stage: no exchange,
-  no broadcast job. When some input is a tree of several files it runs
-  ``SMALL_SPLIT_CONF`` over Spark's own splits. Every other session
-  (named sessions, one-shots with no sources, ``table@ns`` relations,
-  remote, glob or larger inputs) runs ``SERVING_CONF``.
+  no broadcast job. A file such a session has seen before is read from
+  one shared one-partition materialization (``sources.readers``): the
+  query scans blocks in memory inside its one codegen stage, with no
+  file scan to set up and no extra codegen stage for a coalesce. The
+  materializations are bounded by file bytes (``SHARED_READ_BYTES``,
+  eight times ``SMALL_INPUT_BYTES``). When some input is a tree of
+  several files it runs ``SMALL_SPLIT_CONF`` over Spark's own splits.
+  Every other session (named sessions, one-shots with no sources,
+  ``table@ns`` relations, remote, glob or larger inputs) runs
+  ``SERVING_CONF``.
 - Under ``SERVING_CONF``, AQE on: runtime join-strategy switching,
   skew-join splitting, and partition coalescing replace any hand-tuned
   physical planning.
@@ -36,7 +42,7 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import SparkSession
 
@@ -164,7 +170,9 @@ class ServerSession:
     id, created timestamp, TTL, and its data sources — each name mapped to
     the parsed ``DataSource`` it was loaded from, so a refresh replays it
     with every option. A ``single_partition`` session (one planned with
-    ``SMALL_PLAN_CONF``) registers every data source as one partition.
+    ``SMALL_PLAN_CONF``) has every data source registered as one partition
+    (``sources.registry.register``); ``releases`` frees the shared reads
+    among them when the session closes.
     """
 
     session_id: str
@@ -176,6 +184,9 @@ class ServerSession:
     data_sources: dict[str, DataSource] = field(default_factory=dict)
     # the dialect-shim functions are installed by the first SQL naming one
     has_session_functions: bool = False
+    # releases of the shared one-partition reads its views hold
+    # (``sources.readers._load``), called at close
+    releases: list[Callable[[], None]] = field(default_factory=list)
 
     def touch(self) -> None:
         self.last_access = time.time()
@@ -202,10 +213,6 @@ class ServerSession:
         """
         if name in self.data_sources:
             self.spark.catalog.uncacheTable(name)
-        if self.single_partition and source is not None:
-            # merge and INSERT results over one-partition views are one
-            # partition already; a coalesce of them cost ~7 ms of analysis
-            df = df.coalesce(1)
         df.createOrReplaceTempView(name)
         if cache:
             df.persist()
@@ -246,10 +253,15 @@ class ServerSession:
         SparkSession alone would not)."""
         # a Scala Seq read by index: one py4j round trip per name
         # (iterating it as a Java list costs dozens)
-        names = self.spark._jsparkSession.sessionState().catalog().getTempViewNames()
-        for i in range(names.size()):
-            self.spark.catalog.dropTempView(names.apply(i))
-        self.data_sources.clear()
+        try:
+            names = self.spark._jsparkSession.sessionState().catalog().getTempViewNames()
+            for i in range(names.size()):
+                self.spark.catalog.dropTempView(names.apply(i))
+            self.data_sources.clear()
+        finally:
+            for release in self.releases:
+                release()
+            self.releases.clear()
 
 
 class SessionManager:

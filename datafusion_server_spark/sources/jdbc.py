@@ -216,7 +216,7 @@ def extract_pushdown(sql: str, table: str, namespace: str) -> Pushdown:
     from datafusion_server_spark.functions.dialect import SqlMask
 
     mask = SqlMask(sql)
-    protected = mask.text
+    protected = mask.code()
     rel = re.escape(f"{table}@{namespace}")
 
     single_select = len(re.findall(r"\bSELECT\b", protected, re.I)) == 1

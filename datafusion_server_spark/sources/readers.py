@@ -20,12 +20,15 @@ reference materializes remote sources eagerly into memory
 time, which the registry applies. Only the JSONPath shim touches Python:
 it reads the whole document into driver memory, and nothing bounds its
 size. Every Spark file scan goes through ``_load``, which infers each
-local file's schema once (see the schema cache below) and reads a local
-file named ``_*`` or ``.*`` through a visible link (``_visible``).
+local file's schema once (see the schema cache below), reads a local
+file named ``_*`` or ``.*`` through a visible link (``_visible``), and,
+for a one-partition session, reads a file it has seen before from one
+shared one-partition materialization held in the same cache entry.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -38,11 +41,12 @@ from collections import OrderedDict
 from dataclasses import dataclass, field
 from urllib.parse import urlparse
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from datafusion_server_spark.schema import to_struct_type
-from datafusion_server_spark.session import SMALL_PLAN_CONF
+from datafusion_server_spark.session import SMALL_INPUT_BYTES, SMALL_PLAN_CONF
 from datafusion_server_spark.sources import jsonpath as jp
 
 
@@ -105,7 +109,7 @@ def stage_bytes(data: bytes, suffix: str) -> str:
     return path
 
 
-# -- schema cache --------------------------------------------------------------
+# -- schema cache and shared one-partition reads -------------------------------
 #
 # Schema inference reads the files on every registration: one Spark job for
 # Parquet and JSON, two for CSV. The cache maps what inference depends on
@@ -115,8 +119,21 @@ def stage_bytes(data: bytes, suffix: str) -> str:
 # size, mtime, ctime) of the file or of every entry of the directory tree
 # Spark lists. Any rewrite, re-creation or utime changes a ctime, so a
 # changed file misses instead of being evicted.
+#
+# A one-partition session (``session.SMALL_PLAN_CONF``) that reads a file
+# the cache already knows (its second sighting) reads it from a shared
+# materialization: the entry also keeps the analyzed plan of a lazy
+# ``localCheckpoint`` of the one-partition read, built once in a private
+# reader session no tenant can reach or ``SET``, and only for a session
+# whose conf (less the plan keys) is the reader's. It starts no job: the
+# first query over it fills Spark's block store as a side effect, and
+# every later one scans those blocks (an RDD scan inside the query's one
+# codegen stage) instead of setting up a file scan and decoding the file.
 
 SCHEMA_CACHE_ENTRIES = 256
+# Materialized entries hold at most this many bytes of files: eight of the
+# largest inputs a one-shot reads as one partition.
+SHARED_READ_BYTES = 8 * SMALL_INPUT_BYTES
 # Racy-timestamp rule (as in git's index): a tree whose newest ctime is
 # younger than this is never cached, so a rewrite inside the filesystem's
 # timestamp granularity cannot leave the key unchanged.
@@ -130,8 +147,102 @@ _UNCACHED_CHARS = frozenset("*?[]{}\\%#;")
 # ", " or ")".
 _PLAN_ENTRIES = re.compile("|".join(f"(?<=[( ]){re.escape(k)} -> [^,)]*(, )?" for k in SMALL_PLAN_CONF))
 
-_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+
+@dataclass
+class _Entry:
+    """A schema-cache entry: the inferred schema and, once materialized,
+    the analyzed one-partition ``LogicalRDD`` (a JVM plan) and the number
+    of sessions whose views read it. An entry in use is never evicted."""
+
+    schema: StructType
+    size: int  # bytes of the files
+    plan: JavaObject | None = None
+    users: int = 0
+
+
+_schemas: OrderedDict[tuple, _Entry] = OrderedDict()
 _schemas_lock = threading.Lock()
+# the private reader session, its conf less the plan keys, and the JVM
+# Dataset class whose ofRows serves a plan to a tenant session
+_reader: tuple[SparkSession, str, JavaObject] | None = None
+
+
+def _conf(spark: SparkSession) -> str:
+    """The session's SQL conf in text form, less the plan keys."""
+    return _PLAN_ENTRIES.sub("", spark._jsparkSession.sessionState().conf().getAllConfs().toString())
+
+
+def _reader_for(spark: SparkSession) -> tuple[SparkSession, str, JavaObject]:
+    """The private reader session over ``spark``'s SparkContext. A new
+    SparkContext drops every materialization of the old one."""
+    global _reader
+    with _schemas_lock:
+        if _reader is None or _reader[0].sparkContext is not spark.sparkContext:
+            for e in _schemas.values():
+                e.plan = None
+            reader = spark.newSession()
+            for k, v in SMALL_PLAN_CONF.items():
+                reader.conf.set(k, v)
+            _reader = (reader, _conf(reader), spark._jvm.org.apache.spark.sql.classic.Dataset)
+        return _reader
+
+
+def _shrink() -> None:
+    """Evict idle entries, least recently used first, until at most
+    ``SCHEMA_CACHE_ENTRIES`` remain and the materialized ones hold at most
+    ``SHARED_READ_BYTES`` of files. Evicting a materialization unpersists
+    its blocks (the plan is not in the CacheManager, so
+    ``Dataset.unpersist`` would not). Call with the lock held."""
+    excess = len(_schemas) - SCHEMA_CACHE_ENTRIES
+    shared = sum(e.size for e in _schemas.values() if e.plan is not None)
+    for key, e in list(_schemas.items()):
+        if excess <= 0 and shared <= SHARED_READ_BYTES:
+            return
+        if e.users:
+            continue
+        if e.plan is not None:
+            e.plan.rdd().unpersist(False)
+            e.plan = None
+            shared -= e.size
+        if excess > 0:
+            del _schemas[key]
+            excess -= 1
+
+
+def _release(entry: _Entry) -> None:
+    with _schemas_lock:
+        entry.users -= 1
+        _shrink()
+
+
+def _serve(spark: SparkSession, key: tuple, entry: _Entry, fmt: str, location: str,
+           options: dict, releases: list) -> DataFrame | None:
+    """``entry``'s shared one-partition read as a DataFrame of ``spark``,
+    materializing it on first need, with its release appended to
+    ``releases``; None when ``spark``'s conf is not the reader's, or the
+    entry was evicted meanwhile."""
+    reader, reader_conf, dataset = _reader_for(spark)
+    if key[2] != reader_conf:
+        return None
+    built = None
+    if entry.plan is None:
+        df = (reader.read.format(fmt).options(**options).schema(entry.schema).load(location)
+              .coalesce(1).localCheckpoint(eager=False))
+        built = df._jdf.queryExecution().analyzed()
+    with _schemas_lock:
+        cached = _schemas.get(key) is entry
+        if cached and entry.plan is None and built is not None:
+            entry.plan, built = built, None
+        plan = entry.plan if cached else None
+        if plan is not None:
+            entry.users += 1
+            _shrink()
+    if built is not None:  # another thread materialized it first
+        built.rdd().unpersist(False)
+    if plan is None:
+        return None
+    releases.append(functools.partial(_release, entry))
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
 def _stat_tree(path: str, out: list) -> None:
@@ -207,32 +318,37 @@ def _visible(location: str) -> str:
 
 
 def _load(spark: SparkSession, fmt: str, location: str, schema: StructType | None,
-          **options: str) -> DataFrame:
+          releases: list | None = None, **options: str) -> DataFrame:
     """Read ``location`` as ``fmt`` with ``options``, every Spark file
     scan's one entry (``_visible`` applies to all). With no explicit
     ``schema`` the schema comes from the cache, or is inferred as Spark
-    does and stored."""
+    does and stored. Given ``releases`` (a one-partition session's), a
+    file the cache knows is read from its shared one-partition
+    materialization, and the entry's release is appended to
+    ``releases``; any other read is returned as it is."""
     location = _visible(location)
+    files = None if schema is not None else _file_identity(location)
+    if files is not None:
+        key = (fmt, tuple(sorted(options.items())), _conf(spark), files)
+        with _schemas_lock:
+            entry = _schemas.get(key)
+            if entry is not None:
+                _schemas.move_to_end(key)
+        if entry is not None:
+            if releases is not None:
+                served = _serve(spark, key, entry, fmt, location, options, releases)
+                if served is not None:
+                    return served
+            schema = entry.schema
     reader = spark.read.format(fmt).options(**options)
     if schema is not None:
         return reader.schema(schema).load(location)
-    files = _file_identity(location)
-    if files is None:
-        return reader.load(location)
-    conf = _PLAN_ENTRIES.sub("", spark._jsparkSession.sessionState().conf().getAllConfs().toString())
-    key = (fmt, tuple(sorted(options.items())), conf, files)
-    with _schemas_lock:
-        cached = _schemas.get(key)
-        if cached is not None:
-            _schemas.move_to_end(key)
-    if cached is not None:
-        return reader.schema(cached).load(location)
     df = reader.load(location)
-    inferred = df.schema
-    with _schemas_lock:
-        _schemas[key] = inferred
-        if len(_schemas) > SCHEMA_CACHE_ENTRIES:
-            _schemas.popitem(last=False)
+    if files is not None:
+        inferred = _Entry(df.schema, sum(e[3] for e in files if not stat.S_ISDIR(e[1])))
+        with _schemas_lock:
+            _schemas.setdefault(key, inferred)
+            _shrink()
     return df
 
 
@@ -253,20 +369,21 @@ def local_files(path: str) -> list[str]:
     return sorted(os.path.join(path, f) for f in os.listdir(path) if not f.startswith((".", "_")))
 
 
-def read_csv(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, opts: ReadOptions, releases: list | None = None) -> DataFrame:
     # infer-N semantics: Spark's inferSchema samples the whole file; the
     # reference samples the first N rows. Whole-file inference is a
     # superset — schema differences only arise when later rows widen a
     # column, which the reference would have gotten wrong anyway.
-    return _load(spark, "csv", path, opts.spark_schema(),
+    return _load(spark, "csv", path, opts.spark_schema(), releases,
                  header=str(opts.has_header).lower(), sep=opts.delimiter, inferSchema="true")
 
 
-def read_ndjson(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
-    return _load(spark, "json", path, opts.spark_schema())
+def read_ndjson(spark: SparkSession, path: str, opts: ReadOptions, releases: list | None = None) -> DataFrame:
+    return _load(spark, "json", path, opts.spark_schema(), releases)
 
 
-def read_json_array(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
+def read_json_array(spark: SparkSession, path: str, opts: ReadOptions,
+                    releases: list | None = None) -> DataFrame:
     """Whole-document JSON array at the local ``path`` (a file, or a
     directory of documents); optional JSONPath extraction (A2 + A4)."""
     if opts.json_path:
@@ -275,22 +392,22 @@ def read_json_array(spark: SparkSession, path: str, opts: ReadOptions) -> DataFr
             with open(doc, encoding="utf-8") as f:
                 rows += jp.extract_rows(f.read(), opts.json_path, normalize=opts.require_normalize)
         ndjson = "\n".join(json.dumps(r) for r in rows).encode()
-        return read_ndjson(spark, stage_bytes(ndjson, ".ndjson"), opts)
+        return read_ndjson(spark, stage_bytes(ndjson, ".ndjson"), opts, releases)
     # top-level array: Spark's multiLine JSON reader handles it natively
-    return _load(spark, "json", path, opts.spark_schema(), multiLine="true")
+    return _load(spark, "json", path, opts.spark_schema(), releases, multiLine="true")
 
 
-def read_parquet(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
-    return _load(spark, "parquet", path, None)
+def read_parquet(spark: SparkSession, path: str, opts: ReadOptions, releases: list | None = None) -> DataFrame:
+    return _load(spark, "parquet", path, None, releases)
 
 
-def read_avro(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
+def read_avro(spark: SparkSession, path: str, opts: ReadOptions, releases: list | None = None) -> DataFrame:
     """spark-avro scan; the caller checks the connector is present."""
-    return _load(spark, "avro", path, None)
+    return _load(spark, "avro", path, None, releases)
 
 
-def read_orc(spark: SparkSession, path: str, opts: ReadOptions) -> DataFrame:
+def read_orc(spark: SparkSession, path: str, opts: ReadOptions, releases: list | None = None) -> DataFrame:
     """ORC scan (beyond-reference: DataFusion has no ORC reader, Spark
     ships one natively with the same pushdown/pruning surface as
     parquet — predicate pushdown, column pruning, vectorized read)."""
-    return _load(spark, "orc", path, None)
+    return _load(spark, "orc", path, None, releases)

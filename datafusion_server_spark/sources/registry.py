@@ -119,11 +119,12 @@ def _local_path(location: str) -> str | None:
     return u.path if u.scheme == "file" else location if u.scheme == "" else None
 
 
-def _read_avro(spark: SparkSession, location: str, opts: ReadOptions) -> DataFrame:
+def _read_avro(spark: SparkSession, location: str, opts: ReadOptions,
+               releases: list | None = None) -> DataFrame:
     """spark-avro's lazy scan, or else the pure-Python OCF decoder over
     the local file or directory of files (A8, reference reader.rs:114-134)."""
     if has_connector(spark, "avro"):
-        return readers.read_avro(spark, location, opts)
+        return readers.read_avro(spark, location, opts, releases)
     from datafusion_server_spark.sources import avro_py
 
     parts = [avro_py.read_avro(spark, p) for p in readers.local_files(location)]
@@ -132,7 +133,7 @@ def _read_avro(spark: SparkSession, location: str, opts: ReadOptions) -> DataFra
     return functools.reduce(DataFrame.unionByName, parts)
 
 
-# format -> reader(spark, location, options)
+# format -> reader(spark, location, options, releases)
 _FORMATS = {
     "csv": readers.read_csv,
     "ndjson": readers.read_ndjson,
@@ -202,12 +203,15 @@ def _read_delta(spark: SparkSession, ds: DataSource) -> DataFrame:
         raise DataSourceError(f"delta reader unavailable: {pe}") from pe
 
 
-def load_data_source(spark: SparkSession, ds: DataSource) -> tuple[DataFrame, bool]:
+def load_data_source(spark: SparkSession, ds: DataSource,
+                     releases: list | None = None) -> tuple[DataFrame, bool]:
     """Resolve one data source to a DataFrame.
 
     Returns (df, eager): ``eager`` means the source was buffered from a
     remote/inline payload or decoded on the driver and should be persisted
     on registration (the reference materializes these; session.rs:248-253).
+    ``releases`` (a one-partition session's) lets a lazy scan of a known
+    file be served from its shared materialization (``readers._load``).
     """
     scheme = urlparse(ds.location).scheme
     fmt = ds.format
@@ -240,13 +244,22 @@ def load_data_source(spark: SparkSession, ds: DataSource) -> tuple[DataFrame, bo
                 f"{fmt} reader unavailable ({why}) and {ds.location!r} is not locally readable"
             )
         eager = True
-    return read(spark, location, ds.options), eager
+    return read(spark, location, ds.options, None if eager else releases), eager
 
 
 def register(sess: ServerSession, ds: DataSource) -> DataFrame:
     """Load ``ds`` and make it the view ``ds.name`` of the ``ServerSession``.
     Eager/buffered sources are persisted — the Spark-safe analog of the
-    reference's in-memory concat_batches materialization."""
-    df, eager = load_data_source(sess.spark, ds)
+    reference's in-memory concat_batches materialization. A
+    ``single_partition`` session registers every source as one partition:
+    a known file from its shared materialization, which the session holds
+    until it closes, and anything else coalesced. (Merge and ``INSERT``
+    results over one-partition views are one partition already.)"""
+    releases: list | None = [] if sess.single_partition else None
+    df, eager = load_data_source(sess.spark, ds, releases)
+    if releases:
+        sess.releases += releases
+    elif releases is not None:
+        df = df.coalesce(1)
     sess.register(ds.name, df, cache=eager, source=ds)
     return df

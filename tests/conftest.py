@@ -22,6 +22,22 @@ def sf_dir() -> str:
 
 
 @pytest.fixture
+def shared_cache(monkeypatch):
+    """An empty schema cache (``sources.readers``) that stores files
+    written a moment ago; the blocks of its materializations are freed
+    after the test."""
+    from datafusion_server_spark.sources import readers
+
+    monkeypatch.setattr(readers, "RACY_WINDOW_NS", 0)
+    cache = type(readers._schemas)()
+    monkeypatch.setattr(readers, "_schemas", cache)
+    yield cache
+    for entry in cache.values():
+        if entry.plan is not None:
+            entry.plan.rdd().unpersist(True)
+
+
+@pytest.fixture
 def connector_reads(monkeypatch):
     """Every connector read the test makes: ``DataFrameReader.format`` of
     "avro" or "delta", a ``load`` of an ``s3a://`` path, and any

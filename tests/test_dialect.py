@@ -879,3 +879,25 @@ def test_offset_groups_backtick_qualified_join(spark):
     assert "GROUPS" not in out
     got = sorted(tuple(r) for r in sess.sql(out).collect())
     assert got == [(1, 30), (1, 30), (2, 60), (3, 70)]
+
+
+@pytest.mark.parametrize(
+    "frame",
+    [
+        "GROUPS /* c */ 1 PRECEDING",
+        "GROUPS -- c\n 1 PRECEDING",
+        "GROUPS /* c */ BETWEEN 1 PRECEDING AND /* d */ CURRENT ROW",
+    ],
+)
+def test_offset_groups_frame_split_by_a_comment(frame):
+    """A comment between a GROUPS frame's words separates them as
+    whitespace does: the frame is rewritten, not passed to Spark."""
+    out = transpile(f"SELECT SUM(v) OVER (ORDER BY x {frame}) AS w FROM t")
+    assert "GROUPS" not in out
+    assert "ORDER BY __grp_rank_1 RANGE BETWEEN 1 PRECEDING AND CURRENT ROW" in out
+
+
+def test_unbounded_groups_frame_split_by_a_comment():
+    out = transpile("SELECT SUM(v) OVER (ORDER BY x GROUPS /* a */ UNBOUNDED /* b */ PRECEDING) AS w FROM t")
+    assert "GROUPS" not in out
+    assert "RANGE UNBOUNDED /* b */ PRECEDING" in out

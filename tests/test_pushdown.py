@@ -217,3 +217,15 @@ def test_keyword_named_aggregates_block_limit_pushdown():
             f"SELECT {fn} FROM people@pg LIMIT 1", "people", "pg"
         )
         assert pd.limit is None, fn
+
+
+def test_comments_read_as_whitespace():
+    """A comment anywhere in the statement stops no clause: the filter and
+    the limit still push, and no comment reaches the remote SQL."""
+    for sql in (
+        "SELECT a FROM t@pg WHERE x = 1 LIMIT 2 -- last",
+        "SELECT a FROM t@pg WHERE x = 1 /* c */ LIMIT 2",
+        "SELECT a FROM t@pg /* c */ WHERE x = 1 LIMIT /* c */ 2",
+    ):
+        pd = extract_pushdown(sql, "t", "pg")
+        assert (pd.where, pd.limit) == ("x = 1", 2), sql

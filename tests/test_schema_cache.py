@@ -1,6 +1,9 @@
 """The process-wide schema cache in ``sources.readers``: a hit reads the
 same schema and rows as inference, starts no Spark job, and misses on any
-change to the files, the reader options or the session's SQL conf."""
+change to the files, the reader options or the session's SQL conf. In a
+one-partition session a hit reads the file's shared one-partition
+materialization, which is bounded in file bytes and outlives the session
+that built it."""
 
 from __future__ import annotations
 
@@ -16,7 +19,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from datafusion_server_spark.session import ServerSession
+from datafusion_server_spark.session import (
+    SMALL_INPUT_BYTES,
+    SMALL_PLAN_CONF,
+    ServerSession,
+    SessionManager,
+)
 from datafusion_server_spark.sources import readers, writers
 from datafusion_server_spark.sources.readers import ReadOptions
 from datafusion_server_spark.sources.registry import DataSource, register
@@ -310,3 +318,130 @@ def test_stage_bytes_concurrent_same_bytes(monkeypatch):
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
     assert len(dirs) == trials
+
+
+# -- shared one-partition reads --------------------------------------------------
+
+
+@pytest.fixture
+def small_sessions(spark):
+    """One-partition sessions (``SMALL_PLAN_CONF``), closed after the test."""
+    manager = SessionManager(spark)
+    yield lambda: manager.create(conf=SMALL_PLAN_CONF)
+    manager.close_all()
+
+
+def _stored_rdds(spark) -> set[int]:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _until(predicate, timeout: float = 30) -> bool:
+    deadline = time.monotonic() + timeout
+    while not predicate() and time.monotonic() < deadline:
+        time.sleep(0.02)
+    return predicate()
+
+
+@pytest.mark.parametrize("case", ["parquet", "csv_header", "ndjson"])
+def test_shared_read_starts_no_job(spark, tmp_path, shared_cache, small_sessions, case):
+    """The second sighting materializes lazily and the third serves the
+    materialization: neither registration starts a job, and each reads
+    the rows inference read."""
+    path = str(tmp_path / f"src_{case}")
+    fmt, options = WRITERS[case](spark, path)
+    ds = DataSource.from_json({"format": fmt, "name": "src", "location": path, "options": options})
+    cold = register(small_sessions(), ds)
+    for sighting in (2, 3):
+        sess = small_sessions()
+        hit, jobs = _jobs(spark, lambda: register(sess, ds))
+        assert jobs == 0, sighting
+        assert len(sess.releases) == 1
+        assert hit.schema == cold.schema
+        assert sorted(hit.collect()) == sorted(cold.collect())
+    assert [e.plan is not None for e in shared_cache.values()] == [True]
+
+
+def test_rewrite_in_place_misses_the_materialization(spark, tmp_path, shared_cache, small_sessions):
+    """Same size, same mtime, new bytes: the ctime changed, so the key did."""
+    path = tmp_path / "t.csv"
+    path.write_text("a\n1\n")
+    ds = DataSource.from_json({"format": "csv", "name": "t", "location": str(path)})
+    for _ in range(3):
+        assert register(small_sessions(), ds).collect()[0].a == 1
+    st = os.stat(path)
+    time.sleep(0.05)  # past the filesystem's timestamp tick
+    path.write_text("a\n2\n")
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_size == st.st_size
+    for _ in range(3):
+        assert register(small_sessions(), ds).collect()[0].a == 2
+
+
+def test_materialization_outlives_its_session(spark, tmp_path, shared_cache, small_sessions):
+    """The materialization is built in the reader session, so deleting the
+    session whose registration built it keeps the entry and its blocks."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(_facts(50), path)
+    ds = DataSource.from_json({"format": "parquet", "name": "t", "location": path})
+    want = sorted(register(small_sessions(), ds).collect())
+    manager = SessionManager(spark)
+    builder = manager.create(conf=SMALL_PLAN_CONF)
+    assert sorted(register(builder, ds).collect()) == want
+    (entry,) = shared_cache.values()
+    rdd = entry.plan.rdd().id()
+    assert entry.users == 1 and rdd in _stored_rdds(spark)
+    manager.delete(builder.session_id)
+    assert entry.plan is not None and entry.users == 0
+    assert rdd in _stored_rdds(spark)
+    hit, jobs = _jobs(spark, lambda: register(small_sessions(), ds))
+    assert jobs == 0
+    assert sorted(hit.collect()) == want
+
+
+def test_tenant_set_does_not_reach_the_shared_read(spark, tmp_path, shared_cache, small_sessions):
+    """A tenant that ``SET``s a read conf keys its own entry, which is never
+    materialized (its conf is not the reader session's); the other
+    tenant's shared read keeps ``binary``."""
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"ab", b"cd"], pa.binary())}), path)
+    ds = DataSource.from_json({"format": "parquet", "name": "bin", "location": path})
+    for sighting in range(3):
+        for binary_as_string, want in ((True, "string"), (False, "binary")):
+            sess = small_sessions()
+            if binary_as_string:
+                sess.spark.sql("SET spark.sql.parquet.binaryAsString=true")
+            assert dict(register(sess, ds).dtypes)["b"] == want
+            assert bool(sess.releases) == (not binary_as_string and sighting > 0)
+    assert sorted(e.plan is not None for e in shared_cache.values()) == [False, True]
+
+
+def test_eviction_frees_blocks(spark, tmp_path, shared_cache, small_sessions, monkeypatch):
+    """Materialized entries hold at most ``SHARED_READ_BYTES`` of files:
+    evicting the least recent idle one frees its blocks; an entry a live
+    session reads stays until that session closes."""
+    assert readers.SHARED_READ_BYTES == 8 * SMALL_INPUT_BYTES
+    paths = [str(tmp_path / f"t{i}.parquet") for i in range(2)]
+    for p in paths:
+        pq.write_table(_facts(50), p)
+    monkeypatch.setattr(readers, "SHARED_READ_BYTES", max(os.path.getsize(p) for p in paths))
+    sources = [DataSource.from_json({"format": "parquet", "name": "t", "location": p}) for p in paths]
+
+    def shared() -> dict[str, int]:
+        out = {e[0]: entry.plan.rdd().id() for key, entry in shared_cache.items()
+               if entry.plan is not None for e in key[3]}
+        assert sum(os.path.getsize(p) for p in out) <= readers.SHARED_READ_BYTES or any(
+            entry.users for entry in shared_cache.values())
+        return out
+
+    register(small_sessions(), sources[0])
+    holder = small_sessions()
+    register(holder, sources[0]).collect()  # materialize and fill the blocks
+    rdd0 = shared()[paths[0]]
+    assert rdd0 in _stored_rdds(spark)
+    register(small_sessions(), sources[1])
+    register(small_sessions(), sources[1]).collect()
+    assert set(shared()) == set(paths)  # over the bound: t0 is in use
+    holder.close()
+    assert set(shared()) == {paths[1]}
+    assert _until(lambda: rdd0 not in _stored_rdds(spark))
+    assert shared()[paths[1]] in _stored_rdds(spark)

@@ -8,7 +8,10 @@ of several files; everything else runs ``SERVING_CONF``. The same SQL
 thus runs under several plans, so the results must not depend on the
 plan:
 each one-shot shape and a handful of iterative registry rows run under
-four confs and must return the same rows.
+four confs and must return the same rows. From its second one-partition
+read on, a file the schema cache knows is read from a shared one-partition
+materialization (``sources.readers``); the shapes must read the same rows
+from it.
 
 A ``local[5]`` master cannot share this test JVM, so that variant stays
 a manual run of the registry in a separate process.
@@ -19,7 +22,9 @@ from __future__ import annotations
 import http.server
 import os
 import sqlite3
+import sys
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pyarrow as pa
@@ -284,6 +289,84 @@ def test_named_session_keeps_serving_conf(engine, sources, spark):
         engine.sessions.delete("small-plan-named")
 
 
+# -- shared one-partition reads --------------------------------------------------
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_known_files_read_from_shared_materialization(engine, sources, spark, shared_cache, shape):
+    """The first sighting of each file coalesces its scan; the second
+    materializes it and the third reads that materialization. Each
+    sighting returns the same rows as one job of one stage, and no
+    Coalesce sits over a materialized source."""
+    names = set(SHAPES[shape][0])
+    got = []
+    for sighting in range(3):
+        with engine._oneshot(_payload(sources, shape)) as df:
+            plan = _analyzed(df)
+            rows, jobs, stages = _collect_traced(spark, df, f"shared-{shape}-{sighting}")
+        got.append(rows)
+        assert (jobs, stages) == (1, 1), sighting
+        shared = [e for e in shared_cache.values() if e.plan is not None]
+        if sighting == 0:
+            assert "Repartition 1, false" in plan and not shared
+        else:
+            assert "Repartition" not in plan and "LogicalRDD" in plan
+            assert len(shared) == len(names)
+            assert all(e.users == 0 for e in shared)
+    assert got[0].num_rows > 0
+    assert got[1].equals(got[0]) and got[2].equals(got[0])
+
+
+@pytest.mark.parametrize("shape", ["self_join", "merge_row"])
+def test_one_file_under_two_names(engine, sources, spark, shared_cache, shape):
+    """Both views of one file read the same materialization: a self-join
+    and a row merge of the file with itself read its rows twice."""
+    payload = {
+        "dataSources": [dict(sources["f0"], name="s0"), dict(sources["f0"], name="s1")],
+        "query": _AGG,
+        "response": {"format": "arrow"},
+    }
+    if shape == "self_join":
+        payload["query"] = ("SELECT a.cat, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(b.qty) AS BIGINT) AS q "
+                            "FROM s0 a JOIN s1 b ON a.id = b.id WHERE a.qty >= 5 GROUP BY a.cat ORDER BY a.cat")
+    else:
+        payload["processor"] = {"mergeProcessors": [
+            {"direction": "row", "baseTable": "s0", "targetTables": ["s1"]}]}
+    got = []
+    for _ in range(3):
+        body, _ = engine.dataframe_query(payload)
+        got.append(pa.ipc.open_stream(body).read_all())
+    assert [e.plan is not None for e in shared_cache.values()] == [True]
+    assert got[1].equals(got[0]) and got[2].equals(got[0])
+    once = pq.read_table(sources["f0"]["location"]).to_pandas()
+    once = once[once.qty >= 5].groupby("cat")
+    twice = 2 if shape == "merge_row" else 1
+    assert got[0].column("n").to_pylist() == [twice * n for n in once.size().sort_index()]
+    assert got[0].column("q").to_pylist() == [twice * q for q in once.qty.sum().sort_index()]
+
+
+def test_concurrent_second_sightings(engine, sources, spark, shared_cache):
+    """More one-shots than cores racing to materialize the same files all
+    read the same rows, one materialization per file survives and no
+    read is left holding it (a lost update of ``users`` would)."""
+    payload = _payload(sources, "join3")
+    first, _ = engine.dataframe_query(payload)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            bodies = list(pool.map(lambda _: engine.dataframe_query(payload)[0], range(16), timeout=600))
+    finally:
+        sys.setswitchinterval(switch)
+    assert all(body == first for body in bodies)
+    assert len(shared_cache) == 3
+    assert all(e.plan is not None and e.users == 0 for e in shared_cache.values())
+
+
 # -- partition independence ------------------------------------------------------
 
 CONFS = {
@@ -299,13 +382,19 @@ def _sorted(table: pa.Table) -> pa.Table:
 
 
 @pytest.mark.parametrize("shape", sorted(SHAPES))
-def test_oneshot_shapes_partition_independent(engine, sources, monkeypatch, shape):
+def test_oneshot_shapes_partition_independent(engine, sources, monkeypatch, shared_cache, shape):
+    """Every conf infers with the same key, so the serving run stores each
+    schema, the first small-plan run materializes each file and the last
+    two read the materializations."""
     got = {}
-    for name, conf in CONFS.items():
+    runs = [*CONFS.items(), ("small_plan_hit", SMALL_PLAN_CONF), ("small_plan_hit2", SMALL_PLAN_CONF)]
+    for name, conf in runs:
         monkeypatch.setattr(api, "plan_conf", lambda _, conf=conf: conf)
         body, _ = engine.dataframe_query(_payload(sources, shape))
         got[name] = _sorted(pa.ipc.open_stream(body).read_all())
     assert got["serving"].num_rows > 0
+    assert len(shared_cache) == len(set(SHAPES[shape][0]))
+    assert all(entry.plan is not None for entry in shared_cache.values())
     for name, table in got.items():
         assert table.equals(got["serving"]), f"{shape} under {name} differs from serving"
 
